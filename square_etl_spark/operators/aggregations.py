@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 #: scale for deterministic decimal accumulation; 6 fractional digits
@@ -46,6 +47,35 @@ def distinct_keys(df: DataFrame, *cols: str) -> DataFrame:
     return df.select(*cols).distinct()
 
 
+def _orderable(dt: T.DataType) -> bool:
+    """Whether Spark can sort on a column of type ``dt``."""
+    if isinstance(dt, (T.MapType, T.VariantType, T.CalendarIntervalType,
+                       T.UserDefinedType)):
+        return False
+    if isinstance(dt, T.ArrayType):
+        return _orderable(dt.elementType)
+    if isinstance(dt, T.StructType):
+        return all(_orderable(f.dataType) for f in dt.fields)
+    return True
+
+
+def lww_order(
+    schema: T.StructType, key_cols: list[str], order_cols: list[str]
+) -> list[Column]:
+    """The within-key order of :func:`last_writer_wins`, newest first:
+    ``order_cols`` descending (NULLs last), then every remaining
+    sortable column descending.  Two rows tied on ``order_cols``
+    resolve by value, so the winner never depends on the rows' arrival
+    order or the partition count (the key itself cannot break a tie:
+    it is constant within its window partition)."""
+    rest = [
+        f.name for f in schema.fields
+        if f.name not in key_cols and f.name not in order_cols
+        and _orderable(f.dataType)
+    ]
+    return [F.col(c).desc_nulls_last() for c in [*order_cols, *rest]]
+
+
 def last_writer_wins(
     df: DataFrame, key_cols: list[str], order_cols: list[str]
 ) -> DataFrame:
@@ -53,11 +83,12 @@ def last_writer_wins(
 
     The reference gets this implicitly from replaying upserts in
     arrival order (ON CONFLICT DO UPDATE; src/etl-square-payments.ts:82-94).
-    Deterministic re-specification: max by (order_cols...) descending
-    with key tiebreak, via one window row_number (SURVEY.md §2.5 A3).
+    Deterministic re-specification: the first row per key in
+    :func:`lww_order`, via one window row_number (SURVEY.md §2.5 A3).
     """
-    order = [F.col(c).desc_nulls_last() for c in order_cols]
-    w = Window.partitionBy(*key_cols).orderBy(*order)
+    w = Window.partitionBy(*key_cols).orderBy(
+        *lww_order(df.schema, key_cols, order_cols)
+    )
     return (
         df.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)

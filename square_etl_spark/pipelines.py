@@ -65,9 +65,13 @@ def _conform(df: DataFrame, table: str, extra: tuple[str, ...] = ()) -> DataFram
     the declared layout — used only on the merge path, never in the
     checked query output."""
     schema, _ = WAREHOUSE_TABLES[table]
-    cols = [F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
-    cols += [F.col(c) for c in extra]
-    return df.select(*cols)
+    # one selectExpr parse instead of a py4j round trip (with a JSON
+    # type parse) per column cast
+    cols = [
+        f"CAST(`{f.name}` AS {f.dataType.simpleString()}) AS `{f.name}`"
+        for f in schema.fields
+    ]
+    return df.selectExpr(*cols, *[f"`{c}`" for c in extra])
 
 
 # ---------------------------------------------------------------------------

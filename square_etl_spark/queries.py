@@ -967,7 +967,8 @@ _register(
 
 
 def _merge_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K1: MERGE as anti-join + union — the engine's plain-parquet
+    """K1: MERGE as one keyed fold (target ∪ batch under one
+    row_number window, batch first) — the engine's plain-parquet
     upsert core, exercised as a pure dataframe transform: a batch of
     re-priced orders overwrites the overlapping slice of the target
     (reference ON CONFLICT DO UPDATE, src/etl-square-payments.ts:59-95)."""

@@ -74,6 +74,12 @@ ENGINE_CONF: dict[str, str] = {
     # Let Catalyst negotiate filters with Python Data Sources (the
     # paginated REST-style source in sources/paginated.py).
     "spark.sql.python.filterPushdown.enabled": "true",
+    # Generated-class cache (static: read once at JVM start).  One hourly
+    # sync tick generates ~174 distinct classes, so the default 100-entry
+    # LRU evicts each of them before the next tick needs it again and
+    # every tick recompiles all of them with Janino; at 1000 a repeat
+    # tick (and a repeat corpus-curation pass) compiles almost nothing.
+    "spark.sql.codegen.cache.maxEntries": "1000",
 }
 
 

@@ -11,18 +11,19 @@ re-scan safe (SURVEY.md §2.8 T2).
 
 Spark-first design (no Delta dependency — plain parquet):
 
-1. dedup the incoming batch to one row per key (last-writer-wins
-   within the batch, deterministic via order columns — the reference
-   gets this from arrival order, we re-specify it);
-2. read the current target, keep only target rows whose key does NOT
-   appear in the batch (left-anti join);
-3. union and atomically overwrite (write to a temp dir, then swap).
+1. union the current target (``src 0``) with the batch (``src 1``);
+2. rank each key's rows with ONE ``row_number`` window — batch first,
+   then newest by the order columns (the reference gets this from
+   arrival order, we re-specify it) — and keep the batch winner, or
+   the target row when the batch lacks the key;
+3. atomically overwrite (write to a temp dir, then swap).
 
-This is MERGE INTO re-expressed as anti-join + union; on a real
+This is MERGE INTO re-expressed as one keyed fold: the batch subtree
+is planned once and the write runs one exchange.  On a real
 deployment the same ``merge_dataframes`` logic backs a Delta/Iceberg
 ``MERGE INTO`` where the table format gives true atomic commits and,
 at 100 TB, partition-level rewrite instead of full-table overwrite
-(partition the target by tenant/date and restrict step 2-3 to the
+(partition the target by tenant/date and restrict steps 1-3 to the
 partitions present in the batch — the batch is a 24 h window, so only
 ~1 day of partitions rewrite).
 """
@@ -30,19 +31,22 @@ partitions present in the batch — the batch is a 24 h window, so only
 from __future__ import annotations
 
 import contextlib
+import glob
 import json
 import os
 import shutil
 import socket
-import tempfile
 import time
 import uuid
 import warnings
+from functools import reduce
+from operator import or_
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
-from square_etl_spark.operators.aggregations import last_writer_wins
+from square_etl_spark.operators.aggregations import last_writer_wins, lww_order
 
 
 class ConcurrentWriterError(RuntimeError):
@@ -297,8 +301,6 @@ def _recover_swap(target_path: str) -> None:
     Stale ``target.tmp-*`` staging dirs from crashed writes are swept
     here too — they are only ever referenced within a single call.
     """
-    import glob
-
     old = target_path + ".old"
     if os.path.exists(old):
         if os.path.exists(target_path):
@@ -348,6 +350,48 @@ def _write_counted(df: DataFrame, path: str, partition_col: str | None = None) -
     return obs.get["n"]
 
 
+def _fold(
+    target: DataFrame | None,
+    batch: DataFrame,
+    keys: list[str],
+    order_cols: list[str],
+    keep_batch: Column | None = None,
+    stamp: Column | None = None,
+) -> DataFrame:
+    """The keyed fold behind every merge here: ``target`` (src 0) ∪
+    ``batch`` (src 1) under ONE window over ``keys``, ordered src desc
+    then :func:`lww_order`.  Keeps the batch winner if ``keep_batch``
+    holds on it, and the target rows of keys the batch lacks.  A NULL
+    key column matches nothing: target NULL-key rows always survive.
+    ``stamp`` sets ``updated_at`` on winners whose key the target holds."""
+    src = F.col("__src")
+    u = batch.withColumn("__src", F.lit(1))
+    if target is not None:
+        u = target.withColumn("__src", F.lit(0)).unionByName(
+            u, allowMissingColumns=True
+        )
+    w = Window.partitionBy(*keys).orderBy(
+        src.desc(), *lww_order(batch.schema, keys, order_cols)
+    )
+    whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    out = u.select(
+        "*",
+        F.row_number().over(w).alias("__rn"),
+        F.min(src).over(whole).alias("__lo"),
+        F.max(src).over(whole).alias("__hi"),
+    )
+    key_null = reduce(or_, [F.col(k).isNull() for k in keys])
+    winner = (src == 1) & (F.col("__rn") == 1)
+    if keep_batch is not None:
+        winner = winner & keep_batch
+    out = out.filter(winner | ((src == 0) & ((F.col("__hi") == 0) | key_null)))
+    if stamp is not None:
+        hit = (src == 1) & (F.col("__lo") == 0) & ~key_null
+        stamped = F.when(hit, stamp).otherwise(F.col("updated_at"))
+        out = out.withColumn("updated_at", stamped)
+    return out.drop("__src", "__rn", "__lo", "__hi")
+
+
 def merge_dataframes(
     target: DataFrame | None,
     batch: DataFrame,
@@ -356,13 +400,13 @@ def merge_dataframes(
     stamp_updated_at: bool = False,
     batch_ts: str | None = None,
 ) -> DataFrame:
-    """Pure (DataFrame in → DataFrame out) MERGE: last-writer-wins.
-
-    ``order_cols`` decides which batch row wins within the batch
-    (descending; ties broken by the key itself).  If ``stamp_updated_at``
-    (K2), rows that replace an existing target row get
-    ``updated_at = current_timestamp()``, inserts keep theirs — matching
-    the reference's update-branch-only stamp
+    """Pure (DataFrame in → DataFrame out) MERGE as one keyed fold
+    (:func:`_fold`): the batch beats the target, and within the batch
+    the newest row by ``order_cols`` wins (descending, NULLs last, ties
+    broken by the remaining columns).  A NULL key matches nothing.  If
+    ``stamp_updated_at`` (K2), rows that replace an existing target row
+    get ``updated_at = current_timestamp()``, inserts keep theirs —
+    matching the reference's update-branch-only stamp
     (src/etl-square-inventory.ts:97).
 
     DELIBERATE DEVIATION from the reference (r15 advice, documented
@@ -372,13 +416,11 @@ def merge_dataframes(
     row conflicts with the first row's fresh insert and lands through
     the update branch — stamped.  That stamp is an artifact of
     row-at-a-time execution order, not of the update-vs-insert
-    contract.  This engine is set-oriented: the batch is deduped
-    FIRST (``last_writer_wins``), then classified insert/update
-    against the target, so a batch-internal duplicate whose key is
-    new keeps the winning row's own ``updated_at`` — the same posture
-    as standard SQL MERGE, which rejects duplicate source keys
-    outright instead of feeding them through the update branch one by
-    one.  Pinned by
+    contract.  This engine is set-oriented: the fold picks the batch
+    winner per key, then classifies it insert/update against the
+    target, so a batch-internal duplicate whose key is new keeps the
+    winning row's own ``updated_at`` — the posture of standard SQL
+    MERGE, which rejects duplicate source keys outright.  Pinned by
     ``test_k2_within_batch_duplicate_on_new_key_keeps_its_own_stamp``.
 
     ``batch_ts`` freezes the K2 stamp to an injected batch timestamp
@@ -386,36 +428,18 @@ def merge_dataframes(
     reference's ``CURRENT_TIMESTAMP`` is the *nondeterminism*, not the
     semantics — the semantics is "one stamp per batch, applied to the
     update branch only", and a batch-level literal models it exactly
-    (same posture as P9's injected tenant constants) while making the
-    whole K2 contract oracle-checkable value-for-value.  It is also the
-    better engineering at scale: with ``current_timestamp()`` Spark
-    evaluates one timestamp per QUERY (epoch pinned at plan time), but
-    a retried/backfilled batch would re-stamp differently per attempt;
-    an injected batch timestamp makes re-runs idempotent (r14 verdict
-    item 4).
+    while making the whole K2 contract oracle-checkable value-for-value.
+    It also makes a retried/backfilled batch re-stamp identically per
+    attempt, so re-runs are idempotent (r14 verdict item 4).
     """
-    deduped = last_writer_wins(batch, keys, order_cols)
-    if target is None:
-        return deduped
+    stamp = None
     if stamp_updated_at:
-        # mark batch rows that hit an existing key (semi join — no
-        # payload movement, just key presence)
-        hits = target.select(*keys).distinct()
         stamp = (
             F.to_timestamp(F.lit(batch_ts))
             if batch_ts is not None
             else F.current_timestamp()
         )
-        deduped = (
-            deduped.join(hits.withColumn("__hit", F.lit(True)), on=keys, how="left")
-            .withColumn(
-                "updated_at",
-                F.when(F.col("__hit"), stamp).otherwise(F.col("updated_at")),
-            )
-            .drop("__hit")
-        )
-    survivors = target.join(deduped.select(*keys).distinct(), on=keys, how="left_anti")
-    return survivors.unionByName(deduped)
+    return _fold(target, batch, keys, order_cols, stamp=stamp)
 
 
 def merge_upsert(
@@ -472,22 +496,17 @@ def cdc_merge_dataframes(
 ) -> DataFrame:
     """Pure CDC MERGE: fold a change log carrying ``op_col`` ∈
     {'I','U','D'} into the target — the full-CRUD upgrade of
-    :func:`merge_dataframes` (which can only upsert).  Within the
-    batch the LAST op per key wins (by ``order_cols`` descending, the
-    same deterministic fold as the upsert path); a key whose final op
-    is ``'D'`` is removed from the target and not re-inserted, any
-    other final op upserts the payload with ``op_col`` dropped.
-    Deleting an absent key is a no-op; a later batch can re-insert a
-    deleted key.  This is the semantics a Debezium-style change feed
-    needs; the reference's ON CONFLICT upsert
+    :func:`merge_dataframes` (which can only upsert), on the same
+    keyed fold (:func:`_fold`; target rows carry a NULL op).  Within
+    the batch the LAST op per key wins (by ``order_cols`` descending);
+    a key whose final op is ``'D'`` is removed from the target and not
+    re-inserted, any other final op upserts the payload with ``op_col``
+    dropped.  Deleting an absent key is a no-op; a later batch can
+    re-insert a deleted key.  This is the semantics a Debezium-style
+    change feed needs; the reference's ON CONFLICT upsert
     (src/etl-square-payments.ts:59-95) covers only the I/U half."""
-    last = last_writer_wins(batch, keys, order_cols)
-    upserts = last.filter(F.col(op_col) != "D").drop(op_col)
-    if target is None:
-        return upserts
-    touched = last.select(*keys).distinct()
-    survivors = target.join(touched, on=keys, how="left_anti")
-    return survivors.unionByName(upserts)
+    keep = F.col(op_col) != "D"
+    return _fold(target, batch, keys, order_cols, keep_batch=keep).drop(op_col)
 
 
 def cdc_merge(
@@ -593,10 +612,13 @@ def merge_upsert_partitioned(
     batch touches ~1 day of partition values, so the merge:
 
     1. collects the batch's DISTINCT partition values (driver-side,
-       bounded — it is the number of touched partitions, not rows);
+       bounded — it is the number of touched partitions, not rows).
+       It is the only action before the write: none means an empty
+       batch, which returns 0 without locking or creating the target
+       (K3);
     2. reads ONLY those partitions of the target (the ``isin`` filter
        is partition pruning — untouched partitions are never opened);
-    3. anti-join + union within the touched slice (same
+    3. folds the batch into the touched slice (same
        :func:`merge_dataframes` semantics as the full merge);
     4. writes the slice to a temp dir and swaps each touched partition
        directory individually.  Untouched partition directories are
@@ -615,77 +637,56 @@ def merge_upsert_partitioned(
     re-running converges.  A real deployment gets table-level commits
     from Delta/Iceberg; plain parquet cannot.
     """
-    import glob
-
-    if batch.isEmpty():
-        return 0
-    with _table_lock(target_path, timeout_s=lock_timeout_s):
-        return _merge_upsert_partitioned_locked(
-            spark, target_path, batch, keys, order_cols, partition_col,
-            stamp_updated_at, batch_ts,
-        )
-
-
-def _merge_upsert_partitioned_locked(
-    spark: SparkSession,
-    target_path: str,
-    batch: DataFrame,
-    keys: list[str],
-    order_cols: list[str],
-    partition_col: str,
-    stamp_updated_at: bool,
-    batch_ts: str | None = None,
-) -> int:
-    """Body of :func:`merge_upsert_partitioned` under the writer lock —
-    same serialization contract as :func:`merge_upsert` (the
-    per-partition swaps are reader-atomic; two unserialized writers
-    would still read one base and drop each other's rows)."""
-    import glob
-
-    # repair any partition-dir swap a previous crash interrupted, and
-    # sweep staging dirs a crashed run left beside the target
-    for old in glob.glob(os.path.join(target_path, "*.old")):
-        _recover_swap(old[: -len(".old")])
-    for stale in glob.glob(target_path + ".tmp-*"):
-        shutil.rmtree(stale, ignore_errors=True)
     touched = [r[0] for r in batch.select(partition_col).distinct().collect()]
-    if not os.path.exists(target_path):
-        batch_dedup = merge_dataframes(None, batch, keys, order_cols)
-        return _write_counted(batch_dedup, target_path, partition_col)
+    if not touched:
+        return 0
+    # the lock covers the whole read→merge→swap, as in merge_upsert: the
+    # per-partition swaps are reader-atomic, but two unserialized
+    # writers would still read one base and drop each other's rows
+    with _table_lock(target_path, timeout_s=lock_timeout_s):
+        # repair any partition-dir swap a previous crash interrupted, and
+        # sweep staging dirs a crashed run left beside the target
+        for old in glob.glob(os.path.join(target_path, "*.old")):
+            _recover_swap(old[: -len(".old")])
+        for stale in glob.glob(target_path + ".tmp-*"):
+            shutil.rmtree(stale, ignore_errors=True)
+        if not os.path.exists(target_path):
+            batch_dedup = merge_dataframes(None, batch, keys, order_cols)
+            return _write_counted(batch_dedup, target_path, partition_col)
 
-    # NULL partition values land in hive's __HIVE_DEFAULT_PARTITION__
-    # dir.  ``isin`` never matches NULL (three-valued logic), so without
-    # the explicit isNull branch the target's NULL-partition rows would
-    # be excluded from the merge slice while the swap below still
-    # replaced their directory — silently dropping them.
-    non_null = [t for t in touched if t is not None]
-    slice_cond = (
-        F.col(partition_col).isin(non_null) if non_null else F.lit(False)
-    )
-    if len(non_null) != len(touched):  # batch touches the NULL partition
-        slice_cond = slice_cond | F.col(partition_col).isNull()
-    target_slice = (
-        spark.read.schema(batch.schema)
-        .option("basePath", target_path)
-        .parquet(target_path)
-        .filter(slice_cond)
-    )
-    merged = merge_dataframes(
-        target_slice, batch, keys, order_cols, stamp_updated_at, batch_ts
-    )
-    tmp = _staging_dir(target_path)
-    n = _write_counted(merged, tmp, partition_col)
-    # swap ONLY the partition dirs the batch touched (tmp holds exactly
-    # the touched values by construction — merged == slice ∪ batch);
-    # tmp is a sibling of the target, so each per-partition publish is
-    # the same rename-only _swap_into protocol (atomic per partition,
-    # crash-recoverable via the *.old sweep above)
-    for entry in os.listdir(tmp):
-        if not entry.startswith(f"{partition_col}="):
-            continue
-        _swap_into(os.path.join(tmp, entry), os.path.join(target_path, entry))
-    shutil.rmtree(tmp, ignore_errors=True)
-    return n
+        # NULL partition values land in hive's __HIVE_DEFAULT_PARTITION__
+        # dir.  ``isin`` never matches NULL (three-valued logic), so without
+        # the explicit isNull branch the target's NULL-partition rows would
+        # be excluded from the merge slice while the swap below still
+        # replaced their directory — silently dropping them.
+        non_null = [t for t in touched if t is not None]
+        slice_cond = (
+            F.col(partition_col).isin(non_null) if non_null else F.lit(False)
+        )
+        if len(non_null) != len(touched):  # batch touches the NULL partition
+            slice_cond = slice_cond | F.col(partition_col).isNull()
+        target_slice = (
+            spark.read.schema(batch.schema)
+            .option("basePath", target_path)
+            .parquet(target_path)
+            .filter(slice_cond)
+        )
+        merged = merge_dataframes(
+            target_slice, batch, keys, order_cols, stamp_updated_at, batch_ts
+        )
+        tmp = _staging_dir(target_path)
+        n = _write_counted(merged, tmp, partition_col)
+        # swap ONLY the partition dirs the batch touched (tmp holds exactly
+        # the touched values by construction — merged == slice ∪ batch);
+        # tmp is a sibling of the target, so each per-partition publish is
+        # the same rename-only _swap_into protocol (atomic per partition,
+        # crash-recoverable via the *.old sweep above)
+        for entry in os.listdir(tmp):
+            if not entry.startswith(f"{partition_col}="):
+                continue
+            _swap_into(os.path.join(tmp, entry), os.path.join(target_path, entry))
+        shutil.rmtree(tmp, ignore_errors=True)
+        return n
 
 
 def scd2_merge(
@@ -743,11 +744,6 @@ def scd2_merge(
     filter-three-ways-and-union shape ran the same join up to 3×
     (pinned in tests/test_merge.py::test_scd2_single_join_in_plan).
     """
-    from functools import reduce
-    from operator import or_
-
-    from square_etl_spark.operators.aggregations import last_writer_wins
-
     b = last_writer_wins(batch, keys, [order_col]).select(
         *keys,
         *[F.col(c).alias(f"__n_{c}") for c in change_cols],

@@ -1098,3 +1098,164 @@ def test_k2_within_batch_duplicate_on_new_key_keeps_its_own_stamp(
     # existing key: winner is stamped with the frozen batch timestamp
     assert got["old"].v == 4
     assert got["old"].updated_at == datetime.datetime(2024, 6, 30, 12, 0)
+
+
+# ---------------------------------------------------------------------------
+# NULL keys, tie-breaks, plan shape and action count of the keyed fold
+# ---------------------------------------------------------------------------
+
+
+def test_merge_null_keys_match_nothing(spark):
+    """A NULL key column equals nothing, as in the equi-join ON CONFLICT
+    the reference runs: a target row with a NULL key survives a batch
+    holding the same NULL key, batch NULL-key rows still dedup among
+    themselves (window partitions group NULLs), and the K2 stamp never
+    fires on a NULL key.  Composite keys follow the same rule when any
+    one key column is NULL."""
+    stamp = "2030-01-01 00:00:00"
+    schema = "k string, j long, v long, updated_at string"
+    target = spark.createDataFrame(
+        [(None, 1, 1, "2024-01-01 00:00:00"),
+         ("a", 1, 2, "2024-01-01 00:00:00"),
+         ("b", None, 3, "2024-01-01 00:00:00")],
+        schema,
+    ).selectExpr("k", "j", "v", "cast(updated_at as timestamp) updated_at")
+    batch = spark.createDataFrame(
+        [(None, 1, 10, "2024-01-02 00:00:00"),
+         (None, 1, 11, "2024-01-03 00:00:00"),
+         ("a", 1, 20, "2024-01-02 00:00:00"),
+         ("b", None, 30, "2024-01-02 00:00:00")],
+        schema,
+    ).selectExpr("k", "j", "v", "cast(updated_at as timestamp) updated_at")
+    out = merge_dataframes(
+        target, batch, ["k", "j"], ["updated_at"],
+        stamp_updated_at=True, batch_ts=stamp,
+    )
+    got = sorted(
+        ((r.k, r.j, r.v, str(r.updated_at)) for r in out.collect()),
+        key=lambda t: t[2],
+    )
+    assert got == [
+        (None, 1, 1, "2024-01-01 00:00:00"),  # target NULL key survives
+        ("b", None, 3, "2024-01-01 00:00:00"),
+        (None, 1, 11, "2024-01-03 00:00:00"),  # batch NULLs dedup, unstamped
+        ("a", 1, 20, stamp),  # key hit: stamped
+        ("b", None, 30, "2024-01-02 00:00:00"),
+    ]
+
+
+def test_tied_order_cols_resolve_by_value_not_arrival(spark):
+    """Two batch rows tied on ``order_cols`` must resolve the same way
+    whatever their input order and however many partitions the window
+    shuffles into (ROADMAP aim 3): ties break on the remaining columns,
+    largest first — the key cannot break them, it is constant within
+    its window partition."""
+    from square_etl_spark.operators.aggregations import last_writer_wins
+
+    tied = [("a", 1, "x", "2024-01-02 00:00:00"),
+            ("a", 2, "w", "2024-01-02 00:00:00"),
+            ("b", 5, "y", "2024-01-02 00:00:00")]
+    schema = "k string, v long, s string, updated_at string"
+    target = spark.createDataFrame(
+        [("a", 0, "t", "2024-01-01 00:00:00")], schema
+    ).selectExpr("k", "v", "s", "cast(updated_at as timestamp) updated_at")
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    seen = set()
+    try:
+        for rows in (tied, tied[::-1]):
+            for parts in (1, 7):
+                spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+                batch = (
+                    spark.createDataFrame(rows, schema)
+                    .selectExpr("k", "v", "s", "cast(updated_at as timestamp) updated_at")
+                    .repartition(parts)
+                )
+                for out in (
+                    last_writer_wins(batch, ["k"], ["updated_at"]),
+                    merge_dataframes(None, batch, ["k"], ["updated_at"]),
+                    merge_dataframes(target, batch, ["k"], ["updated_at"]),
+                ):
+                    seen.add(frozenset((r.k, r.v, r.s) for r in out.collect()))
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+    assert seen == {frozenset({("a", 2, "w"), ("b", 5, "y")})}
+
+
+def _parquet(spark, path, rows):
+    spark.createDataFrame(
+        rows, "k string, v long, updated_at string, day string"
+    ).selectExpr(
+        "k", "v", "cast(updated_at as timestamp) updated_at", "day"
+    ).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_merge_plan_is_one_window_over_a_union(spark, tmp_path):
+    """The merge plans as one keyed fold: a single Window over a Union
+    of target and batch — no anti join — so the batch source is
+    scanned once and the write runs one exchange."""
+    target = _parquet(spark, str(tmp_path / "tgt"), [
+        ("a", 1, "2024-01-01 00:00:00", "d1"),
+    ])
+    batch_path = str(tmp_path / "batch")
+    batch = _parquet(spark, batch_path, [
+        ("a", 2, "2024-01-02 00:00:00", "d1"),
+        ("b", 3, "2024-01-02 00:00:00", "d1"),
+    ])
+    merged = merge_dataframes(
+        target, batch, ["k"], ["updated_at"],
+        stamp_updated_at=True, batch_ts="2030-01-01 00:00:00",
+    )
+    lines = merged._jdf.queryExecution().executedPlan().toString().splitlines()
+    windows = [i for i, l in enumerate(lines) if "Window [" in l]
+    unions = [i for i, l in enumerate(lines) if l.strip("+-: ").startswith("Union")]
+    assert len(windows) == 1 and len(unions) == 1 and windows[0] < unions[0]
+    assert not any("LeftAnti" in l or "Join" in l for l in lines)
+    assert sum("Exchange" in l for l in lines) == 1
+    assert sum("FileScan" in l and batch_path + "]" in l for l in lines) == 1
+    assert {(r.k, r.v) for r in merged.collect()} == {("a", 2), ("b", 3)}
+
+
+def test_partitioned_merge_runs_one_action_before_the_write(
+    spark, tmp_path, monkeypatch
+):
+    """A non-empty partitioned merge runs exactly one action before its
+    write: the touched-partition collect, which also decides K3 (an
+    empty batch touches nothing).  Jobs are counted per job group with
+    the statusTracker and compared against that one collect alone."""
+    import square_etl_spark.sinks.merge as M
+
+    sc = spark.sparkContext
+    target = str(tmp_path / "tbl")
+    M.merge_upsert_partitioned(
+        spark, target,
+        _pbatch(spark, [("a", 1, "2024-01-01 00:00:00", "2024-01-01")]),
+        ["k"], ["updated_at"], "day",
+    )
+    batch = _pbatch(spark, [
+        ("a", 2, "2024-01-02 00:00:00", "2024-01-01"),
+        ("b", 3, "2024-01-02 00:00:00", "2024-01-02"),
+    ])
+    write = M._write_counted
+
+    def tagged_write(*args, **kwargs):
+        sc.setJobGroup("merge-write", "merge write")
+        return write(*args, **kwargs)
+
+    monkeypatch.setattr(M, "_write_counted", tagged_write)
+    try:
+        sc.setJobGroup("one-collect", "touched-partition collect alone")
+        batch.select("day").distinct().collect()
+        sc.setJobGroup("before-write", "merge up to its write")
+        n = M.merge_upsert_partitioned(
+            spark, target, batch, ["k"], ["updated_at"], "day"
+        )
+        jobs = {
+            g: len(sc.statusTracker().getJobIdsForGroup(g))
+            for g in ("one-collect", "before-write", "merge-write")
+        }
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert n == 2
+    assert jobs["before-write"] == jobs["one-collect"] >= 1, jobs
+    assert jobs["merge-write"] >= 1, jobs

@@ -287,3 +287,40 @@ def test_attrition_funnel_reconciles_with_clean_pipeline(spark, sf_dir):
     kept_docs = sum(r.n_docs for r in clean.collect())
     assert funnel["kept"][0] == kept_docs
     assert sum(n for n, _ in funnel.values()) == d.count()
+
+
+def test_repeat_sync_tick_hits_the_codegen_cache(spark, sf_dir, tmp_path):
+    """An hourly tick (all six pipelines merged through run_pipeline)
+    generates more distinct classes than Spark's default 100-entry
+    codegen cache holds, so without ``session.ENGINE_CONF``'s larger
+    ``spark.sql.codegen.cache.maxEntries`` an identical replay tick
+    recompiles everything.  The first tick seeds the warehouse, the
+    second fills the cache, and the third — identical to the second —
+    may compile only a handful of classes (Janino compile count from
+    ``CodegenMetrics``)."""
+
+    def tick() -> None:
+        pay = P.payments_source(spark, sf_dir)
+        built = {
+            "pos_payments": P.payments_pipeline(pay, with_part_date=True),
+            "pos_order_items": P.order_items_pipeline(
+                pay, P.order_items_source(spark, sf_dir), with_part_date=True
+            ),
+            "pos_inventory": P.inventory_pipeline(P.inventory_source(spark, sf_dir)),
+            "pos_catalog": P.catalog_pipeline(*P.catalog_source(spark, sf_dir)),
+            "pos_categories": P.categories_pipeline(P.categories_source(spark, sf_dir)),
+            "pos_locations": P.locations_pipeline(P.locations_source(spark, sf_dir)),
+        }
+        for table, (rows, _) in built.items():
+            P.run_pipeline(spark, table, rows, os.path.join(tmp_path, table))
+
+    compiles = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME()
+    )
+    tick()
+    tick()
+    before = compiles.getCount()
+    tick()
+    n = compiles.getCount() - before
+    assert n <= 5, f"a repeat tick compiled {n} classes"
