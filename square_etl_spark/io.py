@@ -177,33 +177,31 @@ def compact_table(
     The operational pair of the merge sink: every incremental run
     appends/rewrites small files, and at warehouse scale scan cost is
     driven by file count (task scheduling + footer reads), so periodic
-    compaction is part of the table's lifecycle.  Atomic via the same
-    SIBLING-staging + rename swap as ``sinks.merge_upsert``
-    (r11 fix: the previous ``rmtree + shutil.move`` from
-    ``tempfile.gettempdir()`` had the exact crash window
-    ``_swap_into`` was built to close — table deleted, replacement
-    not yet in place — and a /tmp on another filesystem silently
-    degraded the move to a non-atomic copy).  Returns the file count
-    after compaction.
+    compaction is part of the table's lifecycle.  It publishes through
+    the merge sink's replace protocol (``sinks.merge._replace``): the
+    writer lock, so a compaction never reads a base a concurrent merge
+    is about to swap over, and the sibling-staging + rename swap, so
+    a crash leaves the old or the new table, never neither.  Returns
+    the file count after compaction.
     """
-    from square_etl_spark.sinks.merge import _recover_swap, _staging_dir, _swap_into
+    from square_etl_spark.sinks.merge import _replace
 
-    _recover_swap(path)
-    df = spark.read.parquet(path)
-    tmp = _staging_dir(path)
-    writer = df.repartition(target_files, *(partition_cols or [])).write.mode(
-        "overwrite"
-    )
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(tmp)
-    _swap_into(tmp, path)
-    return sum(
-        1
-        for root, _, files in os.walk(path)
-        for f in files
-        if f.endswith(".parquet")
-    )
+    with _replace(path) as tmp:
+        writer = (
+            spark.read.parquet(path)
+            .repartition(target_files, *(partition_cols or []))
+            .write.mode("overwrite")
+        )
+        if partition_cols:
+            writer = writer.partitionBy(*partition_cols)
+        writer.parquet(tmp)
+        n_files = sum(
+            1
+            for root, _, files in os.walk(tmp)
+            for f in files
+            if f.endswith(".parquet")
+        )
+    return n_files
 
 
 def json_ingest_quarantine(

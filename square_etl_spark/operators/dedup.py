@@ -887,7 +887,8 @@ def semantic_block_assign(
     fit_sample_mod: int | None = None,
 ) -> DataFrame:
     """:func:`semantic_dedup`'s fit+assign stage, exposed so
-    diagnostics (tools/scaling_r09c.py's pair-space probes) measure
+    diagnostics (the pair-space probes in SCALING.md "Round-9 SemDeDup
+    blocking sweep") measure
     the EXACT deployed blocking rather than a parallel copy that can
     drift.  Returns the ``(vid, c)`` cluster assignment: exact Lloyd
     on everything when ``fit_sample_mod`` is None, else fit on the
@@ -920,14 +921,14 @@ def semantic_block_assign(
     # ^ the global window collapses the sample to ONE partition;
     # without the repartition the fit's whole map side (explode +
     # decimal partial aggs) runs single-threaded (measured 4.5x on
-    # the k=80 fit in tools/scaling_r09c.py).  The partition COUNT
+    # the k=80 fit, SCALING.md "Round-9 SemDeDup blocking sweep").  The partition COUNT
     # is explicit because AQE coalesces a column-only repartition
     # of a small sample right back to one partition (measured).
     _, cent = kmeans_fixed(refit, "__fid", "__fv", k=k, iters=iters)
     # localCheckpoint: the pair stage self-joins on the assignment,
     # so an unchecked mapInPandas lineage would re-run the Python
     # workers once per branch (measured 3.9x at 40k vectors in
-    # tools/scaling_r09c.py) — same discipline as the exact path,
+    # SCALING.md "Round-9 SemDeDup blocking sweep") — same discipline as the exact path,
     # whose assignment kmeans_fixed checkpoints internally
     return (
         kmeans_assign_arrow(emb, cent, id_col, vec_col)
@@ -952,7 +953,8 @@ def semantic_fit_centroids(
     the one super-linear stage left in the semantic-dedup path, and
     in production it is paid ONCE per model/corpus epoch, not per
     batch — per-batch cost collapses to one broadcast-join assignment
-    pass (measured flat, tools/scaling_r10.py).
+    pass (measured flat, SCALING.md "Round-10 sweeps: IVF-PQ probe
+    cost + amortized SemDeDup ingest").
 
     ``update_rounds`` = number of Lloyd UPDATE steps (fit with n-1
     updates + one stored-centroid assignment ≡ ``kmeans_fixed(
@@ -1029,8 +1031,8 @@ def incremental_semantic_dedup(
     the decimal-exact assignment for the numpy fast path
     (clustering.kmeans_assign_arrow) — at scaled k (∝ corpus) the
     exact long-form join is batch·d·k rows and dominates; the Arrow
-    path keeps per-batch cost flat (tools/scaling_r10.py measures
-    it).  The exact path stays the oracle-checked default."""
+    path keeps per-batch cost flat (measured in SCALING.md "Round-10
+    sweeps: IVF-PQ probe cost + amortized SemDeDup ingest").  The exact path stays the oracle-checked default."""
     from square_etl_spark.operators.clustering import (
         kmeans_assign_arrow,
         kmeans_assign_exact,
@@ -1125,7 +1127,7 @@ def semantic_dedup(
 
     The exact long-form assignment join is itself O(N·d·k) rows, so
     k ∝ N makes the ASSIGNMENT quadratic (measured:
-    tools/scaling_r09c.py) — at large k pass ``fit_sample_mod=m`` to
+    SCALING.md "Round-9 SemDeDup blocking sweep") — at large k pass ``fit_sample_mod=m`` to
     fit the centroids on the deterministic 1/m subset
     (xxhash64(id) % m == 0, re-densified ids for the vid<k seed rule)
     and assign EVERY vector with the Arrow numpy fast path
@@ -1137,8 +1139,8 @@ def semantic_dedup(
     At production dims, scale ``fit_sample_mod`` to pin the fit
     sample SIZE (≈ n/5000), not the fraction: a fixed-fraction sample
     with k ∝ N makes the FIT itself quadratic ((N/m)·d·k rows), which
-    at 256-d dominates the whole path — measured in
-    tools/scaling_r09c.py (113.8 s vs 50.9 s at 160 k vectors).
+    at 256-d dominates the whole path — measured in SCALING.md
+    "Round-9 SemDeDup at 256-d" (113.8 s vs 50.9 s at 160 k vectors).
     """
     from square_etl_spark.operators.similarity import dot, normalize
 
@@ -1398,26 +1400,32 @@ def _cc_star(
     )
 
 
+def _simhash_tokens(col: str) -> F.Column:
+    """SimHash tokenization, the one definition both the column spec
+    and the relation path use: whitespace split of the trimmed text,
+    empty tokens dropped."""
+    return F.filter(F.split(F.trim(F.col(col)), r"\s+"), lambda t: t != F.lit(""))
+
+
+def _token_hash64(t: F.Column) -> F.Column:
+    """Engine-portable 64-bit token hash (r05: replaced Spark's seeded
+    xxhash64): the first 16 hex chars of md5, assembled from two
+    32-bit halves with shiftleft/bitwiseOR — bit ops don't ANSI-
+    overflow, bit 63 just lands in the sign.  Any engine with md5
+    reproduces it; the `dedup_simhash` DuckDB oracle recomputes the
+    whole pipeline from these bits."""
+    hi = F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("long")
+    lo = F.conv(F.substring(F.md5(t), 9, 8), 16, 10).cast("long")
+    return F.shiftleft(hi, 32).bitwiseOR(lo)
+
+
 def simhash_word_hashes(col: str = "text") -> F.Column:
     """Per-token 64-bit portable hashes — the materialization producer
     for :func:`simhash64_from_hashes` (the r12 HOF-capture rule: a
     lambda may capture attributes and literals, never an expensive
-    subtree — alias THIS as a real column at the call site).
-
-    Engine-portable 64-bit token hash (r05: replaced Spark's seeded
-    xxhash64): the first 16 hex chars of md5, assembled from two
-    32-bit halves with shiftleft/bitwiseOR — bit ops don't ANSI-
-    overflow, bit 63 just lands in the sign.  Any engine with md5
-    reproduces the signature; the `dedup_simhash` DuckDB oracle
-    recomputes the whole pipeline from these bits."""
-    tokens = F.filter(F.split(F.trim(F.col(col)), r"\s+"), lambda t: t != F.lit(""))
-
-    def _h64(t: F.Column) -> F.Column:
-        hi = F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("long")
-        lo = F.conv(F.substring(F.md5(t), 9, 8), 16, 10).cast("long")
-        return F.shiftleft(hi, 32).bitwiseOR(lo)
-
-    return F.transform(tokens, _h64)
+    subtree — alias THIS as a real column at the call site): each
+    token of :func:`_simhash_tokens` hashed by :func:`_token_hash64`."""
+    return F.transform(_simhash_tokens(col), _token_hash64)
 
 
 def simhash64_from_hashes(hashes: F.Column | str) -> F.Column:
@@ -1508,16 +1516,10 @@ def simhash_signatures(
     the filtered split), same per-token arithmetic, and a token-less
     doc's NULL token row hashes to NULL exactly like the old NULL
     hash row (pinned by the relation≡column-spec test)."""
-    words = F.filter(
-        F.split(F.trim(F.col(content_col)), r"\s+"),
-        lambda t: t != F.lit(""),
+    raw = df.select(
+        F.col(id_col), F.explode_outer(_simhash_tokens(content_col)).alias("__w")
     )
-    raw = df.select(F.col(id_col), F.explode_outer(words).alias("__w"))
-    hi = F.conv(F.substring(F.md5(F.col("__w")), 1, 8), 16, 10).cast("long")
-    lo = F.conv(F.substring(F.md5(F.col("__w")), 9, 8), 16, 10).cast("long")
-    toks = raw.select(
-        F.col(id_col), F.shiftleft(hi, 32).bitwiseOR(lo).alias("__h")
-    )
+    toks = raw.select(F.col(id_col), _token_hash64(F.col("__w")).alias("__h"))
     votes = toks.groupBy(id_col).agg(
         *[
             F.sum(
@@ -2801,8 +2803,8 @@ def substring_dedup(
     every occurrence of a hash to one reducer, so a viral boilerplate
     window — 10⁹ copies of one banner — was a single-task hot key;
     partial aggregation collapses it to one row per map partition
-    before the shuffle, pinned in tools/scaling_r11.py with a planted
-    hot window), one anti join on the uniformly-distributed
+    before the shuffle, measured in SCALING.md "Round-11 sweeps",
+    Finding 1, with a planted hot window), one anti join on the uniformly-distributed
     ``(id, pos)`` doc key to recover the duplicate occurrences, then
     kill-explode bounded by |duplicate windows|·window —
     proportional to the duplicated volume, not the corpus.  The

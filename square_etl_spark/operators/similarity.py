@@ -856,7 +856,8 @@ def topk_from_pq(
     the final key-sized rescore.  Returns
     (query_id, vec_id, adc_sim, cosine_sim, rank ≤ k).
 
-    DEPLOYMENT REQUIREMENT (measured, tools/scaling_r10.py): the
+    DEPLOYMENT REQUIREMENT (measured, SCALING.md "Round-10 sweeps:
+    IVF-PQ probe cost + amortized SemDeDup ingest"): the
     probe win over the int8 full scan only materializes when
     ``codes``+``rnorm`` are STORED PARTITIONED BY CELL, so the
     candidate join reads only the probed partitions — unpartitioned,
@@ -989,7 +990,8 @@ def cosine_topk_ivfpq(
     Convenience one-shot: :func:`ivfpq_index` build +
     :func:`topk_from_pq` probe in one call.  The scan win
     materializes when the index is built ONCE and re-probed —
-    tools/scaling_r10.py times the probe-only path against the
+    SCALING.md "Round-10 sweeps: IVF-PQ probe cost + amortized
+    SemDeDup ingest" times the probe-only path against the
     int8/codes rungs.
     """
     index = ivfpq_index(
@@ -1010,8 +1012,8 @@ def write_ivfpq_index(
     id_col: str = "vec_id",
 ) -> None:
     """Persist an :func:`ivfpq_index` CELL-PARTITIONED — the storage
-    layout the probe win requires (measured, tools/scaling_r10.py:
-    unpartitioned, the full m-rows-per-vector codes relation moves
+    layout the probe win requires (measured, SCALING.md "Round-10
+    finding 1 CLOSED: cell-partitioned IVF-PQ storage": unpartitioned, the full m-rows-per-vector codes relation moves
     through the candidate join's shuffle and the flat int8 scan wins;
     partitioned by cell, a probe READS only the probed cells'
     directories).  Layout: ``codes/`` = one relation

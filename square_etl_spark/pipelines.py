@@ -7,7 +7,9 @@ module re-expresses each composition Spark-first over the SAME operator
 library the rest of the engine uses (projections/joins/quality/merge):
 one declarative plan per pipeline, quarantine instead of console.warn,
 and :func:`square_etl_spark.sinks.merge.merge_upsert` as the
-transactional tail.
+transactional tail — the merge sink's one replace protocol (writer
+lock, crash recovery, staging dir, rename swap) stands in for the
+reference's BEGIN/COMMIT.
 
 Source adapters: the driver fixtures carry no POS data, so each
 pipeline has a deterministic adapter that reshapes a fixture table into
@@ -19,8 +21,8 @@ stage downstream is unchanged.
 
 Scale notes: every pipeline is map + (at most) one broadcast join +
 one merge — no unbounded shuffles.  The merge is the only wide stage,
-and at 100 TB it runs partition-restricted
-(:func:`square_etl_spark.sinks.merge.merge_upsert_partitioned`).
+and for the fact tables it runs partition-restricted
+(``merge_upsert(..., partition_col=FACT_PARTITION[table])``).
 
 Reference parity map:
   payments    — src/etl-square-payments.ts:27-47 (map), 130-138 (main)
@@ -47,7 +49,7 @@ from square_etl_spark.operators.projections import (
 )
 from square_etl_spark.operators.quality import quarantine_split
 from square_etl_spark.schemas import WAREHOUSE_TABLES
-from square_etl_spark.sinks.merge import merge_upsert, merge_upsert_partitioned
+from square_etl_spark.sinks.merge import merge_upsert
 
 #: the reference's env-driven tenancy constants with their defaults
 #: (src/etl-square-payments.ts:8-11).
@@ -119,7 +121,7 @@ def payments_pipeline(
     ``with_part_date`` appends ``part_date = to_date(created_at)`` for
     the partition-restricted merge path (run_pipeline): payment
     creation date is immutable per natural key, the invariant
-    merge_upsert_partitioned requires."""
+    the partition-restricted merge_upsert requires."""
     money = coalesce_first("total_amount", "amount_amount")
     mapped = source.withColumn("amount", money)
     good, rejects = quarantine_split(
@@ -204,7 +206,7 @@ def order_items_pipeline(
     for the partition-restricted merge path: order date is immutable
     per (order_id, line_item_uid) natural key — order_id is IN the
     key, and the first-wins payment choice is deterministic — so the
-    merge_upsert_partitioned invariant holds.
+    partition-restricted merge_upsert invariant holds.
     """
     o2p_cols = ["order_id", "payment_id"] + (
         ["created_at"] if with_part_date else []
@@ -489,34 +491,27 @@ def run_pipeline(
     table: str,
     rows: DataFrame,
     target_path: str,
-    partition_col: str | None = None,
 ) -> int:
     """Merge pipeline output into its warehouse table (the reference's
     BEGIN → ON CONFLICT upsert loop → COMMIT, src/etl-square-payments.ts
     :49-128).  Key + last-writer order come from the declared schema
-    registry; returns rows in the target after the merge.
+    registry; returns rows written by the merge.
 
-    Routing: fact tables (FACT_PARTITION) go through the
-    partition-restricted merge automatically when their pipeline was
-    built ``with_part_date=True`` — pass ``partition_col`` explicitly
-    to override, or build dims without one to get the full merge."""
+    Routing: a fact table (FACT_PARTITION) merges partition-restricted
+    when its pipeline was built ``with_part_date=True`` (or, for
+    inventory, always — its partition column is part of the key); a
+    dimension, or a fact built without its partition column, gets the
+    full merge."""
     _, key = WAREHOUSE_TABLES[table]
     order_cols = [c for c in ("updated_at", "calculated_at") if c in rows.columns]
-    if partition_col is None:
-        default_part = FACT_PARTITION.get(table)
-        if default_part is not None and default_part in rows.columns:
-            partition_col = default_part
-    if partition_col is not None:
-        return merge_upsert_partitioned(
-            spark,
-            target_path,
-            rows,
-            keys=key,
-            order_cols=order_cols or key,
-            partition_col=partition_col,
-        )
+    part = FACT_PARTITION.get(table)
     return merge_upsert(
-        spark, target_path, rows, keys=key, order_cols=order_cols or key
+        spark,
+        target_path,
+        rows,
+        keys=key,
+        order_cols=order_cols or key,
+        partition_col=part if part in rows.columns else None,
     )
 
 

@@ -1143,7 +1143,7 @@ def _merge_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     import uuid
 
-    from square_etl_spark.sinks.merge import merge_upsert_partitioned
+    from square_etl_spark.sinks.merge import merge_upsert
 
     o = load_table(spark, sf_dir, "orders")
     path = os.path.join(tempfile.gettempdir(), f"k1part-{uuid.uuid4().hex}")
@@ -1159,8 +1159,8 @@ def _merge_part(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("U").alias("o_orderstatus"),
         F.year("o_orderdate").cast("int").alias("o_year"),
     )
-    merge_upsert_partitioned(
-        spark, path, batch, ["o_orderkey"], ["o_orderkey"], "o_year"
+    merge_upsert(
+        spark, path, batch, ["o_orderkey"], ["o_orderkey"], partition_col="o_year"
     )
     return (
         spark.read.schema(

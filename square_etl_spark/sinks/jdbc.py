@@ -47,6 +47,8 @@ import uuid
 
 from pyspark.sql import DataFrame
 
+from square_etl_spark.operators.aggregations import last_writer_wins
+
 _SEGMENT_RE = re.compile(r"^[a-z_][a-z0-9_]*$")
 
 
@@ -146,34 +148,6 @@ def merge_statement(
     )
 
 
-def dedupe_batch(df: DataFrame, key_cols: list[str], order_col: str | None = None) -> DataFrame:
-    """ON CONFLICT raises ``cardinality violation`` if one statement
-    carries two rows for the same key, so the batch must be key-unique
-    before staging.  Last-writer-wins per key (mirrors the reference,
-    where the later loop iteration wins: etl-square-payments.ts:97-99,
-    and merge.py's contract).  ``order_col`` picks the winner
-    (e.g. updated_at); without it, an arbitrary-but-deterministic max
-    over all columns' struct is used.  With ``order_col`` the same
-    full-row struct breaks ties, so two rows sharing key AND order_col
-    but differing in payload still pick the same winner on every run —
-    without the tiebreaker a re-run could flip the stored row and
-    defeat the IS DISTINCT FROM idempotence guard.
-    """
-    from pyspark.sql import Window, functions as F
-
-    full_row = F.struct(*[F.col(c) for c in df.columns]).desc()
-    if order_col is not None:
-        ordering = [F.col(order_col).desc_nulls_last(), full_row]
-    else:
-        ordering = [full_row]
-    w = Window.partitionBy(*key_cols).orderBy(*ordering)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-
-
 def write_jdbc_upsert(
     df: DataFrame,
     url: str,
@@ -210,7 +184,11 @@ def write_jdbc_upsert(
     props.setdefault("batchsize", "10000")
     staging = f"{table}_stg_{run_id or uuid.uuid4().hex[:12]}"
 
-    batch = dedupe_batch(df, key_cols, order_col)
+    # ON CONFLICT raises ``cardinality violation`` if one statement
+    # carries two rows for one key, so the batch must be key-unique
+    # before staging: last-writer-wins per key, ties broken by value so
+    # a re-run never flips the stored row (the IS DISTINCT FROM guard)
+    batch = last_writer_wins(df, key_cols, [order_col] if order_col else [])
     if num_partitions is not None:
         batch = batch.coalesce(num_partitions)
 

@@ -16,16 +16,26 @@ Spark-first design (no Delta dependency — plain parquet):
    then newest by the order columns (the reference gets this from
    arrival order, we re-specify it) — and keep the batch winner, or
    the target row when the batch lacks the key;
-3. atomically overwrite (write to a temp dir, then swap).
+3. publish through the one replace protocol, :func:`_replace`: writer
+   lock → crash recovery → the caller writes a sibling staging dir →
+   rename-only swap of the whole table or of each touched partition.
 
 This is MERGE INTO re-expressed as one keyed fold: the batch subtree
-is planned once and the write runs one exchange.  On a real
-deployment the same ``merge_dataframes`` logic backs a Delta/Iceberg
-``MERGE INTO`` where the table format gives true atomic commits and,
-at 100 TB, partition-level rewrite instead of full-table overwrite
-(partition the target by tenant/date and restrict steps 1-3 to the
-partitions present in the batch — the batch is a 24 h window, so only
-~1 day of partitions rewrite).
+is planned once and the write runs one exchange.
+
+Every parquet-table REWRITE in the engine goes through
+:func:`_replace`: :func:`merge_upsert` (full or partition-restricted),
+:func:`cdc_merge`, ``io.compact_table`` and the streaming fold sink
+(``streaming.incremental._fold_stream_availablenow``).  Two writers
+stay off it on purpose: ``streaming.incremental._publish_batch_dir``
+is append-only — it adds a new ``batch=<id>`` directory and never
+replaces rows, so there is no base to lose and no old version to
+recover — and ``io.versioned_write`` publishes an immutable snapshot
+by flipping a pointer file, so no directory is ever swapped.
+
+On a real deployment the same ``merge_dataframes`` logic backs a
+Delta/Iceberg ``MERGE INTO`` where the table format gives true atomic
+commits, table-level even for partition-restricted merges.
 """
 
 from __future__ import annotations
@@ -287,26 +297,32 @@ def _lock_owner_desc(owner_file: str) -> str:
 
 
 def _recover_swap(target_path: str) -> None:
-    """Crash recovery for :func:`_swap_into`, run before any merge
-    touches ``target_path``.  The swap protocol leaves exactly three
-    possible on-disk states, each repaired by one rename/cleanup:
+    """Crash recovery for :func:`_swap_into`, run by :func:`_replace`
+    before any writer reads ``target_path``.  A swap publishes either
+    the whole table (aside copy ``target.old``) or one partition of it
+    (``target/<col>=<v>.old``), and leaves exactly three possible
+    on-disk states for that directory, each repaired by one
+    rename/cleanup:
 
-    - ``target`` exists, no ``target.old``   → normal, nothing to do;
-    - ``target.old`` only (crash between the two renames) → restore
-      the old version: ``rename(target.old, target)``;
+    - the directory exists, no ``.old``   → normal, nothing to do;
+    - ``.old`` only (crash between the two renames) → restore the old
+      version: ``rename(x.old, x)``;
     - both exist (crash after the new version landed, before cleanup)
       → the new version is complete (it only appears via a rename of a
-      fully-written staging dir), so drop ``target.old``.
+      fully-written staging dir), so drop ``x.old``.
 
-    Stale ``target.tmp-*`` staging dirs from crashed writes are swept
-    here too — they are only ever referenced within a single call.
+    The table-level repair runs first, so a restored table is then
+    checked for interrupted partition swaps.  Stale ``target.tmp-*``
+    staging dirs from crashed writes are swept too — they are only
+    ever referenced within a single call.
     """
-    old = target_path + ".old"
-    if os.path.exists(old):
-        if os.path.exists(target_path):
-            shutil.rmtree(old, ignore_errors=True)
-        else:
-            os.rename(old, target_path)
+    for pattern in (target_path + ".old", os.path.join(target_path, "*.old")):
+        for old in glob.glob(pattern):
+            live = old[: -len(".old")]
+            if os.path.exists(live):
+                shutil.rmtree(old, ignore_errors=True)
+            else:
+                os.rename(old, live)
     for stale in glob.glob(target_path + ".tmp-*"):
         shutil.rmtree(stale, ignore_errors=True)
 
@@ -327,7 +343,8 @@ def _swap_into(tmp: str, target_path: str) -> None:
     deleted and the replacement not yet in place — a crash there lost
     the table.  Now every intermediate state is repaired by
     :func:`_recover_swap`: the old version is renamed aside, the new
-    one renamed in, and only then is the old version deleted."""
+    one renamed in, and only then is the old version deleted.  Called
+    only by :func:`_replace`, which holds the writer lock."""
     old = target_path + ".old"
     if os.path.exists(target_path):
         os.rename(target_path, old)
@@ -348,6 +365,56 @@ def _write_counted(df: DataFrame, path: str, partition_col: str | None = None) -
         writer = writer.partitionBy(partition_col)
     writer.parquet(path)
     return obs.get["n"]
+
+
+def _read_target(
+    spark: SparkSession, target_path: str, schema
+) -> DataFrame | None:
+    """The stored table under ``schema``, or None before its first write."""
+    if not os.path.exists(target_path):
+        return None
+    return spark.read.schema(schema).parquet(target_path)
+
+
+@contextlib.contextmanager
+def _replace(
+    target_path: str,
+    partition_col: str | None = None,
+    lock_timeout_s: float = 600.0,
+):
+    """The one replace protocol of every parquet-table rewrite here
+    (the reference's BEGIN → upsert loop → COMMIT): take
+    :func:`_table_lock`, repair any interrupted swap with
+    :func:`_recover_swap`, and yield a sibling staging dir
+    (:func:`_staging_dir`) for the caller to read the target and write
+    the new version into.  On a clean exit the staging dir is
+    published with the rename-only :func:`_swap_into`: whole, or —
+    with ``partition_col`` and an existing target — one partition
+    directory at a time, so partitions the caller did not write stay
+    byte-identical.  A caller that writes nothing (a replayed batch)
+    publishes nothing; a caller that raises leaves the target as it
+    was, and its staging dir is swept by the next writer.
+
+    The lock spans read → write → swap, so a writer that waits reads
+    the holder's published rows instead of swapping over them."""
+    with _table_lock(target_path, timeout_s=lock_timeout_s):
+        _recover_swap(target_path)
+        tmp = _staging_dir(target_path)
+        yield tmp
+        if not os.path.exists(tmp):
+            return
+        if partition_col is None or not os.path.exists(target_path):
+            moves = [(tmp, target_path)]
+        else:
+            prefix = f"{partition_col}="
+            moves = [
+                (os.path.join(tmp, e), os.path.join(target_path, e))
+                for e in os.listdir(tmp)
+                if e.startswith(prefix)
+            ]
+        for staged, live in moves:
+            _swap_into(staged, live)
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _fold(
@@ -448,43 +515,75 @@ def merge_upsert(
     batch: DataFrame,
     keys: list[str],
     order_cols: list[str],
+    partition_col: str | None = None,
     stamp_updated_at: bool = False,
     lock_timeout_s: float = 600.0,
     batch_ts: str | None = None,
 ) -> int:
     """Materialized MERGE into a parquet path; returns rows written.
 
-    Atomicity (E3, the reference's BEGIN/COMMIT): the merged result is
-    written to a sibling staging dir first, then published with the
-    rename-only protocol of :func:`_swap_into` — a failure at ANY
-    point leaves a state :func:`_recover_swap` (run on the next call)
-    restores to either the old or the new complete version, never a
-    lost or half-written table.  Pinned end-to-end by the streaming
-    crash tests (kill mid-write → restart converges).  Empty batch
-    short-circuits (K3, src/etl-square-payments.ts:50-53).
+    Atomicity (E3, the reference's BEGIN/COMMIT) and concurrency come
+    from :func:`_replace`: the merged result is written to a sibling
+    staging dir, then published with rename-only swaps — a failure at
+    ANY point leaves a state the next writer's recovery restores to
+    the old or the new complete version, never a lost or half-written
+    table (pinned end-to-end by the streaming crash tests: kill
+    mid-write → restart converges).  The target is read inside the
+    writer lock, so interleaved calls compose instead of
+    last-swap-wins dropping a batch; lock starvation raises
+    :class:`ConcurrentWriterError`.  An empty batch returns 0 without
+    locking or creating the target (K3, src/etl-square-payments.ts:50-53).
 
-    Concurrent WRITERS serialize on :func:`_table_lock` (the swap was
-    already reader-atomic): the target read happens inside the lock,
-    so a waiting writer merges onto the winner's published rows —
-    interleaved calls compose instead of last-swap-wins dropping a
-    batch; lock starvation raises :class:`ConcurrentWriterError`.
+    With ``partition_col`` the merge is partition-restricted — the
+    100 TB-shaped upsert (SURVEY.md hard-list #1).  The target is a
+    hive-layout table (``target/<col>=<val>/``), and a 24 h batch
+    touches ~1 day of partition values, so the merge:
+
+    1. collects the batch's DISTINCT partition values (driver-side,
+       bounded by the number of touched partitions).  It is the only
+       action before the write, and none touched is the K3 test;
+    2. reads ONLY those partitions of the target (the ``isin`` filter
+       is partition pruning — untouched partitions are never opened);
+    3. folds the batch into that slice and writes it partitioned;
+    4. swaps each touched partition directory individually; untouched
+       partition directories stay byte-identical on disk (pinned in
+       tests/test_merge.py).
+
+    INVARIANT the caller owns: ``partition_col`` must be immutable per
+    natural key (creation date, tenant id) — if a key could move
+    between partitions, its old row would survive in an untouched
+    partition.  Delta/Iceberg partition-scoped MERGE has the same
+    constraint.  Atomicity is then per partition: a mid-publish
+    failure leaves earlier partitions new and later ones old, each
+    internally consistent, and re-running converges (the merge is
+    idempotent).  Table-level commits need a table format.
     """
-    if batch.isEmpty():
-        return 0
-    with _table_lock(target_path, timeout_s=lock_timeout_s):
-        _recover_swap(target_path)
-        target = (
-            spark.read.schema(batch.schema).parquet(target_path)
-            if os.path.exists(target_path)
-            else None
-        )
+    if partition_col is None:
+        if batch.isEmpty():
+            return 0
+        in_slice = None
+    else:
+        touched = [r[0] for r in batch.select(partition_col).distinct().collect()]
+        if not touched:
+            return 0
+        # NULL partition values land in hive's __HIVE_DEFAULT_PARTITION__
+        # dir.  ``isin`` never matches NULL (three-valued logic), so
+        # without the explicit isNull branch the target's NULL-partition
+        # rows would be left out of the slice while the publish still
+        # replaced their directory — silently dropping them.
+        non_null = [t for t in touched if t is not None]
+        in_slice = F.col(partition_col).isin(non_null) if non_null else F.lit(False)
+        if len(non_null) != len(touched):
+            in_slice = in_slice | F.col(partition_col).isNull()
+    with _replace(target_path, partition_col, lock_timeout_s) as tmp:
+        target = _read_target(spark, target_path, batch.schema)
+        if target is not None and in_slice is not None:
+            target = target.filter(in_slice)
         merged = merge_dataframes(
             target, batch, keys, order_cols, stamp_updated_at, batch_ts
         )
-        tmp = _staging_dir(target_path)
-        n = _write_counted(merged, tmp)
-        _swap_into(tmp, target_path)
-        return n
+        n = _write_counted(merged, tmp, partition_col)
+    return n
 
 
 def cdc_merge_dataframes(
@@ -518,24 +617,16 @@ def cdc_merge(
     op_col: str = "op",
     lock_timeout_s: float = 600.0,
 ) -> int:
-    """Materialized CDC MERGE with the same crash-consistent staging
-    swap as :func:`merge_upsert` (E3).  The stored target does NOT
+    """Materialized CDC MERGE through the same :func:`_replace`
+    protocol as :func:`merge_upsert` (E3).  The stored target does NOT
     carry ``op_col`` — it exists only on the change feed."""
     if batch.isEmpty():
         return 0
-    with _table_lock(target_path, timeout_s=lock_timeout_s):
-        _recover_swap(target_path)
-        target_schema = batch.drop(op_col).schema
-        target = (
-            spark.read.schema(target_schema).parquet(target_path)
-            if os.path.exists(target_path)
-            else None
-        )
+    with _replace(target_path, lock_timeout_s=lock_timeout_s) as tmp:
+        target = _read_target(spark, target_path, batch.drop(op_col).schema)
         merged = cdc_merge_dataframes(target, batch, keys, order_cols, op_col)
-        tmp = _staging_dir(target_path)
         n = _write_counted(merged, tmp)
-        _swap_into(tmp, target_path)
-        return n
+    return n
 
 
 def snapshot_diff(
@@ -591,102 +682,6 @@ def snapshot_diff(
             *[F.col(f"__n_{c}").alias(c) for c in compare_cols],
         )
     )
-
-
-def merge_upsert_partitioned(
-    spark: SparkSession,
-    target_path: str,
-    batch: DataFrame,
-    keys: list[str],
-    order_cols: list[str],
-    partition_col: str,
-    stamp_updated_at: bool = False,
-    lock_timeout_s: float = 600.0,
-    batch_ts: str | None = None,
-) -> int:
-    """Partition-restricted MERGE: rewrite only the partitions the batch
-    touches — the 100 TB-shaped upsert (SURVEY.md hard-list #1).
-
-    The target is a hive-layout parquet table partitioned by
-    ``partition_col`` (``target/<col>=<val>/``).  A 24 h incremental
-    batch touches ~1 day of partition values, so the merge:
-
-    1. collects the batch's DISTINCT partition values (driver-side,
-       bounded — it is the number of touched partitions, not rows).
-       It is the only action before the write: none means an empty
-       batch, which returns 0 without locking or creating the target
-       (K3);
-    2. reads ONLY those partitions of the target (the ``isin`` filter
-       is partition pruning — untouched partitions are never opened);
-    3. folds the batch into the touched slice (same
-       :func:`merge_dataframes` semantics as the full merge);
-    4. writes the slice to a temp dir and swaps each touched partition
-       directory individually.  Untouched partition directories are
-       left byte-identical on disk (pinned in tests/test_merge.py).
-
-    INVARIANT the caller owns: ``partition_col`` must be immutable per
-    natural key (creation date, tenant id) — if a key could move
-    between partitions, its old row would survive in an untouched
-    partition.  This is the standard constraint for partition-scoped
-    MERGE (Delta/Iceberg ``ON ... AND target.part IN (...)`` has the
-    same one).
-
-    Atomicity is per partition (each swap is a dir move); a mid-swap
-    failure leaves earlier partitions new and later ones old, but every
-    partition is internally consistent and the merge is idempotent —
-    re-running converges.  A real deployment gets table-level commits
-    from Delta/Iceberg; plain parquet cannot.
-    """
-    touched = [r[0] for r in batch.select(partition_col).distinct().collect()]
-    if not touched:
-        return 0
-    # the lock covers the whole read→merge→swap, as in merge_upsert: the
-    # per-partition swaps are reader-atomic, but two unserialized
-    # writers would still read one base and drop each other's rows
-    with _table_lock(target_path, timeout_s=lock_timeout_s):
-        # repair any partition-dir swap a previous crash interrupted, and
-        # sweep staging dirs a crashed run left beside the target
-        for old in glob.glob(os.path.join(target_path, "*.old")):
-            _recover_swap(old[: -len(".old")])
-        for stale in glob.glob(target_path + ".tmp-*"):
-            shutil.rmtree(stale, ignore_errors=True)
-        if not os.path.exists(target_path):
-            batch_dedup = merge_dataframes(None, batch, keys, order_cols)
-            return _write_counted(batch_dedup, target_path, partition_col)
-
-        # NULL partition values land in hive's __HIVE_DEFAULT_PARTITION__
-        # dir.  ``isin`` never matches NULL (three-valued logic), so without
-        # the explicit isNull branch the target's NULL-partition rows would
-        # be excluded from the merge slice while the swap below still
-        # replaced their directory — silently dropping them.
-        non_null = [t for t in touched if t is not None]
-        slice_cond = (
-            F.col(partition_col).isin(non_null) if non_null else F.lit(False)
-        )
-        if len(non_null) != len(touched):  # batch touches the NULL partition
-            slice_cond = slice_cond | F.col(partition_col).isNull()
-        target_slice = (
-            spark.read.schema(batch.schema)
-            .option("basePath", target_path)
-            .parquet(target_path)
-            .filter(slice_cond)
-        )
-        merged = merge_dataframes(
-            target_slice, batch, keys, order_cols, stamp_updated_at, batch_ts
-        )
-        tmp = _staging_dir(target_path)
-        n = _write_counted(merged, tmp, partition_col)
-        # swap ONLY the partition dirs the batch touched (tmp holds exactly
-        # the touched values by construction — merged == slice ∪ batch);
-        # tmp is a sibling of the target, so each per-partition publish is
-        # the same rename-only _swap_into protocol (atomic per partition,
-        # crash-recoverable via the *.old sweep above)
-        for entry in os.listdir(tmp):
-            if not entry.startswith(f"{partition_col}="):
-                continue
-            _swap_into(os.path.join(tmp, entry), os.path.join(target_path, entry))
-        shutil.rmtree(tmp, ignore_errors=True)
-        return n
 
 
 def scd2_merge(

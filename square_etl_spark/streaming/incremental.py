@@ -131,7 +131,10 @@ def _fold_stream_availablenow(
     maintenance sinks (rollup, count-min): availableNow file stream →
     ``foreachBatch`` that folds each micro-batch into the stored
     target via ``fold(target_or_None, batch) -> DataFrame`` and
-    atomically swaps the result (temp dir + move, E3).
+    publishes the result through the merge sink's replace protocol
+    (``sinks.merge._replace``: writer lock, crash recovery, staging
+    dir + rename swap, E3) — so a fold never swaps over the rows of a
+    merge or compaction holding the lock.
 
     A fold is NOT idempotent under re-delivery — re-folding a replayed
     batch would double-count — so the sink records the last applied
@@ -144,11 +147,7 @@ def _fold_stream_availablenow(
     """
     import os
 
-    from square_etl_spark.sinks.merge import (
-        _recover_swap,
-        _staging_dir,
-        _swap_into,
-    )
+    from square_etl_spark.sinks.merge import _replace
 
     reader = spark.readStream
     if schema is not None:
@@ -157,26 +156,22 @@ def _fold_stream_availablenow(
     marker = "_last_batch_id"
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # repair a swap a previous crash interrupted before reading
-        _recover_swap(target_path)
-        target = None
-        applied = -1
-        if os.path.exists(target_path):
-            mpath = os.path.join(target_path, marker)
-            if os.path.exists(mpath):
-                with open(mpath) as fh:
-                    applied = int(fh.read().strip())
-            target = spark.read.parquet(target_path)
-        if batch_id <= applied:
-            return  # replayed batch: already folded in
-        merged = fold(target, batch_df)
-        tmp = _staging_dir(target_path)
-        merged.write.mode("overwrite").parquet(tmp)
-        # batch_id lands INSIDE the staging dir, so the marker and the
-        # data publish in the same atomic rename
-        with open(os.path.join(tmp, marker), "w") as fh:
-            fh.write(str(batch_id))
-        _swap_into(tmp, target_path)
+        with _replace(target_path) as tmp:
+            target = None
+            applied = -1
+            if os.path.exists(target_path):
+                mpath = os.path.join(target_path, marker)
+                if os.path.exists(mpath):
+                    with open(mpath) as fh:
+                        applied = int(fh.read().strip())
+                target = spark.read.parquet(target_path)
+            if batch_id <= applied:
+                return  # replayed batch: already folded in, nothing staged
+            fold(target, batch_df).write.mode("overwrite").parquet(tmp)
+            # batch_id lands INSIDE the staging dir, so the marker and the
+            # data publish in the same atomic rename
+            with open(os.path.join(tmp, marker), "w") as fh:
+                fh.write(str(batch_id))
 
     (
         stream.writeStream.foreachBatch(sink)

@@ -195,6 +195,41 @@ def test_compact_table_swap_under_concurrent_reader(spark, tmp_path):
     assert after == {(i, 1) for i in range(200)}
 
 
+def test_compact_table_waits_for_the_writer_lock(spark, tmp_path):
+    """Compaction takes the table's writer lock: while a writer holds
+    it, compact_table WAITS, then compacts the rows the holder
+    published — it never reads the old base and swaps over the
+    holder's result (which would silently drop its rows)."""
+    import threading
+
+    from square_etl_spark.sinks.merge import _table_lock
+
+    path = os.path.join(tmp_path, "tbl")
+    schema = "id long, tag long"
+    spark.createDataFrame([(i, 1) for i in range(20)], schema).repartition(
+        8
+    ).write.parquet(path)
+    done = {}
+
+    def compact():
+        done["n"] = compact_table(spark, path, target_files=2)
+
+    with _table_lock(path):
+        t = threading.Thread(target=compact)
+        t.start()
+        t.join(timeout=5.0)
+        assert t.is_alive(), "compaction must block while the lock is held"
+        # the holder publishes its rows before it releases the lock
+        spark.createDataFrame([(i, 2) for i in range(20, 30)], schema).write.mode(
+            "append"
+        ).parquet(path)
+    t.join(timeout=120.0)
+    assert not t.is_alive() and done["n"] == 2
+    assert len(_parquet_files(path)) == 2
+    got = {tuple(r) for r in spark.read.parquet(path).collect()}
+    assert got == {(i, 1) for i in range(20)} | {(i, 2) for i in range(20, 30)}
+
+
 def test_versioned_pointer_concurrent_reader_and_vacuum(spark, tmp_path):
     """The versioned-table pointer flip (io.versioned_write) under a
     concurrent reader WITH vacuum running between publishes: a reader

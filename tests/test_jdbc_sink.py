@@ -7,9 +7,9 @@ The Postgres ON CONFLICT dialect stays SQL-gen-pinned (no server here).
 import pytest
 from pyspark.sql import functions as F
 
+from square_etl_spark.operators.aggregations import last_writer_wins
 from square_etl_spark.sinks.jdbc import (
     _ident,
-    dedupe_batch,
     merge_statement,
     upsert_statement,
     write_jdbc_upsert,
@@ -80,7 +80,7 @@ def test_dedupe_batch_last_writer_wins(spark):
         [("k1", 1, "old"), ("k1", 3, "new"), ("k2", 2, "only")],
         "id string, ver int, payload string",
     )
-    out = dedupe_batch(df, ["id"], order_col="ver").orderBy("id").collect()
+    out = last_writer_wins(df, ["id"], ["ver"]).orderBy("id").collect()
     assert [(r.id, r.payload) for r in out] == [("k1", "new"), ("k2", "only")]
 
 
@@ -88,22 +88,22 @@ def test_dedupe_batch_deterministic_without_order_col(spark):
     df = spark.createDataFrame(
         [("k", 1, "a"), ("k", 1, "b")], "id string, ver int, payload string"
     )
-    a = dedupe_batch(df, ["id"]).collect()
-    b = dedupe_batch(df.repartition(8), ["id"]).collect()
+    a = last_writer_wins(df, ["id"], []).collect()
+    b = last_writer_wins(df.repartition(8), ["id"], []).collect()
     assert a == b  # partition-invariant winner
 
 
 def test_dedupe_batch_order_col_ties_break_deterministically(spark):
     # two rows share key AND order_col but differ in payload: the winner
-    # must be partition-invariant (full-row struct tiebreaker, ADVICE r2)
+    # must be partition-invariant (remaining-columns tiebreaker, ADVICE r2)
     df = spark.createDataFrame(
         [("k", 5, "a"), ("k", 5, "b"), ("k", 4, "c")],
         "id string, ver int, payload string",
     )
-    a = dedupe_batch(df, ["id"], order_col="ver").collect()
-    b = dedupe_batch(df.repartition(8), ["id"], order_col="ver").collect()
+    a = last_writer_wins(df, ["id"], ["ver"]).collect()
+    b = last_writer_wins(df.repartition(8), ["id"], ["ver"]).collect()
     assert a == b
-    assert a[0].payload == "b"  # max full-row struct among ver=5 ties
+    assert a[0].payload == "b"  # largest remaining column among ver=5 ties
 
 
 def test_write_jdbc_upsert_requires_driver(spark):

@@ -154,22 +154,20 @@ def _pbatch(spark, rows):
 
 
 def test_partitioned_merge_rewrites_only_touched_partitions(spark, tmp_path):
-    from square_etl_spark.sinks.merge import merge_upsert_partitioned
-
     target = os.path.join(tmp_path, "tbl")
     seed = _pbatch(spark, [
         ("a", 1, "2024-01-01 00:00:00", "2024-01-01"),
         ("b", 2, "2024-01-01 00:00:00", "2024-01-01"),
         ("c", 3, "2024-01-02 00:00:00", "2024-01-02"),
     ])
-    merge_upsert_partitioned(spark, target, seed, ["k"], ["updated_at"], "day")
+    merge_upsert(spark, target, seed, ["k"], ["updated_at"], partition_col="day")
     day1_before = _pfiles(target, "2024-01-01")
 
     batch = _pbatch(spark, [
         ("c", 30, "2024-01-02 12:00:00", "2024-01-02"),
         ("d", 40, "2024-01-02 12:00:00", "2024-01-02"),
     ])
-    n = merge_upsert_partitioned(spark, target, batch, ["k"], ["updated_at"], "day")
+    n = merge_upsert(spark, target, batch, ["k"], ["updated_at"], partition_col="day")
     assert n == 2  # rows written = touched-slice size, not table size
 
     # untouched partition: files byte-identical (not rewritten)
@@ -183,15 +181,13 @@ def test_partitioned_merge_rewrites_only_touched_partitions(spark, tmp_path):
 
 
 def test_partitioned_merge_idempotent(spark, tmp_path):
-    from square_etl_spark.sinks.merge import merge_upsert_partitioned
-
     target = os.path.join(tmp_path, "tbl")
     batch = _pbatch(spark, [
         ("a", 1, "2024-01-01 00:00:00", "2024-01-01"),
         ("c", 3, "2024-01-02 00:00:00", "2024-01-02"),
     ])
-    n1 = merge_upsert_partitioned(spark, target, batch, ["k"], ["updated_at"], "day")
-    n2 = merge_upsert_partitioned(spark, target, batch, ["k"], ["updated_at"], "day")
+    n1 = merge_upsert(spark, target, batch, ["k"], ["updated_at"], partition_col="day")
+    n2 = merge_upsert(spark, target, batch, ["k"], ["updated_at"], partition_col="day")
     got = {
         (r.k, r.v)
         for r in spark.read.schema(PSCHEMA)
@@ -207,22 +203,20 @@ def test_partitioned_merge_null_partition_rows_survive(spark, tmp_path):
     explicit isNull branch the target's prior NULL-partition rows were
     excluded from the merge slice while the swap still replaced their
     directory — silent data loss (r03 ADVICE, medium)."""
-    from square_etl_spark.sinks.merge import merge_upsert_partitioned
-
     target = os.path.join(tmp_path, "tbl")
     seed = _pbatch(spark, [
         ("a", 1, "2024-01-01 00:00:00", "2024-01-01"),
         ("n1", 9, "2024-01-01 00:00:00", None),   # NULL partition
         ("n2", 8, "2024-01-01 00:00:00", None),
     ])
-    merge_upsert_partitioned(spark, target, seed, ["k"], ["updated_at"], "day")
+    merge_upsert(spark, target, seed, ["k"], ["updated_at"], partition_col="day")
 
     # batch touches the NULL partition: updates n1, inserts n3 — n2 must survive
     batch = _pbatch(spark, [
         ("n1", 90, "2024-01-02 00:00:00", None),
         ("n3", 7, "2024-01-02 00:00:00", None),
     ])
-    n = merge_upsert_partitioned(spark, target, batch, ["k"], ["updated_at"], "day")
+    n = merge_upsert(spark, target, batch, ["k"], ["updated_at"], partition_col="day")
     assert n == 3  # n1 (updated) + n2 (survivor) + n3 (insert)
     got = {
         (r.k, r.v)
@@ -240,7 +234,7 @@ def test_partitioned_merge_null_partition_rows_survive(spark, tmp_path):
         for f in os.listdir(null_dir) if f.endswith(".parquet")
     )
     batch2 = _pbatch(spark, [("a", 11, "2024-01-03 00:00:00", "2024-01-01")])
-    merge_upsert_partitioned(spark, target, batch2, ["k"], ["updated_at"], "day")
+    merge_upsert(spark, target, batch2, ["k"], ["updated_at"], partition_col="day")
     after = sorted(
         (f, hashlib.sha256(open(os.path.join(null_dir, f), "rb").read()).hexdigest())
         for f in os.listdir(null_dir) if f.endswith(".parquet")
@@ -249,12 +243,10 @@ def test_partitioned_merge_null_partition_rows_survive(spark, tmp_path):
 
 
 def test_partitioned_merge_empty_batch_short_circuits(spark, tmp_path):
-    from square_etl_spark.sinks.merge import merge_upsert_partitioned
-
     target = os.path.join(tmp_path, "tbl")
     empty = spark.createDataFrame([], PSCHEMA)
-    assert merge_upsert_partitioned(
-        spark, target, empty, ["k"], ["updated_at"], "day"
+    assert merge_upsert(
+        spark, target, empty, ["k"], ["updated_at"], partition_col="day"
     ) == 0
     assert not os.path.exists(target)
 
@@ -1227,10 +1219,10 @@ def test_partitioned_merge_runs_one_action_before_the_write(
 
     sc = spark.sparkContext
     target = str(tmp_path / "tbl")
-    M.merge_upsert_partitioned(
+    M.merge_upsert(
         spark, target,
         _pbatch(spark, [("a", 1, "2024-01-01 00:00:00", "2024-01-01")]),
-        ["k"], ["updated_at"], "day",
+        ["k"], ["updated_at"], partition_col="day",
     )
     batch = _pbatch(spark, [
         ("a", 2, "2024-01-02 00:00:00", "2024-01-01"),
@@ -1247,8 +1239,8 @@ def test_partitioned_merge_runs_one_action_before_the_write(
         sc.setJobGroup("one-collect", "touched-partition collect alone")
         batch.select("day").distinct().collect()
         sc.setJobGroup("before-write", "merge up to its write")
-        n = M.merge_upsert_partitioned(
-            spark, target, batch, ["k"], ["updated_at"], "day"
+        n = M.merge_upsert(
+            spark, target, batch, ["k"], ["updated_at"], partition_col="day"
         )
         jobs = {
             g: len(sc.statusTracker().getJobIdsForGroup(g))

@@ -189,7 +189,7 @@ def test_pipeline_partitioned_merge_leaves_out_of_window_partitions_untouched(
 def test_pipeline_order_items_part_date_immutable_per_key(spark, sf_dir):
     """part_date on order_items derives from the deterministic first-wins
     payment's created_at: one part_date per order across re-runs — the
-    immutability invariant merge_upsert_partitioned requires."""
+    immutability invariant the partition-restricted merge_upsert requires."""
     pay = P.payments_source(spark, sf_dir)
     lines = P.order_items_source(spark, sf_dir)
     rows, _ = P.order_items_pipeline(pay, lines, with_part_date=True)

@@ -262,6 +262,47 @@ def test_stream_merge_crash_mid_batch_restart_converges(spark, tmp_path, monkeyp
     assert state() == want
 
 
+def test_stream_fold_sink_waits_for_the_writer_lock(spark, tmp_path):
+    """The streaming fold sink takes the target's writer lock: while a
+    writer holds it, the micro-batch WAITS, then folds into the rows
+    the holder published instead of swapping over them."""
+    import threading
+
+    from square_etl_spark.sinks.merge import _table_lock
+    from square_etl_spark.streaming.incremental import stream_rollup_availablenow
+
+    src = os.path.join(tmp_path, "src")
+    ckpt = os.path.join(tmp_path, "ckpt")
+    tgt = os.path.join(tmp_path, "rollup")
+    spark.createDataFrame([("a", 1), ("b", 2)], "k string, v long").coalesce(
+        1
+    ).write.parquet(src)
+    errs = []
+
+    def drain():
+        try:
+            stream_rollup_availablenow(
+                spark, src, ckpt, tgt, ["k"], ["v"], schema="k string, v long"
+            )
+        except Exception as exc:  # pragma: no cover - surfaced below
+            errs.append(exc)
+
+    with _table_lock(tgt):
+        t = threading.Thread(target=drain)
+        t.start()
+        t.join(timeout=10.0)
+        assert t.is_alive(), "the fold must block while the lock is held"
+        assert not os.path.exists(tgt)
+        # the holder publishes a rollup before it releases the lock
+        spark.createDataFrame(
+            [("a", 10, 3)], "k string, v long, n_rows long"
+        ).write.parquet(tgt)
+    t.join(timeout=180.0)
+    assert not t.is_alive() and not errs
+    got = {(r.k, r.v, r.n_rows) for r in spark.read.parquet(tgt).collect()}
+    assert got == {("a", 11, 4), ("b", 2, 1)}
+
+
 def test_stream_dedup_exact_cross_batch_bounded_state(spark, tmp_path):
     """Streaming exact dedup: a key re-arriving in a LATER micro-batch
     is dropped (state store carries the seen-set across batches), new
