@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from square_etl_spark.schemas import FIXTURE_TABLES
+from square_etl_spark.session import ship_package
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
@@ -36,10 +37,12 @@ _REQUIRED_RUNTIME_CONF = {
 
 
 def ensure_engine_conf(spark: SparkSession) -> None:
-    """Apply the engine's required runtime confs to any session."""
+    """Apply the engine's required runtime confs to any session, and
+    let its Python workers import this package."""
     for k, v in _REQUIRED_RUNTIME_CONF.items():
         if spark.conf.get(k, None) != v:
             spark.conf.set(k, v)
+    ship_package(spark)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -38,6 +38,7 @@ from square_etl_spark.operators.aggregations import (
     top_k,
 )
 from square_etl_spark.operators.dedup import (
+    _PORTABLE_MASK,
     connected_components,
     contamination_hits,
     embedding_cosine_pairs,
@@ -1330,6 +1331,61 @@ _register(
 )
 
 
+#: the filtered whitespace tokenizer over ``text`` — the SQL twin of the
+#: ``split(trim(text), '\s+')`` minus empty tokens that
+#: ``operators.dedup.word_hashes`` hashes
+_WORDS = r"list_filter(regexp_split_to_array(trim(text), '\s+'), w -> w <> '')"
+
+
+def _md5_hex_digit(arg: str, pos: str) -> str:
+    """SQL: hex digit ``pos`` (1-based) of ``md5(arg)`` as a BIGINT in [0, 15]."""
+    return (
+        f"(CAST(strpos('0123456789abcdef', substr(md5({arg}), {pos}, 1))"
+        " AS BIGINT) - 1)"
+    )
+
+
+def _md5_int(arg: str, digits: int = 8) -> str:
+    """SQL: the leading ``digits`` hex digits of ``md5(arg)`` as a BIGINT.
+    At 8 digits this is the portable 32-bit word hash of
+    ``operators.dedup.word_hashes(portable=True)``."""
+    return (
+        f"list_sum(list_transform(generate_series(1, {digits}),"
+        f" p -> {_md5_hex_digit(arg, 'p')}"
+        f" * (CAST(1 AS BIGINT) << (4 * ({digits} - CAST(p AS INTEGER))))))"
+    )
+
+
+#: the SQL twin of ``operators.text.quality_score``: alpha, stopword
+#: and punctuation ratios blended into one score in [0, 1]
+_QUALITY_SCORE_SQL = r"""ROUND(
+              0.5 * LEAST(ROUND(len(regexp_replace(text, '[^A-Za-z]', '', 'g')) /
+                    (CASE WHEN len(text) > 0 THEN CAST(len(text) AS DOUBLE) ELSE 1.0 END), 6) / 0.8, 1.0)
+            + 0.3 * LEAST(ROUND(len(list_filter(string_split_regex(lower(trim(text)), '\s+'),
+                    w -> list_contains(['the','and','of','to','is','in','that','it'], w))) /
+                    (CASE WHEN trim(text) = '' THEN 1.0
+                          WHEN len(string_split_regex(trim(text), '\s+')) > 0
+                          THEN CAST(len(string_split_regex(trim(text), '\s+')) AS DOUBLE)
+                          ELSE 1.0 END), 6) / 0.4, 1.0)
+            + 0.2 * (1.0 - LEAST(ROUND(len(regexp_replace(text, '[^\.,;:!\?]', '', 'g')) /
+                    (CASE WHEN len(text) > 0 THEN CAST(len(text) AS DOUBLE) ELSE 1.0 END), 6) / 0.2, 1.0)),
+            6)"""
+
+#: symmetric edges over ``pairs(id_a, id_b)`` and their transitive
+#: closure ``reach(a, b)`` (every node reaches itself): a component's
+#: label is ``MIN(b)`` per ``a``
+_PAIR_REACH_CTES = """edges AS (
+          SELECT id_a AS a, id_b AS b FROM pairs
+          UNION
+          SELECT id_b, id_a FROM pairs),
+        reach AS (
+          SELECT a, b FROM edges
+          UNION
+          SELECT a, a FROM edges
+          UNION
+          SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a)"""
+
+
 #: shared CTE body: n-gram Jaccard pairs at threshold 0.1 / df_cap 100
 #: over a source relation (used by the pair query's oracle, the
 #: cluster-collapse oracle, and the corpus-clean pipeline oracle).
@@ -1350,15 +1406,13 @@ def _prefix_pairs_ctes(src: str = "documents", threshold: float = 0.5) -> str:
     )
 
 
-_PREFIX_PAIRS_CTES_TPL = r"""
+_PREFIX_PAIRS_CTES_TPL = rf"""
         psh AS (
           SELECT DISTINCT doc_id,
                  w[i] || ' ' || w[i + 1] || ' ' || w[i + 2] AS s
           FROM (SELECT doc_id, w, UNNEST(range(1, len(w) - 1)) AS i
                 FROM (SELECT doc_id,
-                             list_filter(
-                               regexp_split_to_array(trim(text), '\s+'),
-                               x -> x <> '') AS w
+                             {_WORDS} AS w
                       FROM __SRC__)
                 WHERE len(w) >= 3)),
         psized AS (
@@ -1431,29 +1485,23 @@ def _ngram_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     real dedup pipeline — connected components over the pair graph,
     labeling every involved doc with its cluster's minimum id (= the
     canonical survivor)."""
-    d = load_table(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(d, "doc_id", "text", n=3, threshold=0.1, df_cap=100)
-    return connected_components(pairs)
+    return connected_components(_ngram_jaccard(spark, sf_dir))
+
+
+#: recursive-CTE connected components over the low-threshold pair set:
+#: the one-shot labels every CC algorithm and fold below must equal
+_CC_ORACLE = f"""
+        WITH RECURSIVE {_ngram_pairs_ctes()},
+        {_PAIR_REACH_CTES}
+        SELECT a AS doc_id, MIN(b) AS cluster_id FROM reach GROUP BY a
+        """
 
 
 _register(
     QuerySpec(
         "dedup_cluster_assignment",
         _ngram_clusters,
-        oracle=f"""
-        WITH RECURSIVE {_ngram_pairs_ctes()},
-        edges AS (
-          SELECT id_a AS a, id_b AS b FROM pairs
-          UNION
-          SELECT id_b, id_a FROM pairs),
-        reach AS (
-          SELECT a, b FROM edges
-          UNION
-          SELECT a, a FROM edges
-          UNION
-          SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a)
-        SELECT a AS doc_id, MIN(b) AS cluster_id FROM reach GROUP BY a
-        """,
+        oracle=_CC_ORACLE,
         doc="connected components over near-dup pairs (iterative min-label propagation)",
         bench=True,
     )
@@ -1465,29 +1513,14 @@ def _ngram_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Kiveris et al., SoCC'14) — the O(log diameter) scale path for deep
     components; identical labels by construction, so it shares
     dedup_cluster_assignment's recursive-CTE oracle."""
-    d = load_table(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(d, "doc_id", "text", n=3, threshold=0.1, df_cap=100)
-    return connected_components(pairs, algorithm="star")
+    return connected_components(_ngram_jaccard(spark, sf_dir), algorithm="star")
 
 
 _register(
     QuerySpec(
         "dedup_cluster_star",
         _ngram_clusters_star,
-        oracle=f"""
-        WITH RECURSIVE {_ngram_pairs_ctes()},
-        edges AS (
-          SELECT id_a AS a, id_b AS b FROM pairs
-          UNION
-          SELECT id_b, id_a FROM pairs),
-        reach AS (
-          SELECT a, b FROM edges
-          UNION
-          SELECT a, a FROM edges
-          UNION
-          SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a)
-        SELECT a AS doc_id, MIN(b) AS cluster_id FROM reach GROUP BY a
-        """,
+        oracle=_CC_ORACLE,
         doc="connected components via alternating large-star/small-star (log-diameter rounds)",
     )
 )
@@ -1509,14 +1542,11 @@ def _survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     postings join remains the LOW-threshold tool (dedup_ngram_jaccard
     at t=0.1, where a prefix is ~90% of each doc and prefix pruning
     buys nothing)."""
-    from square_etl_spark.operators.dedup import (
-        ngram_jaccard_prefix,
-        survivor_selection,
-    )
+    from square_etl_spark.operators.dedup import survivor_selection
 
     d = load_table(spark, sf_dir, "documents")
     scored = d.select("doc_id", tx.quality_score("text").alias("q"))
-    pairs = ngram_jaccard_prefix(d, "doc_id", "text", n=3, threshold=0.5)
+    pairs = _prefix_jaccard_docs(spark, sf_dir)
     return survivor_selection(scored, pairs, "doc_id", "q")
 
 
@@ -1528,28 +1558,10 @@ def _survivor_oracle() -> str:
     return f"""
         WITH RECURSIVE scored AS (
           SELECT doc_id,
-            ROUND(
-              0.5 * LEAST(ROUND(len(regexp_replace(text, '[^A-Za-z]', '', 'g')) /
-                    (CASE WHEN len(text) > 0 THEN CAST(len(text) AS DOUBLE) ELSE 1.0 END), 6) / 0.8, 1.0)
-            + 0.3 * LEAST(ROUND(len(list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-                    w -> list_contains(['the','and','of','to','is','in','that','it'], w))) /
-                    (CASE WHEN trim(text) = '' THEN 1.0
-                          WHEN len(string_split_regex(trim(text), '\\s+')) > 0
-                          THEN CAST(len(string_split_regex(trim(text), '\\s+')) AS DOUBLE)
-                          ELSE 1.0 END), 6) / 0.4, 1.0)
-            + 0.2 * (1.0 - LEAST(ROUND(len(regexp_replace(text, '[^\\.,;:!\\?]', '', 'g')) /
-                    (CASE WHEN len(text) > 0 THEN CAST(len(text) AS DOUBLE) ELSE 1.0 END), 6) / 0.2, 1.0)),
-            6) AS q
+            {_QUALITY_SCORE_SQL} AS q
           FROM documents),
         {_prefix_pairs_ctes().strip().rstrip()},
-        edges AS (
-          SELECT id_a AS a, id_b AS b FROM pairs
-          UNION
-          SELECT id_b, id_a FROM pairs),
-        reach AS (
-          SELECT a, b FROM edges UNION SELECT a, a FROM edges
-          UNION
-          SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
+        {_PAIR_REACH_CTES},
         clusters AS (
           SELECT a AS doc_id, MIN(b) AS cluster_id FROM reach GROUP BY a),
         labeled AS (
@@ -1629,7 +1641,28 @@ def _minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _minhash_oracle() -> str:
+#: word-trigram shingle sets ``shl(doc_id, sh)`` over ``t``: masked
+#: 31-polynomial folds of three consecutive 32-bit word hashes
+_MINHASH_TRIGRAMS = f"""
+        tw AS (
+          SELECT doc_id,
+                 list_transform(w, x -> {_md5_int('x')}) AS hw
+          FROM t WHERE len(w) >= 3),
+        shl AS (
+          SELECT doc_id,
+                 list_distinct(list_transform(
+                   generate_series(1, len(hw) - 2),
+                   i -> ((((hw[CAST(i AS INTEGER)] * 31
+                            + hw[CAST(i + 1 AS INTEGER)]) & {_PORTABLE_MASK}) * 31
+                          + hw[CAST(i + 2 AS INTEGER)]) & {_PORTABLE_MASK}))) AS sh
+          FROM tw),"""
+
+
+def _minhash_ctes(shingles: str) -> str:
+    """``WITH`` head of the MinHash oracles: word lists ``t``, the given
+    shingle CTEs (ending in ``shl(doc_id, sh)``), the 16 affine-permutation
+    minima ``mh`` and the 8 two-row band hashes
+    ``buckets(doc_id, b, bhash)`` of ``operators.dedup``'s banded MinHash."""
     from square_etl_spark.operators.dedup import (
         MINHASH_A,
         MINHASH_B,
@@ -1638,44 +1671,28 @@ def _minhash_oracle() -> str:
 
     a = "[" + ", ".join(f"CAST({v} AS BIGINT)" for v in MINHASH_A) + "]"
     b = "[" + ", ".join(f"CAST({v} AS BIGINT)" for v in MINHASH_B) + "]"
-    mask = (1 << 57) - 1
-    hex32 = (
-        "list_sum(list_transform(generate_series(1, 8),"
-        " p -> (CAST(strpos('0123456789abcdef',"
-        " substr(md5(x), p, 1)) AS BIGINT) - 1)"
-        " * (CAST(1 AS BIGINT) << (4 * (8 - CAST(p AS INTEGER))))))"
-    )
-    return rf"""
+    return f"""
         WITH t AS (
           SELECT doc_id,
-                 list_filter(regexp_split_to_array(trim(text), '\s+'),
-                             w -> w <> '') AS w
-          FROM documents),
-        tw AS (
-          SELECT doc_id,
-                 list_transform(w, x -> {hex32}) AS hw
-          FROM t WHERE len(w) >= 3),
-        shl AS (
-          SELECT doc_id,
-                 list_distinct(list_transform(
-                   generate_series(1, len(hw) - 2),
-                   i -> ((((hw[CAST(i AS INTEGER)] * 31
-                            + hw[CAST(i + 1 AS INTEGER)]) & {mask}) * 31
-                          + hw[CAST(i + 2 AS INTEGER)]) & {mask}))) AS sh
-          FROM tw),
+                 {_WORDS} AS w
+          FROM documents),{shingles}
         mh AS (
           SELECT doc_id, sh,
                  list_transform(generate_series(0, 15),
                    i -> list_min(list_transform(sh,
                      s -> ({a}[CAST(i + 1 AS INTEGER)] * (s & 4294967295)
                            + {b}[CAST(i + 1 AS INTEGER)])
-                          % 2147483647))) AS mins
+                          % {MINHASH_P}))) AS mins
           FROM shl),
         buckets AS (
           SELECT doc_id, b,
                  (mins[CAST(2 * b + 1 AS INTEGER)] * 31
-                  + mins[CAST(2 * b + 2 AS INTEGER)]) & {mask} AS bhash
-          FROM mh, generate_series(0, 7) g(b)),
+                  + mins[CAST(2 * b + 2 AS INTEGER)]) & {_PORTABLE_MASK} AS bhash
+          FROM mh, generate_series(0, 7) g(b)),"""
+
+
+def _minhash_oracle() -> str:
+    return f"""{_minhash_ctes(_MINHASH_TRIGRAMS)}
         cool AS (
           SELECT bu.doc_id, bu.b, bu.bhash
           FROM buckets bu
@@ -1722,10 +1739,7 @@ def _minhash_vs_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     tables, so the agreement numbers are recomputed end-to-end by
     the second engine too."""
     d = load_table(spark, sf_dir, "documents")
-    mh = minhash_banded_pairs(
-        d, "doc_id", "text", num_hashes=16, bands=8, threshold=0.5,
-        bucket_cap=200,
-    ).select("id_a", "id_b")
+    mh = _minhash(spark, sf_dir).select("id_a", "id_b")
     ng = ngram_jaccard_pairs(
         d, "doc_id", "text", n=3, threshold=0.5, df_cap=100
     ).select(
@@ -1782,18 +1796,14 @@ _register(
     QuerySpec(
         "dedup_simhash",
         _simhash,
-        oracle=r"""
+        oracle=f"""
         WITH sig AS (
           SELECT doc_id,
             list_transform(generate_series(0, 63), j ->
               CASE WHEN COALESCE(list_sum(list_transform(
-                list_filter(regexp_split_to_array(trim(text), '\s+'),
-                            t -> t <> ''),
+                {_WORDS},
                 t -> CASE WHEN (
-                       (CAST(strpos('0123456789abcdef',
-                          substr(md5(t),
-                                 16 - CAST(j // 4 AS INTEGER), 1))
-                        AS BIGINT) - 1)
+                       {_md5_hex_digit('t', '16 - CAST(j // 4 AS INTEGER)')}
                        >> CAST(j % 4 AS INTEGER) & 1) = 1
                      THEN 1 ELSE -1 END)), 0) > 0
               THEN 1 ELSE 0 END) AS bits
@@ -2042,7 +2052,7 @@ _register(
     QuerySpec(
         "text_fingerprint",
         _fingerprints,
-        oracle=r"""
+        oracle=f"""
         -- CAST to BIGINT is load-bearing: list_sum types the per-token
         -- hash HUGEINT, which pandas/arrow coerces to float64 on fetch;
         -- 57-bit fingerprints exceed 2^53 and round (r05 red row).
@@ -2050,13 +2060,7 @@ _register(
           CAST(list_reduce(
             list_prepend(CAST(0 AS BIGINT),
               list_transform(
-                list_filter(regexp_split_to_array(trim(text), '\s+'),
-                            t -> t <> ''),
-                t -> list_sum(list_transform(generate_series(1, 8),
-                       i -> (CAST(strpos('0123456789abcdef',
-                                         substr(md5(t), i, 1)) AS BIGINT) - 1)
-                            * (CAST(1 AS BIGINT)
-                               << (4 * (8 - CAST(i AS INTEGER)))))))),
+                {_WORDS}, t -> {_md5_int('t')})),
             (acc, h) -> (acc * 31 + h) & 144115188075855871
           ) AS BIGINT) AS fingerprint
         FROM documents
@@ -2064,6 +2068,22 @@ _register(
         doc="portable rolling-hash doc fingerprint, oracle-recomputed fold",
     )
 )
+
+
+#: per-document token lists ``idx(doc_id, w, chunk_idx)``, one row per
+#: 64-token chunk at stride 48 (chunk k covers tokens [48k+1, 48k+64])
+_CHUNK_IDX_CTES = """
+        WITH toks AS (
+          SELECT doc_id,
+                 list_filter(string_split_regex(trim(text), '\\s+'),
+                             w -> w <> '') AS w
+          FROM documents),
+        base AS (SELECT doc_id, w, len(w) AS n FROM toks WHERE len(w) > 0),
+        idx AS (
+          SELECT doc_id, w,
+                 UNNEST(range(0, CAST(floor((n - 1) / 48) AS BIGINT) + 1))
+                   AS chunk_idx
+          FROM base)"""
 
 
 def _chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2077,18 +2097,7 @@ _register(
         _chunks,
         # step = chunk_size − overlap = 48; chunk k covers tokens
         # [k·48+1, k·48+64]; list_slice is 1-based inclusive like F.slice.
-        oracle="""
-        WITH toks AS (
-          SELECT doc_id,
-                 list_filter(string_split_regex(trim(text), '\\s+'),
-                             w -> w <> '') AS w
-          FROM documents),
-        base AS (SELECT doc_id, w, len(w) AS n FROM toks WHERE len(w) > 0),
-        idx AS (
-          SELECT doc_id, w,
-                 UNNEST(range(0, CAST(floor((n - 1) / 48) AS BIGINT) + 1))
-                   AS chunk_idx
-          FROM base)
+        oracle=f"""{_CHUNK_IDX_CTES}
         SELECT doc_id,
                CAST(chunk_idx AS BIGINT) AS chunk_idx,
                CAST(len(list_slice(w, chunk_idx * 48 + 1, chunk_idx * 48 + 64))
@@ -2182,11 +2191,9 @@ def _unigram_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tx.unigram_logprob(d, "doc_id", "text")
 
 
-_register(
-    QuerySpec(
-        "text_unigram_nll",
-        _unigram_nll,
-        oracle=r"""
+#: per-token NLL ``scored(doc_id, nll)`` under the corpus's own unigram
+#: distribution, rounded to 6 places into DECIMAL so sums add exactly
+_UNIGRAM_NLL_CTES = r"""
         WITH t AS (
           SELECT doc_id,
                  UNNEST(list_filter(
@@ -2198,7 +2205,14 @@ _register(
         scored AS (
           SELECT doc_id,
                  CAST(ROUND(-ln(c / /*nz: corpus token total >= 1 for any token row*/ t_total), 6) AS DECIMAL(18,6)) AS nll
-          FROM t JOIN freq USING (w) CROSS JOIN tot)
+          FROM t JOIN freq USING (w) CROSS JOIN tot)"""
+
+
+_register(
+    QuerySpec(
+        "text_unigram_nll",
+        _unigram_nll,
+        oracle=f"""{_UNIGRAM_NLL_CTES}
         SELECT doc_id,
                CAST(COUNT(*) AS BIGINT) AS n_tokens,
                ROUND(CAST(SUM(nll) AS DOUBLE) / COUNT(*), 6) AS avg_nll
@@ -2225,9 +2239,7 @@ def _sample_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes all three."""
     from square_etl_spark.operators.sampling import ntile_assign, weighted_mix
 
-    d = load_table(spark, sf_dir, "documents")
-    nll = tx.unigram_logprob(d, "doc_id", "text")
-    tiled = ntile_assign(nll, "avg_nll", "doc_id", 3)
+    tiled = ntile_assign(_unigram_nll(spark, sf_dir), "avg_nll", "doc_id", 3)
     kept = weighted_mix(
         tiled, "tile", "doc_id", {1: 1.0, 2: 0.5, 3: 0.1}, salt="ccnet"
     )
@@ -2243,19 +2255,7 @@ _register(
     QuerySpec(
         "sample_perplexity_buckets",
         _sample_perplexity_buckets,
-        oracle=r"""
-        WITH t AS (
-          SELECT doc_id,
-                 UNNEST(list_filter(
-                   string_split_regex(lower(trim(text)), '\s+'),
-                   w -> w <> '')) AS w
-          FROM documents),
-        freq AS (SELECT w, COUNT(*) AS c FROM t GROUP BY w),
-        tot AS (SELECT SUM(c) AS t_total FROM freq),
-        scored AS (
-          SELECT doc_id,
-                 CAST(ROUND(-ln(c / /*nz: corpus token total >= 1 for any token row*/ t_total), 6) AS DECIMAL(18,6)) AS nll
-          FROM t JOIN freq USING (w) CROSS JOIN tot),
+        oracle=f"""{_UNIGRAM_NLL_CTES},
         perdoc AS (
           SELECT doc_id,
                  CAST(COUNT(*) AS BIGINT) AS n_tokens,
@@ -2288,11 +2288,8 @@ def _perplexity_fence(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-language keep decision.  Fence table is language-sized →
     broadcast; the NLL scoring underneath is the two-pass
     vocab-broadcast shape of text_unigram_nll."""
-    nll = tx.unigram_logprob(
-        load_table(spark, sf_dir, "documents"), "doc_id", "text"
-    )
     d = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
-    j = nll.join(d, "doc_id")
+    j = _unigram_nll(spark, sf_dir).join(d, "doc_id")
     fence = j.groupBy("lang").agg(
         F.round(F.percentile("avg_nll", F.lit(0.9)), 6).alias("p90_nll")
     )
@@ -2311,19 +2308,7 @@ _register(
     QuerySpec(
         "quality_perplexity_fence",
         _perplexity_fence,
-        oracle=r"""
-        WITH t AS (
-          SELECT doc_id,
-                 UNNEST(list_filter(
-                   string_split_regex(lower(trim(text)), '\s+'),
-                   w -> w <> '')) AS w
-          FROM documents),
-        freq AS (SELECT w, COUNT(*) AS c FROM t GROUP BY w),
-        tot AS (SELECT SUM(c) AS t_total FROM freq),
-        scored AS (
-          SELECT doc_id,
-                 CAST(ROUND(-ln(c / /*nz: corpus token total >= 1 for any token row*/ t_total), 6) AS DECIMAL(18,6)) AS nll
-          FROM t JOIN freq USING (w) CROSS JOIN tot),
+        oracle=f"""{_UNIGRAM_NLL_CTES},
         nlld AS (
           SELECT doc_id,
                  ROUND(CAST(SUM(nll) AS DOUBLE)
@@ -2476,10 +2461,8 @@ def _ann_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.withColumn("rank", F.col("rank").cast("long"))
 
 
-def _ann_brute_oracle() -> str:
-    """Exact top-5 recomputation — also the ground truth the
-    ann_recall_audit composition embeds as a derived table."""
-    return """
+#: exact cosine of every vector against the first five, the query set
+_ANN_SIMS_CTES = """
         WITH q AS (
           SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
           FROM embeddings WHERE vec_id < 5),
@@ -2487,7 +2470,13 @@ def _ann_brute_oracle() -> str:
           SELECT q.query_id, e.vec_id,
                  ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv), 6)
                    AS cosine_sim
-          FROM embeddings e CROSS JOIN q)
+          FROM embeddings e CROSS JOIN q)"""
+
+
+def _ann_brute_oracle() -> str:
+    """Exact top-5 recomputation — also the ground truth the
+    ann_recall_audit composition embeds as a derived table."""
+    return f"""{_ANN_SIMS_CTES}
         SELECT query_id, vec_id, cosine_sim, CAST(rank AS BIGINT) AS rank
         FROM (
           SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
@@ -2528,15 +2517,7 @@ _register(
     QuerySpec(
         "ann_hard_negatives",
         _ann_hard_negatives,
-        oracle="""
-        WITH q AS (
-          SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-          FROM embeddings WHERE vec_id < 5),
-        sims AS (
-          SELECT q.query_id, e.vec_id,
-                 ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv), 6)
-                   AS cosine_sim
-          FROM embeddings e CROSS JOIN q),
+        oracle=f"""{_ANN_SIMS_CTES},
         ranked AS (
           SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
                                        ORDER BY cosine_sim DESC, vec_id) AS rank
@@ -2549,6 +2530,37 @@ _register(
         "WindowGroupLimit-pushed partial top-k",
     )
 )
+
+
+def _revenue_by_status(joined: DataFrame) -> DataFrame:
+    """Revenue and line count per order status over a lineitem⋈orders
+    join — the aggregate both physical join variants below report."""
+    return (
+        joined.groupBy("o_orderstatus")
+        .agg(
+            F.sum(
+                (F.col("l_extendedprice") * (1 - F.col("l_discount")))
+                .cast("decimal(18,4)")
+            )
+            .cast("double")
+            .alias("revenue"),
+            F.count(F.lit(1)).cast("long").alias("n_lines"),
+        )
+        .orderBy("o_orderstatus")
+    )
+
+
+#: plain-join oracle of the bucketed and the salted variant: both are
+#: physical redistribution only, so both must equal the plain join
+_REVENUE_BY_STATUS_ORACLE = """
+        SELECT o_orderstatus,
+               CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
+                             AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
+               CAST(COUNT(*) AS BIGINT) AS n_lines
+        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        GROUP BY o_orderstatus
+        ORDER BY o_orderstatus
+        """
 
 
 def _bucketed_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2591,19 +2603,8 @@ def _bucketed_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         ob = spark.table(f"orders_b_{tag}")
         lb = spark.table(f"lineitem_b_{tag}")
-        joined = lb.hint("merge").join(ob, lb.l_orderkey == ob.o_orderkey)
-        agg = (
-            joined.groupBy("o_orderstatus")
-            .agg(
-                F.sum(
-                    (F.col("l_extendedprice") * (1 - F.col("l_discount")))
-                    .cast("decimal(18,4)")
-                )
-                .cast("double")
-                .alias("revenue"),
-                F.count(F.lit(1)).cast("long").alias("n_lines"),
-            )
-            .orderBy("o_orderstatus")
+        agg = _revenue_by_status(
+            lb.hint("merge").join(ob, lb.l_orderkey == ob.o_orderkey)
         )
         rows, schema = agg.collect(), agg.schema
     finally:
@@ -2617,15 +2618,7 @@ _register(
     QuerySpec(
         "bucketed_join_revenue",
         _bucketed_join_revenue,
-        oracle="""
-        SELECT o_orderstatus,
-               CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
-                             AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-               CAST(COUNT(*) AS BIGINT) AS n_lines
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        GROUP BY o_orderstatus
-        ORDER BY o_orderstatus
-        """,
+        oracle=_REVENUE_BY_STATUS_ORACLE,
         doc="bucketed co-located join ≡ plain join: zero-exchange sort-merge",
     )
 )
@@ -2645,35 +2638,14 @@ def _salted_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
     dim = o.withColumnRenamed("o_orderkey", "l_orderkey")
-    joined = salted_join(li, dim, on="l_orderkey", salt=8)
-    return (
-        joined.groupBy("o_orderstatus")
-        .agg(
-            F.sum(
-                (F.col("l_extendedprice") * (1 - F.col("l_discount")))
-                .cast("decimal(18,4)")
-            )
-            .cast("double")
-            .alias("revenue"),
-            F.count(F.lit(1)).cast("long").alias("n_lines"),
-        )
-        .orderBy("o_orderstatus")
-    )
+    return _revenue_by_status(salted_join(li, dim, on="l_orderkey", salt=8))
 
 
 _register(
     QuerySpec(
         "salted_join_revenue",
         _salted_join_revenue,
-        oracle="""
-        SELECT o_orderstatus,
-               CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
-                             AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-               CAST(COUNT(*) AS BIGINT) AS n_lines
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        GROUP BY o_orderstatus
-        ORDER BY o_orderstatus
-        """,
+        oracle=_REVENUE_BY_STATUS_ORACLE,
         doc="skew-salted join ≡ plain join: content-hash salt, dim replicated",
     )
 )
@@ -2702,22 +2674,7 @@ _register(
     QuerySpec(
         "ann_topk_quantized",
         _ann_quantized,
-        oracle="""
-        WITH q AS (
-          SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-          FROM embeddings WHERE vec_id < 5),
-        sims AS (
-          SELECT q.query_id, e.vec_id,
-                 ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv), 6)
-                   AS cosine_sim
-          FROM embeddings e CROSS JOIN q)
-        SELECT query_id, vec_id, cosine_sim, CAST(rank AS BIGINT) AS rank
-        FROM (
-          SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                       ORDER BY cosine_sim DESC, vec_id) AS rank
-          FROM sims)
-        WHERE rank <= 5
-        """,
+        oracle=_ann_brute_oracle(),
         doc="int8-quantized ANN + exact rescore; top-k identical to brute force",
     )
 )
@@ -2810,22 +2767,7 @@ _register(
     QuerySpec(
         "ann_topk_codes",
         _ann_codes,
-        oracle="""
-        WITH q AS (
-          SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-          FROM embeddings WHERE vec_id < 5),
-        sims AS (
-          SELECT q.query_id, e.vec_id,
-                 ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv), 6)
-                   AS cosine_sim
-          FROM embeddings e CROSS JOIN q)
-        SELECT query_id, vec_id, cosine_sim, CAST(rank AS BIGINT) AS rank
-        FROM (
-          SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                       ORDER BY cosine_sim DESC, vec_id) AS rank
-          FROM sims)
-        WHERE rank <= 5
-        """,
+        oracle=_ann_brute_oracle(),
         bench=True,
         doc="materialized-codes ANN probe: pre-quantized table, 8x smaller scan",
     )
@@ -2936,6 +2878,81 @@ _register(
 )
 
 
+def _image_meta(fmt: str, side: int) -> F.Column:
+    """Declared ``meta`` of a constructed ``side``×``side`` image blob."""
+    return F.struct(
+        F.lit("image").alias("media_type"),
+        F.lit(fmt).alias("format"),
+        F.lit(side).alias("width"),
+        F.lit(side).alias("height"),
+        F.lit(None).cast("long").alias("duration_ms"),
+        F.lit(None).cast("string").alias("uri"),
+    ).alias("meta")
+
+
+def _audio_meta(fmt: str, duration_ms: int) -> F.Column:
+    """Declared ``meta`` of a constructed audio blob."""
+    return F.struct(
+        F.lit("audio").alias("media_type"),
+        F.lit(fmt).alias("format"),
+        F.lit(None).cast("int").alias("width"),
+        F.lit(None).cast("int").alias("height"),
+        F.lit(duration_ms).alias("duration_ms").cast("long"),
+        F.lit(None).cast("string").alias("uri"),
+    ).alias("meta")
+
+
+def _lut_media(
+    spark: SparkSession,
+    sf_dir: str,
+    blob: Callable[[int], bytes],
+    key: str,
+    meta: F.Column,
+) -> DataFrame:
+    """One media row per document whose content is ``blob(n_chars % 256)``,
+    looked up in a driver-built 256-row table keyed on ``key``."""
+    lut = spark.createDataFrame(
+        [(v, bytearray(blob(v))) for v in range(256)],
+        f"{key} int, content binary",
+    )
+    return (
+        load_table(spark, sf_dir, "documents")
+        .select(
+            F.col("doc_id").alias("media_id"),
+            (F.col("n_chars") % 256).cast("int").alias(key),
+        )
+        # bcast-ok: lut = constant 256-row lookup table
+        .join(F.broadcast(lut), on=key)
+        .select("media_id", "content", meta)
+    )
+
+
+def _decoded(media: DataFrame, **features: int) -> DataFrame:
+    """``decode_media`` plus the summary columns its oracles predict:
+    each keyword names an output column, its value a 1-based index
+    into ``features``."""
+    return decode_media(media).select(
+        "media_id",
+        "n_bytes",
+        "ok",
+        *(F.element_at("features", i).alias(a) for a, i in features.items()),
+    )
+
+
+def _decode_oracle(
+    n_bytes: int, feature: str = "f_gray", full_scale: str = "255.0"
+) -> str:
+    """Oracle of a uniform-signal decode: every blob has ``n_bytes``
+    bytes and decodes to exactly ``(n_chars % 256) / full_scale``."""
+    return f"""
+        SELECT doc_id AS media_id,
+               CAST({n_bytes} AS BIGINT) AS n_bytes,
+               true AS ok,
+               ROUND((n_chars % 256) / {full_scale}, 6) AS {feature}
+        FROM documents
+        """
+
+
 def _mm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Generic decode stage over REAL document bytes (format='raw' →
     the deterministic stub: 16 byte-windows, each summarized as
@@ -2949,13 +2966,7 @@ def _mm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     JSON-serialized array so the value hash has no float-formatting
     dependency."""
     media = documents_as_media(load_table(spark, sf_dir, "documents"))
-    return decode_media(media).select(
-        "media_id",
-        "n_bytes",
-        "ok",
-        F.element_at("features", 1).alias("f_first"),
-        F.element_at("features", 16).alias("f_last"),
-    )
+    return _decoded(media, f_first=1, f_last=16)
 
 
 _register(
@@ -3017,39 +3028,21 @@ def _mm_decode_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
     the mapInPandas plumbing all sit inside the hash check (verified
     bit-exact for all 256 gray values against python round semantics).
     Upgrades the decode stage from rows-only to full-oracle evidence."""
-    docs = load_table(spark, sf_dir, "documents")
-    gray_byte = F.unhex(F.lpad(F.hex(F.col("n_chars") % 256), 2, "0"))
-    media = docs.select(
+    media = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("media_id"),
-        F.concat(F.lit(_BMP_4X4_HEADER), *([gray_byte] * 48)).alias("content"),
-        F.struct(
-            F.lit("image").alias("media_type"),
-            F.lit("bmp").alias("format"),
-            F.lit(4).alias("width"),
-            F.lit(4).alias("height"),
-            F.lit(None).cast("long").alias("duration_ms"),
-            F.lit(None).cast("string").alias("uri"),
-        ).alias("meta"),
+        F.concat(
+            F.lit(_BMP_4X4_HEADER), *([_byte_col(F.col("n_chars") % 256)] * 48)
+        ).alias("content"),
+        _image_meta("bmp", 4),
     )
-    return decode_media(media).select(
-        "media_id",
-        "n_bytes",
-        "ok",
-        F.element_at("features", 1).alias("f_gray"),
-    )
+    return _decoded(media, f_gray=1)
 
 
 _register(
     QuerySpec(
         "multimodal_decode_bmp",
         _mm_decode_bmp,
-        oracle="""
-        SELECT doc_id AS media_id,
-               CAST(102 AS BIGINT) AS n_bytes,
-               true AS ok,
-               ROUND((n_chars % 256) / 255.0, 6) AS f_gray
-        FROM documents
-        """,
+        oracle=_decode_oracle(102),
         doc="REAL-codec decode, oracle-checked: constructed BMPs, predicted features",
     )
 )
@@ -3119,52 +3112,16 @@ def _mm_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell arithmetically — decode is bit-exact for uniform gray under
     all-ones quantization (see :func:`_uniform_gray_jpeg`).  At scale
     the broadcast is 256 × 176 B; the decode stays a map-only stage."""
-    from square_etl_spark.operators.multimodal import decode_media
-
-    docs = load_table(spark, sf_dir, "documents")
-    lut = spark.createDataFrame(
-        [(v, bytearray(_uniform_gray_jpeg(v))) for v in range(256)],
-        "gray int, content binary",
-    )
-    media = (
-        docs.select(
-            F.col("doc_id").alias("media_id"),
-            (F.col("n_chars") % 256).cast("int").alias("gray"),
-        )
-        # bcast-ok: lut = constant 256-row lookup table
-        .join(F.broadcast(lut), on="gray")
-        .select(
-            "media_id",
-            "content",
-            F.struct(
-                F.lit("image").alias("media_type"),
-                F.lit("jpeg").alias("format"),
-                F.lit(16).alias("width"),
-                F.lit(16).alias("height"),
-                F.lit(None).cast("long").alias("duration_ms"),
-                F.lit(None).cast("string").alias("uri"),
-            ).alias("meta"),
-        )
-    )
-    return decode_media(media).select(
-        "media_id",
-        "n_bytes",
-        "ok",
-        F.element_at("features", 1).alias("f_gray"),
-    )
+    meta = _image_meta("jpeg", 16)
+    media = _lut_media(spark, sf_dir, _uniform_gray_jpeg, "gray", meta)
+    return _decoded(media, f_gray=1)
 
 
 _register(
     QuerySpec(
         "multimodal_decode_jpeg",
         _mm_decode_jpeg,
-        oracle="""
-        SELECT doc_id AS media_id,
-               CAST(176 AS BIGINT) AS n_bytes,
-               true AS ok,
-               ROUND((n_chars % 256) / 255.0, 6) AS f_gray
-        FROM documents
-        """,
+        oracle=_decode_oracle(176),
         doc="REAL JPEG codec decode, oracle-checked: entropy pipeline end-to-end",
         bench=True,  # r05: the Arrow decode stage earns a recorded number
     )
@@ -3210,52 +3167,15 @@ def _mm_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     the first grid cell arithmetically — decode is bit-exact for
     uniform gray.  Completes the oracle-checked codec family
     (BMP/TIFF/JPEG/GIF/WAV/FLAC) with the DEFLATE container."""
-    from square_etl_spark.operators.multimodal import decode_media
-
-    docs = load_table(spark, sf_dir, "documents")
-    lut = spark.createDataFrame(
-        [(v, bytearray(_uniform_gray_png(v))) for v in range(256)],
-        "gray int, content binary",
-    )
-    media = (
-        docs.select(
-            F.col("doc_id").alias("media_id"),
-            (F.col("n_chars") % 256).cast("int").alias("gray"),
-        )
-        # bcast-ok: lut = constant 256-row lookup table
-        .join(F.broadcast(lut), on="gray")
-        .select(
-            "media_id",
-            "content",
-            F.struct(
-                F.lit("image").alias("media_type"),
-                F.lit("png").alias("format"),
-                F.lit(4).alias("width"),
-                F.lit(4).alias("height"),
-                F.lit(None).cast("long").alias("duration_ms"),
-                F.lit(None).cast("string").alias("uri"),
-            ).alias("meta"),
-        )
-    )
-    return decode_media(media).select(
-        "media_id",
-        "n_bytes",
-        "ok",
-        F.element_at("features", 1).alias("f_gray"),
-    )
+    media = _lut_media(spark, sf_dir, _uniform_gray_png, "gray", _image_meta("png", 4))
+    return _decoded(media, f_gray=1)
 
 
 _register(
     QuerySpec(
         "multimodal_decode_png",
         _mm_decode_png,
-        oracle="""
-        SELECT doc_id AS media_id,
-               CAST(128 AS BIGINT) AS n_bytes,
-               true AS ok,
-               ROUND((n_chars % 256) / 255.0, 6) AS f_gray
-        FROM documents
-        """,
+        oracle=_decode_oracle(128),
         doc="REAL PNG codec decode, oracle-checked: zlib inflate + unfilter end-to-end",
     )
 )
@@ -3312,52 +3232,15 @@ def _mm_decode_webp(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetically — decode is bit-exact for uniform gray.  Closes the
     r12 verdict's webp gap: the probe already detected webp; now the
     lossless payload decodes (lossy VP8 stays a declared stub)."""
-    from square_etl_spark.operators.multimodal import decode_media
-
-    docs = load_table(spark, sf_dir, "documents")
-    lut = spark.createDataFrame(
-        [(v, bytearray(_uniform_gray_webp(v))) for v in range(256)],
-        "gray int, content binary",
-    )
-    media = (
-        docs.select(
-            F.col("doc_id").alias("media_id"),
-            (F.col("n_chars") % 256).cast("int").alias("gray"),
-        )
-        # bcast-ok: lut = constant 256-row lookup table
-        .join(F.broadcast(lut), on="gray")
-        .select(
-            "media_id",
-            "content",
-            F.struct(
-                F.lit("image").alias("media_type"),
-                F.lit("webp").alias("format"),
-                F.lit(4).alias("width"),
-                F.lit(4).alias("height"),
-                F.lit(None).cast("long").alias("duration_ms"),
-                F.lit(None).cast("string").alias("uri"),
-            ).alias("meta"),
-        )
-    )
-    return decode_media(media).select(
-        "media_id",
-        "n_bytes",
-        "ok",
-        F.element_at("features", 1).alias("f_gray"),
-    )
+    media = _lut_media(spark, sf_dir, _uniform_gray_webp, "gray", _image_meta("webp", 4))
+    return _decoded(media, f_gray=1)
 
 
 _register(
     QuerySpec(
         "multimodal_decode_webp",
         _mm_decode_webp,
-        oracle="""
-        SELECT doc_id AS media_id,
-               CAST(128 AS BIGINT) AS n_bytes,
-               true AS ok,
-               ROUND((n_chars % 256) / 255.0, 6) AS f_gray
-        FROM documents
-        """,
+        oracle=_decode_oracle(128),
         doc="REAL WebP-lossless (VP8L) decode, oracle-checked: prefix codes + pixel loop end-to-end",
     )
 )
@@ -3403,42 +3286,22 @@ def _mm_decode_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``ROUND(v/255.0, 6)``, predicted arithmetically by DuckDB — same
     uniform-gray trick as :func:`_mm_decode_bmp`, but the bytes ride
     the compression path."""
-    from square_etl_spark.operators.multimodal import decode_media
-
     prefix, suffix = _tiff_4x4_parts()
-    docs = load_table(spark, sf_dir, "documents")
-    gray_byte = F.unhex(F.lpad(F.hex(F.col("n_chars") % 256), 2, "0"))
-    media = docs.select(
+    media = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("media_id"),
-        F.concat(F.lit(prefix), gray_byte, F.lit(suffix)).alias("content"),
-        F.struct(
-            F.lit("image").alias("media_type"),
-            F.lit("tiff").alias("format"),
-            F.lit(4).alias("width"),
-            F.lit(4).alias("height"),
-            F.lit(None).cast("long").alias("duration_ms"),
-            F.lit(None).cast("string").alias("uri"),
-        ).alias("meta"),
+        F.concat(
+            F.lit(prefix), _byte_col(F.col("n_chars") % 256), F.lit(suffix)
+        ).alias("content"),
+        _image_meta("tiff", 4),
     )
-    return decode_media(media).select(
-        "media_id",
-        "n_bytes",
-        "ok",
-        F.element_at("features", 1).alias("f_gray"),
-    )
+    return _decoded(media, f_gray=1)
 
 
 _register(
     QuerySpec(
         "multimodal_decode_tiff",
         _mm_decode_tiff,
-        oracle="""
-        SELECT doc_id AS media_id,
-               CAST(124 AS BIGINT) AS n_bytes,
-               true AS ok,
-               ROUND((n_chars % 256) / 255.0, 6) AS f_gray
-        FROM documents
-        """,
+        oracle=_decode_oracle(124),
         doc="REAL TIFF codec decode, oracle-checked: PackBits strip end-to-end",
     )
 )
@@ -3468,44 +3331,23 @@ def _mm_decode_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
     verified tie-free for all 256 sample values (s=256·odd would hit a
     half-way case; s<256 never does).  Upgrades the audio side of the
     codec rack from pytest-only to full-oracle evidence."""
-    from square_etl_spark.operators.multimodal import decode_media
-
-    docs = load_table(spark, sf_dir, "documents")
     sample = F.concat(  # little-endian 16-bit: low byte varies, high 0
-        F.unhex(F.lpad(F.hex(F.col("n_chars") % 256), 2, "0")),
+        _byte_col(F.col("n_chars") % 256),
         F.lit(b"\x00"),
     )
-    media = docs.select(
+    media = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("media_id"),
         F.concat(F.lit(_WAV_16BIT_HEADER), *([sample] * 32)).alias("content"),
-        F.struct(
-            F.lit("audio").alias("media_type"),
-            F.lit("wav").alias("format"),
-            F.lit(None).cast("int").alias("width"),
-            F.lit(None).cast("int").alias("height"),
-            F.lit(4).alias("duration_ms").cast("long"),
-            F.lit(None).cast("string").alias("uri"),
-        ).alias("meta"),
+        _audio_meta("wav", 4),
     )
-    return decode_media(media).select(
-        "media_id",
-        "n_bytes",
-        "ok",
-        F.element_at("features", 1).alias("f_rms"),
-    )
+    return _decoded(media, f_rms=1)
 
 
 _register(
     QuerySpec(
         "multimodal_decode_wav",
         _mm_decode_wav,
-        oracle="""
-        SELECT doc_id AS media_id,
-               CAST(108 AS BIGINT) AS n_bytes,
-               true AS ok,
-               ROUND((n_chars % 256) / 32768.0, 6) AS f_rms
-        FROM documents
-        """,
+        oracle=_decode_oracle(108, "f_rms", "32768.0"),
         doc="REAL WAV codec decode, oracle-checked: constructed PCM, predicted RMS",
     )
 )
@@ -3550,52 +3392,15 @@ def _mm_decode_flac(spark: SparkSession, sf_dir: str) -> DataFrame:
     and DuckDB predicts the RMS arithmetically — exact for a constant
     signal (see :func:`_mm_decode_wav`).  At scale the broadcast is
     256 × 55 B; the decode stays a map-only stage."""
-    from square_etl_spark.operators.multimodal import decode_media
-
-    docs = load_table(spark, sf_dir, "documents")
-    lut = spark.createDataFrame(
-        [(s, bytearray(_constant_flac(s))) for s in range(256)],
-        "sval int, content binary",
-    )
-    media = (
-        docs.select(
-            F.col("doc_id").alias("media_id"),
-            (F.col("n_chars") % 256).cast("int").alias("sval"),
-        )
-        # bcast-ok: lut = constant 256-row lookup table
-        .join(F.broadcast(lut), on="sval")
-        .select(
-            "media_id",
-            "content",
-            F.struct(
-                F.lit("audio").alias("media_type"),
-                F.lit("flac").alias("format"),
-                F.lit(None).cast("int").alias("width"),
-                F.lit(None).cast("int").alias("height"),
-                F.lit(24).alias("duration_ms").cast("long"),
-                F.lit(None).cast("string").alias("uri"),
-            ).alias("meta"),
-        )
-    )
-    return decode_media(media).select(
-        "media_id",
-        "n_bytes",
-        "ok",
-        F.element_at("features", 1).alias("f_rms"),
-    )
+    media = _lut_media(spark, sf_dir, _constant_flac, "sval", _audio_meta("flac", 24))
+    return _decoded(media, f_rms=1)
 
 
 _register(
     QuerySpec(
         "multimodal_decode_flac",
         _mm_decode_flac,
-        oracle="""
-        SELECT doc_id AS media_id,
-               CAST(55 AS BIGINT) AS n_bytes,
-               true AS ok,
-               ROUND((n_chars % 256) / 32768.0, 6) AS f_rms
-        FROM documents
-        """,
+        oracle=_decode_oracle(55, "f_rms", "32768.0"),
         doc="REAL FLAC codec decode, oracle-checked: CRC-verified frames end-to-end",
     )
 )
@@ -3959,16 +3764,7 @@ def _mm_decode_gif_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     uses (the reference has no media decode — this is §2.10 extension
     surface; per-row work is an Arrow stage here, and blobs never
     join a shuffle)."""
-    from square_etl_spark.operators.multimodal import decode_media
-
-    media = _gif_2frame_media(spark, sf_dir)
-    return decode_media(media).select(
-        "media_id",
-        "n_bytes",
-        "ok",
-        F.element_at("features", 1).alias("f_first"),
-        F.element_at("features", 16).alias("f_last"),
-    )
+    return _decoded(_gif_2frame_media(spark, sf_dir), f_first=1, f_last=16)
 
 
 _register(
@@ -4153,14 +3949,7 @@ def _mm_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(
             F.lit(b"P6\n2 2\n255\n"), bg, bg, bg, zero3, zero3, bh, bh, bh
         ).alias("content"),
-        F.struct(
-            F.lit("image").alias("media_type"),
-            F.lit("ppm").alias("format"),
-            F.lit(2).alias("width"),
-            F.lit(2).alias("height"),
-            F.lit(None).cast("long").alias("duration_ms"),
-            F.lit(None).cast("string").alias("uri"),
-        ).alias("meta"),
+        _image_meta("ppm", 2),
     )
     resized = resize_images(media, width=4, height=4)
     return resized.select(
@@ -4304,19 +4093,13 @@ def _kmv_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
-    QuerySpec(
-        "approx_distinct_kmv",
-        _kmv_users,
-        oracle="""
+#: one-shot bottom-64 KMV estimate of distinct users per event type over
+#: the portable 32-bit md5 hash — what the sketch and its incremental
+#: fold must both report
+_KMV_USERS_ORACLE = f"""
         WITH h AS (
           SELECT DISTINCT event_type,
-            list_sum(list_transform(generate_series(1, 8),
-              p -> (CAST(strpos('0123456789abcdef',
-                      substr(md5(CAST(user_id AS VARCHAR)), p, 1))
-                    AS BIGINT) - 1)
-                   * (CAST(1 AS BIGINT) << (4 * (8 - CAST(p AS INTEGER))))))
-              AS hv
+            {_md5_int("CAST(user_id AS VARCHAR)")} AS hv
           FROM events),
         r AS (
           SELECT event_type, hv,
@@ -4331,7 +4114,14 @@ _register(
                     ELSE ROUND(63.0 * 4294967296.0 / NULLIF(kth, 0)) END AS BIGINT)
                  AS approx_users
         FROM k ORDER BY event_type
-        """,
+        """
+
+
+_register(
+    QuerySpec(
+        "approx_distinct_kmv",
+        _kmv_users,
+        oracle=_KMV_USERS_ORACLE,
         doc="KMV bottom-k distinct sketch: deterministic, oracle-recomputed estimate",
     )
 )
@@ -4366,30 +4156,7 @@ _register(
     QuerySpec(
         "incremental_kmv_users",
         _incremental_kmv_users,
-        oracle="""
-        WITH h AS (
-          SELECT DISTINCT event_type,
-            list_sum(list_transform(generate_series(1, 8),
-              p -> (CAST(strpos('0123456789abcdef',
-                      substr(md5(CAST(user_id AS VARCHAR)), p, 1))
-                    AS BIGINT) - 1)
-                   * (CAST(1 AS BIGINT) << (4 * (8 - CAST(p AS INTEGER))))))
-              AS hv
-          FROM events),
-        r AS (
-          SELECT event_type, hv,
-                 ROW_NUMBER() OVER (PARTITION BY event_type
-                                    ORDER BY hv) AS rk
-          FROM h WHERE hv IS NOT NULL),
-        k AS (
-          SELECT event_type, COUNT(*) AS n, MAX(hv) AS kth
-          FROM r WHERE rk <= 64 GROUP BY event_type)
-        SELECT event_type,
-               CAST(CASE WHEN n < 64 THEN n
-                    ELSE ROUND(63.0 * 4294967296.0 / NULLIF(kth, 0)) END AS BIGINT)
-                 AS approx_users
-        FROM k ORDER BY event_type
-        """,
+        oracle=_KMV_USERS_ORACLE,
         bench=True,
         doc="incremental distinct via KMV bottom-k monoid: maintain ≡ one-shot, FULL oracle",
     )
@@ -4420,16 +4187,11 @@ _register(
     QuerySpec(
         "weighted_sample_docs",
         _weighted_sample_docs,
-        oracle="""
+        oracle=f"""
         WITH h AS (
           SELECT doc_id, lang,
                  GREATEST(LENGTH(text), 1) AS w,
-                 list_sum(list_transform(generate_series(1, 8),
-                   p -> (CAST(strpos('0123456789abcdef',
-                           substr(md5(CAST(doc_id AS VARCHAR)), p, 1))
-                         AS BIGINT) - 1)
-                        * (CAST(1 AS BIGINT) << (4 * (8 - CAST(p AS INTEGER))))))
-                   AS hv
+                 {_md5_int("CAST(doc_id AS VARCHAR)")} AS hv
           FROM documents),
         p AS (
           SELECT doc_id, lang,
@@ -6350,16 +6112,9 @@ _register(
 )
 
 
-def _sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_table(spark, sf_dir, "events")
-    return sessionize(e, "ts", ["user_id"], gap_s=1800.0)
-
-
-_register(
-    QuerySpec(
-        "sessionize_events",
-        _sessions,
-        oracle="""
+#: gap-based session ids ``s(user_id, ts, session_id)``: a new session
+#: starts after more than 1800 s without an event
+_SESSION_IDS_CTES = """
         WITH o AS (
           SELECT user_id, ts,
                  LAG(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev
@@ -6374,7 +6129,19 @@ _register(
           SELECT user_id, ts,
                  SUM(ns) OVER (PARTITION BY user_id ORDER BY ts
                                ROWS UNBOUNDED PRECEDING) AS session_id
-          FROM m)
+          FROM m)"""
+
+
+def _sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    e = load_table(spark, sf_dir, "events")
+    return sessionize(e, "ts", ["user_id"], gap_s=1800.0)
+
+
+_register(
+    QuerySpec(
+        "sessionize_events",
+        _sessions,
+        oracle=f"""{_SESSION_IDS_CTES}
         SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
                MIN(ts) AS session_start, MAX(ts) AS session_end,
                COUNT(*) AS n_events
@@ -6398,22 +6165,7 @@ _register(
         # gap — a window ending at T absorbs an event starting at T;
         # measured + pinned in test_temporal_ops), identical to
         # sessionize_events — so the island SQL uses the same > test.
-        oracle="""
-        WITH o AS (
-          SELECT user_id, ts,
-                 LAG(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev
-          FROM events),
-        m AS (
-          SELECT user_id, ts,
-                 CASE WHEN prev IS NULL
-                           OR epoch(ts) - epoch(prev) > 1800
-                      THEN 1 ELSE 0 END AS ns
-          FROM o),
-        s AS (
-          SELECT user_id, ts,
-                 SUM(ns) OVER (PARTITION BY user_id ORDER BY ts
-                               ROWS UNBOUNDED PRECEDING) AS session_id
-          FROM m)
+        oracle=f"""{_SESSION_IDS_CTES}
         SELECT user_id,
                MIN(ts) AS session_start, MAX(ts) AS session_end,
                COUNT(*) AS n_events
@@ -6648,36 +6400,27 @@ def _lloyd_ctes(pfx: str, src: str, k: int) -> str:
         {pfx}c2 AS ({update(pfx + "a2")})"""
 
 
-def _ann_ivfpq_oracle(
-    m: int = 4, ds: int = 16, ksub: int = 4, n_probe: int = 2,
-    k: int = 5, rescore_factor: int = 4,
+def _ivfpq_probe_tail(
+    cent: str, cells: str, sub_chains: str, codes_union: str, m: int,
+    n_probe: int, k: int, rescore_factor: int,
 ) -> str:
-    """Full IVF-PQ recomputation: coarse Lloyd (shared _kmeans_ctes →
-    a2/c2), one Lloyd chain per PQ subspace, code assignment, probe
-    cells, decimal-exact ADC, candidate cut, exact rescore — the
-    whole composition, so a green row certifies the PQ path itself
-    (adc_sim is in the output), not just the rescored ranks."""
-    sub_chains = ",\n".join(
-        f"""slf{s} AS (
-          SELECT vid, dim, val FROM lf
-          WHERE dim >= {s * ds} AND dim < {(s + 1) * ds}),
-        {_lloyd_ctes(f'p{s}_', f'slf{s}', ksub)}"""
-        for s in range(m)
-    )
-    codes_union = " UNION ALL ".join(
-        f"SELECT vid, {s} AS s, c FROM p{s}_a2" for s in range(m)
-    )
+    """The search half of both IVF-PQ oracles, query vectors to ranked
+    output: the first ``k`` vectors probe their ``n_probe`` nearest
+    coarse centroids in ``cent``; the members of the probed cells
+    (``cells(vid, c)``) are scored by decimal-exact ADC over the PQ
+    codes ``codes_union`` and the ``m`` subspace codebooks ``p{s}_c2``
+    that ``sub_chains`` trains; the top ``k * rescore_factor``
+    candidates are rescored by exact cosine."""
     cb_union = " UNION ALL ".join(
         f"SELECT {s} AS s, c, dim, cval FROM p{s}_c2" for s in range(m)
     )
     return f"""
-        WITH {_kmeans_ctes()},
         qlf AS (SELECT vid AS query_id, dim, val FROM lf WHERE vid < {k}),
         qprobe_d AS (
-          SELECT qlf.query_id, c2.c,
-                 SUM(CAST(ROUND((qlf.val - c2.cval) * (qlf.val - c2.cval), 9)
+          SELECT qlf.query_id, {cent}.c,
+                 SUM(CAST(ROUND((qlf.val - {cent}.cval) * (qlf.val - {cent}.cval), 9)
                           AS DECIMAL(38,9))) AS d2
-          FROM qlf JOIN c2 ON qlf.dim = c2.dim
+          FROM qlf JOIN {cent} ON qlf.dim = {cent}.dim
           GROUP BY 1, 2),
         probe AS (
           SELECT query_id, c FROM (
@@ -6706,8 +6449,8 @@ def _ann_ivfpq_oracle(
           FROM qlf JOIN cb ON qlf.dim = cb.dim
           GROUP BY 1, 2, 3),
         candp AS (
-          SELECT probe.query_id, a2.vid
-          FROM probe JOIN a2 ON probe.c = a2.c),
+          SELECT probe.query_id, {cells}.vid
+          FROM probe JOIN {cells} ON probe.c = {cells}.c),
         adcn AS (
           SELECT cd.query_id, cd.vid, SUM(dt.t) AS num
           FROM candp cd
@@ -6749,6 +6492,31 @@ def _ann_ivfpq_oracle(
                   ORDER BY cosine_sim DESC, vec_id) AS rank FROM ex)
         WHERE rank <= {k}
         """
+
+
+def _ann_ivfpq_oracle(
+    m: int = 4, ds: int = 16, ksub: int = 4, n_probe: int = 2,
+    k: int = 5, rescore_factor: int = 4,
+) -> str:
+    """Full IVF-PQ recomputation: coarse Lloyd (shared _kmeans_ctes →
+    a2/c2), one Lloyd chain per PQ subspace, code assignment, probe
+    cells, decimal-exact ADC, candidate cut, exact rescore — the
+    whole composition, so a green row certifies the PQ path itself
+    (adc_sim is in the output), not just the rescored ranks."""
+    sub_chains = ",\n".join(
+        f"""slf{s} AS (
+          SELECT vid, dim, val FROM lf
+          WHERE dim >= {s * ds} AND dim < {(s + 1) * ds}),
+        {_lloyd_ctes(f'p{s}_', f'slf{s}', ksub)}"""
+        for s in range(m)
+    )
+    codes_union = " UNION ALL ".join(
+        f"SELECT vid, {s} AS s, c FROM p{s}_a2" for s in range(m)
+    )
+    return f"""
+        WITH {_kmeans_ctes()},""" + _ivfpq_probe_tail(
+        "c2", "a2", sub_chains, codes_union, m, n_probe, k, rescore_factor
+    )
 
 
 def _ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6829,9 +6597,6 @@ def _ann_ivfpq_incr_oracle(
         [f"SELECT vid, {s} AS s, c FROM p{s}_a2" for s in range(m)]
         + [f"SELECT vid, {s} AS s, c FROM xsa{s}" for s in range(m)]
     )
-    cb_union = " UNION ALL ".join(
-        f"SELECT {s} AS s, c, dim, cval FROM p{s}_c2" for s in range(m)
-    )
     return f"""
         WITH lf AS (
           SELECT vec_id AS vid,
@@ -6843,84 +6608,10 @@ def _ann_ivfpq_incr_oracle(
         {_lloyd_ctes('co_', 'blf', n_cells)},
         xca AS ({assign_vs('xlf', 'co_c2')}),
         cells AS (SELECT vid, c FROM co_a2
-                  UNION ALL SELECT vid, c FROM xca),
-        qlf AS (SELECT vid AS query_id, dim, val FROM lf WHERE vid < {k}),
-        qprobe_d AS (
-          SELECT qlf.query_id, co_c2.c,
-                 SUM(CAST(ROUND((qlf.val - co_c2.cval)
-                                * (qlf.val - co_c2.cval), 9)
-                          AS DECIMAL(38,9))) AS d2
-          FROM qlf JOIN co_c2 ON qlf.dim = co_c2.dim
-          GROUP BY 1, 2),
-        probe AS (
-          SELECT query_id, c FROM (
-            SELECT query_id, c,
-                   ROW_NUMBER() OVER (PARTITION BY query_id
-                                      ORDER BY d2, c) AS rn
-            FROM qprobe_d) WHERE rn <= {n_probe}),
-        {sub_chains},
-        codes AS ({codes_union}),
-        cb AS ({cb_union}),
-        cn2 AS (
-          SELECT s, c,
-                 SUM(CAST(ROUND(cval * cval, 9) AS DECIMAL(38,9))) AS cn2
-          FROM cb GROUP BY s, c),
-        rnorm AS (
-          SELECT codes.vid, SQRT(CAST(SUM(cn2.cn2) AS DOUBLE)) AS rnorm
-          FROM codes JOIN cn2 USING (s, c) GROUP BY codes.vid),
-        qn AS (
-          SELECT query_id,
-                 SQRT(CAST(SUM(CAST(ROUND(val * val, 9) AS DECIMAL(38,9)))
-                           AS DOUBLE)) AS qnorm
-          FROM qlf GROUP BY query_id),
-        dt AS (
-          SELECT qlf.query_id, cb.s, cb.c,
-                 SUM(CAST(ROUND(qlf.val * cb.cval, 9) AS DECIMAL(38,9))) AS t
-          FROM qlf JOIN cb ON qlf.dim = cb.dim
-          GROUP BY 1, 2, 3),
-        candp AS (
-          SELECT probe.query_id, cells.vid
-          FROM probe JOIN cells ON probe.c = cells.c),
-        adcn AS (
-          SELECT cd.query_id, cd.vid, SUM(dt.t) AS num
-          FROM candp cd
-          JOIN codes ON codes.vid = cd.vid
-          JOIN dt ON dt.query_id = cd.query_id
-                 AND dt.s = codes.s AND dt.c = codes.c
-          GROUP BY 1, 2),
-        adc AS (
-          SELECT a.query_id, a.vid,
-                 CASE WHEN qn.qnorm * rnorm.rnorm > 0
-                      THEN ROUND(CAST(a.num AS DOUBLE)
-                                 / /*nz: enclosing CASE pins the
-                                      product positive — mirror of
-                                      topk_from_pq's guard*/
-                                   (qn.qnorm * rnorm.rnorm), 6)
-                      ELSE 0.0 END AS adc_sim
-          FROM adcn a
-          JOIN qn USING (query_id)
-          JOIN rnorm ON rnorm.vid = a.vid),
-        candk AS (
-          SELECT query_id, vid, adc_sim FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                      ORDER BY adc_sim DESC, vid) AS cr
-            FROM adc) WHERE cr <= {k * rescore_factor}),
-        qv AS (
-          SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qvec
-          FROM embeddings WHERE vec_id < {k}),
-        ex AS (
-          SELECT ck.query_id, ck.vid AS vec_id, ck.adc_sim,
-                 ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-                                              qv.qvec), 6) AS cosine_sim
-          FROM candk ck
-          JOIN embeddings e ON e.vec_id = ck.vid
-          JOIN qv ON qv.query_id = ck.query_id)
-        SELECT query_id, vec_id, adc_sim, cosine_sim,
-               CAST(rank AS BIGINT) AS rank
-        FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                  ORDER BY cosine_sim DESC, vec_id) AS rank FROM ex)
-        WHERE rank <= {k}
-        """
+                  UNION ALL SELECT vid, c FROM xca),""" + _ivfpq_probe_tail(
+        "co_c2", "cells", sub_chains, codes_union, m, n_probe, k,
+        rescore_factor,
+    )
 
 
 def _ann_ivfpq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7222,18 +6913,7 @@ _register(
         oracle=f"""
         WITH RECURSIVE scored AS (
           SELECT *,
-            ROUND(
-              0.5 * LEAST(ROUND(len(regexp_replace(text, '[^A-Za-z]', '', 'g')) /
-                    (CASE WHEN len(text) > 0 THEN CAST(len(text) AS DOUBLE) ELSE 1.0 END), 6) / 0.8, 1.0)
-            + 0.3 * LEAST(ROUND(len(list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-                    w -> list_contains(['the','and','of','to','is','in','that','it'], w))) /
-                    (CASE WHEN trim(text) = '' THEN 1.0
-                          WHEN len(string_split_regex(trim(text), '\\s+')) > 0
-                          THEN CAST(len(string_split_regex(trim(text), '\\s+')) AS DOUBLE)
-                          ELSE 1.0 END), 6) / 0.4, 1.0)
-            + 0.2 * (1.0 - LEAST(ROUND(len(regexp_replace(text, '[^\\.,;:!\\?]', '', 'g')) /
-                    (CASE WHEN len(text) > 0 THEN CAST(len(text) AS DOUBLE) ELSE 1.0 END), 6) / 0.2, 1.0)),
-            6) AS q
+            {_QUALITY_SCORE_SQL} AS q
           FROM documents),
         kept AS (SELECT * FROM scored WHERE q >= 0.3),
         exact_survivors AS (
@@ -7242,14 +6922,7 @@ _register(
                                          ORDER BY doc_id) AS rn
             FROM kept) WHERE rn = 1),
         {_prefix_pairs_ctes("exact_survivors").strip().rstrip()},
-        edges AS (
-          SELECT id_a AS a, id_b AS b FROM pairs
-          UNION
-          SELECT id_b, id_a FROM pairs),
-        reach AS (
-          SELECT a, b FROM edges UNION SELECT a, a FROM edges
-          UNION
-          SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
+        {_PAIR_REACH_CTES},
         clusters AS (
           SELECT a AS doc_id, MIN(b) AS cluster_id FROM reach GROUP BY a),
         clean AS (
@@ -7292,18 +6965,7 @@ _register(
         oracle=f"""
         WITH RECURSIVE scored AS (
           SELECT *,
-            ROUND(
-              0.5 * LEAST(ROUND(len(regexp_replace(text, '[^A-Za-z]', '', 'g')) /
-                    (CASE WHEN len(text) > 0 THEN CAST(len(text) AS DOUBLE) ELSE 1.0 END), 6) / 0.8, 1.0)
-            + 0.3 * LEAST(ROUND(len(list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-                    w -> list_contains(['the','and','of','to','is','in','that','it'], w))) /
-                    (CASE WHEN trim(text) = '' THEN 1.0
-                          WHEN len(string_split_regex(trim(text), '\\s+')) > 0
-                          THEN CAST(len(string_split_regex(trim(text), '\\s+')) AS DOUBLE)
-                          ELSE 1.0 END), 6) / 0.4, 1.0)
-            + 0.2 * (1.0 - LEAST(ROUND(len(regexp_replace(text, '[^\\.,;:!\\?]', '', 'g')) /
-                    (CASE WHEN len(text) > 0 THEN CAST(len(text) AS DOUBLE) ELSE 1.0 END), 6) / 0.2, 1.0)),
-            6) AS q
+            {_QUALITY_SCORE_SQL} AS q
           FROM documents),
         ranked AS (
           SELECT doc_id, rn FROM (
@@ -7314,14 +6976,7 @@ _register(
           SELECT s.* FROM scored s JOIN ranked r USING (doc_id)
           WHERE s.q >= 0.3 AND r.rn = 1),
         {_prefix_pairs_ctes("exact_survivors").strip().rstrip()},
-        edges AS (
-          SELECT id_a AS a, id_b AS b FROM pairs
-          UNION
-          SELECT id_b, id_a FROM pairs),
-        reach AS (
-          SELECT a, b FROM edges UNION SELECT a, a FROM edges
-          UNION
-          SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
+        {_PAIR_REACH_CTES},
         clusters AS (
           SELECT a AS doc_id, MIN(b) AS cluster_id FROM reach GROUP BY a),
         lab AS (
@@ -8208,9 +7863,7 @@ def _pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chunk the corpus, then pack chunks into 512-token training
     sequences via the two-phase distributed prefix sum (see
     sampling.pack_sequences — no single-partition window)."""
-    d = load_table(spark, sf_dir, "documents")
-    chunks = tx.chunk_documents(d, chunk_size=64, overlap=16)
-    return pack_sequences(chunks, budget=512).select(
+    return pack_sequences(_chunks(spark, sf_dir), budget=512).select(
         "doc_id", "chunk_idx", "n_tokens", "seq_id", "seq_offset"
     )
 
@@ -8219,18 +7872,7 @@ _register(
     QuerySpec(
         "pack_training_sequences",
         _pack,
-        oracle="""
-        WITH toks AS (
-          SELECT doc_id,
-                 list_filter(string_split_regex(trim(text), '\\s+'),
-                             w -> w <> '') AS w
-          FROM documents),
-        base AS (SELECT doc_id, w, len(w) AS n FROM toks WHERE len(w) > 0),
-        idx AS (
-          SELECT doc_id, w,
-                 UNNEST(range(0, CAST(floor((n - 1) / 48) AS BIGINT) + 1))
-                   AS chunk_idx
-          FROM base),
+        oracle=f"""{_CHUNK_IDX_CTES},
         chunks AS (
           SELECT doc_id, CAST(chunk_idx AS BIGINT) AS chunk_idx,
                  CAST(len(list_slice(w, chunk_idx * 48 + 1, chunk_idx * 48 + 64))
@@ -8553,11 +8195,10 @@ def _scd2_customer_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hist
 
 
-_register(
-    QuerySpec(
-        "scd2_customer_segment",
-        _scd2_customer_segment,
-        oracle="""
+#: the two monthly customer→segment snapshots as an SCD2 history
+#: ``hist(c_custkey, segment, valid_from, valid_to)``: versions start at
+#: value changes (LAG) and close at the next start (LEAD)
+_SCD2_HIST_CTES = """
         WITH b AS (
           SELECT c_custkey, c_mktsegment AS segment,
                  TIMESTAMP '2024-01-01 00:00:00' AS ts
@@ -8578,7 +8219,14 @@ _register(
         hist AS (
           SELECT c_custkey, segment, ts AS valid_from,
                  LEAD(ts) OVER (PARTITION BY c_custkey ORDER BY ts) AS valid_to
-          FROM starts)
+          FROM starts)"""
+
+
+_register(
+    QuerySpec(
+        "scd2_customer_segment",
+        _scd2_customer_segment,
+        oracle=f"""{_SCD2_HIST_CTES}
         SELECT c_custkey, segment, valid_from, valid_to,
                valid_to IS NULL AS is_current
         FROM hist
@@ -9304,11 +8952,9 @@ def _semantic_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
-    QuerySpec(
-        "dedup_semantic",
-        _semantic_dedup_q,
-        oracle=f"""
+#: the full SemDeDup composition: both Lloyd iterations, the cluster
+#: blocking and the first-wins cosine prune
+_SEMDEDUP_ORACLE = f"""
         WITH {_kmeans_ctes()},
         {_NV_CTE.strip()},
         t AS (
@@ -9321,7 +8967,14 @@ _register(
         SELECT t.vid AS vec_id, CAST(t.c AS BIGINT) AS cluster,
                (dup.vid IS NULL) AS kept
         FROM t LEFT JOIN dup ON t.vid = dup.vid
-        """,
+        """
+
+
+_register(
+    QuerySpec(
+        "dedup_semantic",
+        _semantic_dedup_q,
+        oracle=_SEMDEDUP_ORACLE,
         doc="SemDeDup: k-means blocks + within-cluster cosine prune, "
         "full composition recomputed by the oracle",
         bench=True,
@@ -9391,20 +9044,7 @@ _register(
     QuerySpec(
         "dedup_semantic_incremental",
         _semantic_incremental,
-        oracle=f"""
-        WITH {_kmeans_ctes()},
-        {_NV_CTE.strip()},
-        t AS (
-          SELECT nv.vec_id AS vid, nv.nv, a2.c
-          FROM nv JOIN a2 ON nv.vec_id = a2.vid),
-        dup AS (
-          SELECT DISTINCT b.vid
-          FROM t a JOIN t b ON a.c = b.c AND a.vid < b.vid
-          WHERE ROUND(list_dot_product(a.nv, b.nv), 6) >= 0.35)
-        SELECT t.vid AS vec_id, CAST(t.c AS BIGINT) AS cluster,
-               (dup.vid IS NULL) AS kept
-        FROM t LEFT JOIN dup ON t.vid = dup.vid
-        """,
+        oracle=_SEMDEDUP_ORACLE,
         doc="amortized SemDeDup: versioned centroid artifact + per-batch stored-assign prune fold ≡ one-shot (shared oracle)",
     )
 )
@@ -9684,6 +9324,40 @@ _register(
 )
 
 
+def _typo_names(customer: DataFrame) -> DataFrame:
+    """Every 17th customer name with a one-char typo at position 12."""
+    return customer.filter(F.col("c_custkey") % 17 == 0).select(
+        F.concat(
+            F.substring("c_name", 1, 11),
+            F.lit("x"),
+            F.substring("c_name", 13, 6),
+        ).alias("dirty_name")
+    )
+
+
+def _typo_matches(
+    dirty: DataFrame, clean: DataFrame, block_cap: int | None = None
+) -> DataFrame:
+    """``dirty_name`` ⋈ ``clean_name`` blocked on the last-4-chars key
+    and verified at levenshtein ≤ 1."""
+    from square_etl_spark.operators.joins import fuzzy_join_blocked
+
+    out = fuzzy_join_blocked(
+        dirty,
+        clean,
+        "dirty_name",
+        "clean_name",
+        block=lambda col: F.substring(col, 15, 4),
+        max_dist=1,
+        block_cap=block_cap,
+    )
+    return out.select(
+        F.col("l_val").alias("dirty_name"),
+        F.col("r_val").alias("clean_name"),
+        F.col("dist").cast("long").alias("dist"),
+    )
+
+
 def _fuzzy_join_names(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blocked fuzzy string join (operators/joins.fuzzy_join_blocked):
     every 17th customer name gets a deterministic one-char typo
@@ -9693,29 +9367,9 @@ def _fuzzy_join_names(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate-then-verify shape keeps this linear in block-pair count
     — never all-pairs — and the oracle recomputes blocks, distances,
     and survivors."""
-    from square_etl_spark.operators.joins import fuzzy_join_blocked
-
     c = load_table(spark, sf_dir, "customer")
-    dirty = c.filter(F.col("c_custkey") % 17 == 0).select(
-        F.concat(
-            F.substring("c_name", 1, 11),
-            F.lit("x"),
-            F.substring("c_name", 13, 6),
-        ).alias("dirty_name")
-    )
-    clean = c.select(F.col("c_name").alias("clean_name"))
-    out = fuzzy_join_blocked(
-        dirty,
-        clean,
-        "dirty_name",
-        "clean_name",
-        block=lambda col: F.substring(col, 15, 4),
-        max_dist=1,
-    )
-    return out.select(
-        F.col("l_val").alias("dirty_name"),
-        F.col("r_val").alias("clean_name"),
-        F.col("dist").cast("long").alias("dist"),
+    return _typo_matches(
+        _typo_names(c), c.select(F.col("c_name").alias("clean_name"))
     )
 
 
@@ -9869,6 +9523,24 @@ _register(
 )
 
 
+#: 800-unit grid cells of the supplier points ``s(lx, ly)``, each
+#: replicated into its 3×3 neighborhood (``lc``), and of the customer
+#: points ``c(rx, ry)`` (``rc``): equal ``(cx, cy)`` pairs every point
+#: within one cell width
+_GRID_CELL_CTES = """d AS (SELECT UNNEST([-1, 0, 1]) AS dx),
+        e AS (SELECT UNNEST([-1, 0, 1]) AS dy),
+        lc AS (
+          SELECT s_suppkey, lx, ly,
+                 CAST(FLOOR(lx / 800) AS BIGINT) + dx AS cx,
+                 CAST(FLOOR(ly / 800) AS BIGINT) + dy AS cy
+          FROM s, d, e),
+        rc AS (
+          SELECT c_custkey, rx, ry,
+                 CAST(FLOOR(rx / 800) AS BIGINT) AS cx,
+                 CAST(FLOOR(ry / 800) AS BIGINT) AS cy
+          FROM c)"""
+
+
 def _spatial_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grid-blocked spatial proximity join
     (operators/joins.spatial_bin_join): suppliers and customers get
@@ -9899,7 +9571,7 @@ _register(
     QuerySpec(
         "spatial_join_proximity",
         _spatial_join,
-        oracle="""
+        oracle=f"""
         WITH s AS (
           SELECT s_suppkey,
                  (s_suppkey * 7919) % 10000 AS lx,
@@ -9910,18 +9582,7 @@ _register(
                  (c_custkey * 7919) % 10000 AS rx,
                  (c_custkey * 104729) % 10000 AS ry
           FROM customer),
-        d AS (SELECT UNNEST([-1, 0, 1]) AS dx),
-        e AS (SELECT UNNEST([-1, 0, 1]) AS dy),
-        lc AS (
-          SELECT s_suppkey, lx, ly,
-                 CAST(FLOOR(lx / 800) AS BIGINT) + dx AS cx,
-                 CAST(FLOOR(ly / 800) AS BIGINT) + dy AS cy
-          FROM s, d, e),
-        rc AS (
-          SELECT c_custkey, rx, ry,
-                 CAST(FLOOR(rx / 800) AS BIGINT) AS cx,
-                 CAST(FLOOR(ry / 800) AS BIGINT) AS cy
-          FROM c)
+        {_GRID_CELL_CTES}
         SELECT s_suppkey, c_custkey,
                CAST((lx - rx) * (lx - rx) + (ly - ry) * (ly - ry)
                     AS BIGINT) AS dist2
@@ -9949,16 +9610,8 @@ def _fuzzy_join_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hot-block list FILTERED to that one key (≤1 broadcast row),
     which is bounded at any scale; the data-shaped branch keeps the
     hash anti join."""
-    from square_etl_spark.operators.joins import fuzzy_join_blocked
-
     c = load_table(spark, sf_dir, "customer")
-    dirty = c.filter(F.col("c_custkey") % 17 == 0).select(
-        F.concat(
-            F.substring("c_name", 1, 11),
-            F.lit("x"),
-            F.substring("c_name", 13, 6),
-        ).alias("dirty_name")
-    ).unionByName(
+    dirty = _typo_names(c).unionByName(
         c.filter(F.col("c_custkey") % 5 == 0).select(
             F.lit("HOT").alias("dirty_name")
         )
@@ -9968,20 +9621,7 @@ def _fuzzy_join_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("HOTX").alias("clean_name")
         )
     )
-    out = fuzzy_join_blocked(
-        dirty,
-        clean,
-        "dirty_name",
-        "clean_name",
-        block=lambda col: F.substring(col, 15, 4),
-        max_dist=1,
-        block_cap=500,
-    )
-    return out.select(
-        F.col("l_val").alias("dirty_name"),
-        F.col("r_val").alias("clean_name"),
-        F.col("dist").cast("long").alias("dist"),
-    )
+    return _typo_matches(dirty, clean, block_cap=500)
 
 
 _register(
@@ -10062,7 +9702,7 @@ _register(
     QuerySpec(
         "spatial_join_capped_hot_cell",
         _spatial_join_capped,
-        oracle="""
+        oracle=f"""
         WITH s AS (
           SELECT s_suppkey,
                  CASE WHEN s_suppkey % 3 = 0 THEN 52
@@ -10077,18 +9717,7 @@ _register(
                  CASE WHEN c_custkey % 3 = 0 THEN 50
                       ELSE (c_custkey * 104729) % 10000 END AS ry
           FROM customer),
-        d AS (SELECT UNNEST([-1, 0, 1]) AS dx),
-        e AS (SELECT UNNEST([-1, 0, 1]) AS dy),
-        lc AS (
-          SELECT s_suppkey, lx, ly,
-                 CAST(FLOOR(lx / 800) AS BIGINT) + dx AS cx,
-                 CAST(FLOOR(ly / 800) AS BIGINT) + dy AS cy
-          FROM s, d, e),
-        rc AS (
-          SELECT c_custkey, rx, ry,
-                 CAST(FLOOR(rx / 800) AS BIGINT) AS cx,
-                 CAST(FLOOR(ry / 800) AS BIGINT) AS cy
-          FROM c),
+        {_GRID_CELL_CTES},
         hot AS (
           SELECT cx, cy FROM
             (SELECT cx, cy, COUNT(*) AS ln FROM lc GROUP BY cx, cy)
@@ -10121,23 +9750,8 @@ def _scd2_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     history declaratively (LAG change points + LEAD close, as the
     scd2 oracle does) and applies the same half-open window join."""
     from square_etl_spark.operators.joins import interval_lookup
-    from square_etl_spark.sinks.merge import scd2_merge
 
-    c = load_table(spark, sf_dir, "customer")
-    b1 = c.select(
-        "c_custkey",
-        F.col("c_mktsegment").alias("segment"),
-        F.lit("2024-01-01 00:00:00").cast("timestamp").alias("ts"),
-    )
-    b2 = c.select(
-        "c_custkey",
-        F.when(F.col("c_custkey") % 3 == 0, F.lit("MOVED"))
-        .otherwise(F.col("c_mktsegment"))
-        .alias("segment"),
-        F.lit("2024-02-01 00:00:00").cast("timestamp").alias("ts"),
-    )
-    hist = scd2_merge(None, b1, ["c_custkey"], "ts", ["segment"])
-    hist = scd2_merge(hist, b2, ["c_custkey"], "ts", ["segment"])
+    hist = _scd2_customer_segment(spark, sf_dir)
 
     o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderkey") % 10 == 0
@@ -10164,28 +9778,7 @@ _register(
     QuerySpec(
         "scd2_point_in_time",
         _scd2_point_in_time,
-        oracle="""
-        WITH b AS (
-          SELECT c_custkey, c_mktsegment AS segment,
-                 TIMESTAMP '2024-01-01 00:00:00' AS ts
-          FROM customer
-          UNION ALL
-          SELECT c_custkey,
-                 CASE WHEN c_custkey % 3 = 0 THEN 'MOVED'
-                      ELSE c_mktsegment END,
-                 TIMESTAMP '2024-02-01 00:00:00'
-          FROM customer),
-        v AS (
-          SELECT c_custkey, segment, ts,
-                 LAG(segment) OVER (PARTITION BY c_custkey ORDER BY ts) AS prev
-          FROM b),
-        starts AS (
-          SELECT c_custkey, segment, ts FROM v
-          WHERE prev IS NULL OR segment <> prev),
-        hist AS (
-          SELECT c_custkey, segment, ts AS valid_from,
-                 LEAD(ts) OVER (PARTITION BY c_custkey ORDER BY ts) AS valid_to
-          FROM starts),
+        oracle=f"""{_SCD2_HIST_CTES},
         facts AS (
           SELECT o_orderkey, o_custkey AS c_custkey,
                  CASE WHEN o_orderkey % 3 = 0
@@ -10996,63 +10589,16 @@ def _minhash_probe_oracle(
     output for an aggregate (the fuzzy-decontamination use);
     ``shingle_n`` mirrors the operator's shingle granularity (3 =
     near-dup trigrams, 1 = the paraphrase-robust unigram setting)."""
-    from square_etl_spark.operators.dedup import (
-        MINHASH_A,
-        MINHASH_B,
-        MINHASH_P,
-    )
-
     if shingle_n not in (1, 3):
         raise ValueError(f"oracle supports shingle_n in (1, 3): {shingle_n}")
-    a = "[" + ", ".join(f"CAST({v} AS BIGINT)" for v in MINHASH_A) + "]"
-    b = "[" + ", ".join(f"CAST({v} AS BIGINT)" for v in MINHASH_B) + "]"
-    mask = (1 << 57) - 1
-    hex32 = (
-        "list_sum(list_transform(generate_series(1, 8),"
-        " p -> (CAST(strpos('0123456789abcdef',"
-        " substr(md5(x), p, 1)) AS BIGINT) - 1)"
-        " * (CAST(1 AS BIGINT) << (4 * (8 - CAST(p AS INTEGER))))))"
-    )
-    if shingle_n == 1:
-        # unigram: the shingle IS the 32-bit word hash, no 31-fold
-        shingle_cte = f"""
+    # unigram: the shingle IS the 32-bit word hash, no 31-fold
+    unigrams = f"""
         shl AS (
           SELECT doc_id,
-                 list_distinct(list_transform(w, x -> {hex32})) AS sh
+                 list_distinct(list_transform(w, x -> {_md5_int('x')})) AS sh
           FROM t WHERE len(w) >= 1),"""
-    else:
-        shingle_cte = f"""
-        tw AS (
-          SELECT doc_id,
-                 list_transform(w, x -> {hex32}) AS hw
-          FROM t WHERE len(w) >= 3),
-        shl AS (
-          SELECT doc_id,
-                 list_distinct(list_transform(
-                   generate_series(1, len(hw) - 2),
-                   i -> ((((hw[CAST(i AS INTEGER)] * 31
-                            + hw[CAST(i + 1 AS INTEGER)]) & {mask}) * 31
-                          + hw[CAST(i + 2 AS INTEGER)]) & {mask}))) AS sh
-          FROM tw),"""
-    return rf"""
-        WITH t AS (
-          SELECT doc_id,
-                 list_filter(regexp_split_to_array(trim(text), '\s+'),
-                             w -> w <> '') AS w
-          FROM documents),{shingle_cte}
-        mh AS (
-          SELECT doc_id, sh,
-                 list_transform(generate_series(0, 15),
-                   i -> list_min(list_transform(sh,
-                     s -> ({a}[CAST(i + 1 AS INTEGER)] * (s & 4294967295)
-                           + {b}[CAST(i + 1 AS INTEGER)])
-                          % {MINHASH_P}))) AS mins
-          FROM shl),
-        buckets AS (
-          SELECT doc_id, b,
-                 (mins[CAST(2 * b + 1 AS INTEGER)] * 31
-                  + mins[CAST(2 * b + 2 AS INTEGER)]) & {mask} AS bhash
-          FROM mh, generate_series(0, 7) g(b)),
+    shingles = unigrams if shingle_n == 1 else _MINHASH_TRIGRAMS
+    return f"""{_minhash_ctes(shingles)}
         old_b AS (SELECT * FROM buckets WHERE {old_pred}),
         new_b AS (SELECT * FROM buckets WHERE {new_pred}),
         cool AS (
@@ -11421,6 +10967,32 @@ _register(
 )
 
 
+#: documents as consecutive 10-word spans ``s(doc_id, pr)``, ``pr`` a
+#: struct of the 0-based span index and its text
+_SPANS_CTES = f"""
+        WITH w AS (
+          SELECT doc_id,
+                 {_WORDS} AS wl
+          FROM documents),
+        s AS (
+          SELECT doc_id,
+                 UNNEST(list_transform(
+                   generate_series(1, CAST(CEIL(len(wl) / 10.0) AS BIGINT)),
+                   i -> struct_pack(
+                     idx := i - 1,
+                     span := array_to_string(
+                       wl[CAST((i - 1) * 10 + 1 AS INTEGER)
+                          : CAST((i - 1) * 10 + 10 AS INTEGER)], ' '))))
+                   AS pr
+          FROM w WHERE len(wl) > 0)"""
+
+#: a document's kept ``(idx, span)`` rows rejoined in span order
+_SPANS_REASSEMBLED = """array_to_string(
+                 list_transform(
+                   list_sort(list(struct_pack(idx := idx, span := span))),
+                   x -> x.span), ' ')"""
+
+
 def _span_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sub-document C4-style span dedup (operators/dedup.span_dedup):
     10-word spans, first corpus-wide occurrence wins (doc id then
@@ -11438,23 +11010,7 @@ _register(
     QuerySpec(
         "dedup_spans_c4",
         _span_dedup_docs,
-        oracle=r"""
-        WITH w AS (
-          SELECT doc_id,
-                 list_filter(regexp_split_to_array(trim(text), '\s+'),
-                             x -> x <> '') AS wl
-          FROM documents),
-        s AS (
-          SELECT doc_id,
-                 UNNEST(list_transform(
-                   generate_series(1, CAST(CEIL(len(wl) / 10.0) AS BIGINT)),
-                   i -> struct_pack(
-                     idx := i - 1,
-                     span := array_to_string(
-                       wl[CAST((i - 1) * 10 + 1 AS INTEGER)
-                          : CAST((i - 1) * 10 + 10 AS INTEGER)], ' '))))
-                   AS pr
-          FROM w WHERE len(wl) > 0),
+        oracle=f"""{_SPANS_CTES},
         r AS (
           SELECT doc_id,
                  CAST(pr.idx AS INTEGER) AS idx,
@@ -11464,10 +11020,7 @@ _register(
           FROM s)
         SELECT doc_id,
                COUNT(*) AS n_spans_kept,
-               array_to_string(
-                 list_transform(
-                   list_sort(list(struct_pack(idx := idx, span := span))),
-                   x -> x.span), ' ') AS cleaned_text
+               {_SPANS_REASSEMBLED} AS cleaned_text
         FROM r WHERE rk = 1 GROUP BY doc_id
         """,
         doc="C4-style sub-document span dedup: first corpus occurrence wins, docs reassembled",
@@ -11503,23 +11056,7 @@ _register(
     QuerySpec(
         "dedup_incremental_spans",
         _incr_span_dedup,
-        oracle=r"""
-        WITH w AS (
-          SELECT doc_id,
-                 list_filter(regexp_split_to_array(trim(text), '\s+'),
-                             x -> x <> '') AS wl
-          FROM documents),
-        s AS (
-          SELECT doc_id,
-                 UNNEST(list_transform(
-                   generate_series(1, CAST(CEIL(len(wl) / 10.0) AS BIGINT)),
-                   i -> struct_pack(
-                     idx := i - 1,
-                     span := array_to_string(
-                       wl[CAST((i - 1) * 10 + 1 AS INTEGER)
-                          : CAST((i - 1) * 10 + 10 AS INTEGER)], ' '))))
-                   AS pr
-          FROM w WHERE len(wl) > 0),
+        oracle=f"""{_SPANS_CTES},
         r AS (
           SELECT doc_id,
                  CAST(doc_id % 3 AS INTEGER) AS batch_no,
@@ -11531,10 +11068,7 @@ _register(
           FROM s)
         SELECT doc_id, batch_no,
                COUNT(*) AS n_spans_kept,
-               array_to_string(
-                 list_transform(
-                   list_sort(list(struct_pack(idx := idx, span := span))),
-                   x -> x.span), ' ') AS cleaned_text
+               {_SPANS_REASSEMBLED} AS cleaned_text
         FROM r WHERE rk = 1 GROUP BY doc_id, batch_no
         """,
         doc="incremental span dedup: span-digest fold ≡ one-shot window, batch precedence",
@@ -11691,15 +11225,13 @@ _register(
     QuerySpec(
         "dedup_jaccard_prefix",
         _prefix_jaccard_docs,
-        oracle=r"""
+        oracle=rf"""
         WITH sh AS (
           SELECT DISTINCT doc_id,
                  w[i] || ' ' || w[i + 1] || ' ' || w[i + 2] AS s
           FROM (SELECT doc_id, w, UNNEST(range(1, len(w) - 1)) AS i
                 FROM (SELECT doc_id,
-                             list_filter(
-                               regexp_split_to_array(trim(text), '\s+'),
-                               x -> x <> '') AS w
+                             {_WORDS} AS w
                       FROM documents)
                 WHERE len(w) >= 3)),
         sized AS (
@@ -11985,6 +11517,26 @@ _register(
 )
 
 
+def _sqrt_budget_ctes(total: int) -> str:
+    """CTEs ``pw``/``tot``/``bud``: a ``total`` budget split over the
+    groups of ``sz(lang, n)`` in proportion to n^0.5, floored, as
+    ``bud(lang, b)`` — temperature_mix's α = 0.5 share arithmetic."""
+    return f"""pw AS (
+          SELECT lang,
+                 CAST(ROUND(pow(CAST(n AS DOUBLE), 0.5), 9)
+                      AS DECIMAL(38,9)) AS p
+          FROM sz),
+        tot AS (SELECT SUM(p) AS sp FROM pw),
+        bud AS (
+          SELECT lang,
+                 CAST(floor(ROUND(
+                   ROUND(CAST(p AS DOUBLE)
+                         / /*nz: sum of positive group weights*/
+                           CAST(sp AS DOUBLE), 9) * {total}, 6))
+                   AS BIGINT) AS b
+          FROM pw CROSS JOIN tot)"""
+
+
 def _mix_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-scaled language mixing
     (operators/sampling.temperature_mix): per-lang char budgets
@@ -12005,24 +11557,11 @@ def _mix_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: shared by the one-shot and incremental temperature-mix queries —
 #: the folded size state IS the one-shot size aggregate (sum monoid)
-_MIX_TEMPERATURE_ORACLE = """
+_MIX_TEMPERATURE_ORACLE = f"""
         WITH sz AS (
           SELECT lang, CAST(SUM(n_chars) AS BIGINT) AS n
           FROM documents GROUP BY lang),
-        pw AS (
-          SELECT lang,
-                 CAST(ROUND(pow(CAST(n AS DOUBLE), 0.5), 9)
-                      AS DECIMAL(38,9)) AS p
-          FROM sz),
-        tot AS (SELECT SUM(p) AS sp FROM pw),
-        bud AS (
-          SELECT lang,
-                 CAST(floor(ROUND(
-                   ROUND(CAST(p AS DOUBLE)
-                         / /*nz: sum of positive group weights*/
-                           CAST(sp AS DOUBLE), 9) * 60000, 6))
-                   AS BIGINT) AS b
-          FROM pw CROSS JOIN tot),
+        {_sqrt_budget_ctes(60000)},
         ord AS (
           SELECT doc_id, lang, n_chars,
                  SUM(n_chars) OVER (
@@ -12284,6 +11823,29 @@ def _waterfill_bud_ctes(
     return items + _waterfill_fixpoint_ctes(total, "witems")
 
 
+def _ordx_cte(src: str) -> str:
+    """CTE ``ordx``: each row's chars consumed before it within its
+    language, in the md5 order the budgeted mixes consume rows in."""
+    return f"""ordx AS (
+          SELECT doc_id, lang, n_chars,
+                 SUM(n_chars) OVER (
+                   PARTITION BY lang
+                   ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                   - n_chars AS cum_before
+          FROM {src})"""
+
+
+#: one-shot water-filled selection at a 140k-char budget, max_epochs 1
+_WATERFILL_ORACLE = f"""
+        WITH RECURSIVE {_waterfill_bud_ctes(140000, 1.0)},
+        {_ordx_cte('documents')}
+        SELECT o.doc_id, o.lang, CAST(o.n_chars AS BIGINT) AS n_chars
+        FROM ordx o JOIN bud USING (lang)
+        WHERE cum_before < b
+        """
+
+
 def _mix_temperature_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Water-filled data-constrained temperature mix
     (operators/sampling.temperature_mix_waterfill, r10 verdict item
@@ -12311,20 +11873,7 @@ _register(
     QuerySpec(
         "mix_temperature_waterfill",
         _mix_temperature_waterfill,
-        oracle=f"""
-        WITH RECURSIVE {_waterfill_bud_ctes(140000, 1.0)},
-        ordx AS (
-          SELECT doc_id, lang, n_chars,
-                 SUM(n_chars) OVER (
-                   PARTITION BY lang
-                   ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   - n_chars AS cum_before
-          FROM documents)
-        SELECT o.doc_id, o.lang, CAST(o.n_chars AS BIGINT) AS n_chars
-        FROM ordx o JOIN bud USING (lang)
-        WHERE cum_before < b
-        """,
+        oracle=_WATERFILL_ORACLE,
         doc="water-filled data-constrained mix: capped deficits re-spent over "
         "uncapped groups, fixpoint recomputed bit-for-bit by a recursive CTE",
     )
@@ -12363,14 +11912,7 @@ _register(
         _mix_waterfill_epochs,
         oracle=f"""
         WITH RECURSIVE {_waterfill_bud_ctes(400000, 3.0)},
-        ordx AS (
-          SELECT doc_id, lang, n_chars,
-                 SUM(n_chars) OVER (
-                   PARTITION BY lang
-                   ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   - n_chars AS cum_before
-          FROM documents)
+        {_ordx_cte('documents')}
         SELECT o.doc_id, o.lang, CAST(o.n_chars AS BIGINT) AS n_chars,
                CAST(u.e AS BIGINT) AS epoch
         FROM ordx o
@@ -12418,20 +11960,7 @@ _register(
     QuerySpec(
         "mix_waterfill_incremental",
         _mix_waterfill_incremental,
-        oracle=f"""
-        WITH RECURSIVE {_waterfill_bud_ctes(140000, 1.0)},
-        ordx AS (
-          SELECT doc_id, lang, n_chars,
-                 SUM(n_chars) OVER (
-                   PARTITION BY lang
-                   ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   - n_chars AS cum_before
-          FROM documents)
-        SELECT o.doc_id, o.lang, CAST(o.n_chars AS BIGINT) AS n_chars
-        FROM ordx o JOIN bud USING (lang)
-        WHERE cum_before < b
-        """,
+        oracle=_WATERFILL_ORACLE,
         doc="incremental water-filled mix: batch-folded sizes drive the identical fixpoint (shared-oracle arithmetic)",
     )
 )
@@ -12481,14 +12010,7 @@ _register(
         WITH RECURSIVE corpus AS (
           SELECT * FROM documents WHERE n_chars >= 50),
         {_waterfill_bud_ctes(220000, 1.5, src="corpus")},
-        ordx AS (
-          SELECT doc_id, lang, n_chars,
-                 SUM(n_chars) OVER (
-                   PARTITION BY lang
-                   ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   - n_chars AS cum_before
-          FROM corpus),
+        {_ordx_cte('corpus')},
         estream AS (
           SELECT o.doc_id, o.lang, o.n_chars, CAST(u.e AS BIGINT) AS epoch
           FROM ordx o
@@ -12617,19 +12139,7 @@ def _mix_doremi_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: shared by the one-shot and incremental DoReMi queries — the folded
 #: unigram-count state IS the one-shot LM (sum monoid), so budgets match
-_DOREMI_LAMBDA_CTES = r"""
-        WITH t AS (
-          SELECT doc_id,
-                 UNNEST(list_filter(
-                   string_split_regex(lower(trim(text)), '\s+'),
-                   w -> w <> '')) AS w
-          FROM documents),
-        freq AS (SELECT w, COUNT(*) AS c FROM t GROUP BY w),
-        tot AS (SELECT SUM(c) AS t_total FROM freq),
-        scored AS (
-          SELECT doc_id,
-                 CAST(ROUND(-ln(c / /*nz: corpus token total >= 1 for any token row*/ t_total), 6) AS DECIMAL(18,6)) AS nll
-          FROM t JOIN freq USING (w) CROSS JOIN tot),
+_DOREMI_LAMBDA_CTES = f"""{_UNIGRAM_NLL_CTES},
         perdoc AS (
           SELECT doc_id,
                  CAST(ROUND(CAST(SUM(nll) AS DOUBLE) / COUNT(*), 6)
@@ -12805,27 +12315,19 @@ def _dsir_target_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dsir_oracle() -> str:
-    mask = (1 << 57) - 1
-    hex32 = (
-        "list_sum(list_transform(generate_series(1, 8),"
-        " p -> (CAST(strpos('0123456789abcdef',"
-        " substr(md5(x), p, 1)) AS BIGINT) - 1)"
-        " * (CAST(1 AS BIGINT) << (4 * (8 - CAST(p AS INTEGER))))))"
-    )
-    return rf"""
+    return f"""
         WITH t AS (
           SELECT doc_id, lang,
-                 list_filter(regexp_split_to_array(trim(text), '\s+'),
-                             w -> w <> '') AS w
+                 {_WORDS} AS w
           FROM documents),
         tw AS (
-          SELECT doc_id, lang, list_transform(w, x -> {hex32}) AS hw
+          SELECT doc_id, lang, list_transform(w, x -> {_md5_int('x')}) AS hw
           FROM t WHERE len(w) >= 2),
         feats AS (
           SELECT doc_id, lang,
                  UNNEST(list_transform(generate_series(1, len(hw) - 1),
                    i -> ((hw[CAST(i AS INTEGER)] * 31
-                          + hw[CAST(i + 1 AS INTEGER)]) & {mask}) % 4096))
+                          + hw[CAST(i + 1 AS INTEGER)]) & {_PORTABLE_MASK}) % 4096))
                    AS b
           FROM tw),
         tcnt AS (SELECT b, COUNT(*) AS ct FROM feats
@@ -12951,20 +12453,7 @@ _register(
         sz AS (
           SELECT lang, CAST(SUM(n_chars) AS BIGINT) AS n
           FROM sel GROUP BY lang),
-        pw AS (
-          SELECT lang,
-                 CAST(ROUND(pow(CAST(n AS DOUBLE), 0.5), 9)
-                      AS DECIMAL(38,9)) AS p
-          FROM sz),
-        tot AS (SELECT SUM(p) AS sp FROM pw),
-        bud AS (
-          SELECT lang,
-                 CAST(floor(ROUND(
-                   ROUND(CAST(p AS DOUBLE)
-                         / /*nz: sum of positive group weights*/
-                           CAST(sp AS DOUBLE), 9) * 30000, 6))
-                   AS BIGINT) AS b
-          FROM pw CROSS JOIN tot),
+        {_sqrt_budget_ctes(30000)},
         ordx AS (
           SELECT doc_id, lang, n_chars, dsir_logw,
                  SUM(n_chars) OVER (
@@ -13150,10 +12639,7 @@ def _incr_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     was."""
     from square_etl_spark.operators.dedup import incremental_components
 
-    d = load_table(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(
-        d, "doc_id", "text", n=3, threshold=0.1, df_cap=100
-    ).localCheckpoint(eager=True)
+    pairs = _ngram_jaccard(spark, sf_dir).localCheckpoint(eager=True)
     labels = None
     for i in range(3):
         # pmod, not %: sign-keeping % would drop negative-id pairs
@@ -13168,20 +12654,7 @@ _register(
     QuerySpec(
         "dedup_incremental_components",
         _incr_components,
-        oracle=f"""
-        WITH RECURSIVE {_ngram_pairs_ctes()},
-        edges AS (
-          SELECT id_a AS a, id_b AS b FROM pairs
-          UNION
-          SELECT id_b, id_a FROM pairs),
-        reach AS (
-          SELECT a, b FROM edges
-          UNION
-          SELECT a, a FROM edges
-          UNION
-          SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a)
-        SELECT a AS doc_id, MIN(b) AS cluster_id FROM reach GROUP BY a
-        """,
+        oracle=_CC_ORACLE,
         doc="incremental connected components: label fold ≡ one-shot CC, batches merge clusters",
     )
 )
@@ -13206,23 +12679,7 @@ _register(
     QuerySpec(
         "dedup_strip_repeated_spans",
         _strip_repeated_spans_docs,
-        oracle=r"""
-        WITH w AS (
-          SELECT doc_id,
-                 list_filter(regexp_split_to_array(trim(text), '\s+'),
-                             x -> x <> '') AS wl
-          FROM documents),
-        s AS (
-          SELECT doc_id,
-                 UNNEST(list_transform(
-                   generate_series(1, CAST(CEIL(len(wl) / 10.0) AS BIGINT)),
-                   i -> struct_pack(
-                     idx := i - 1,
-                     span := array_to_string(
-                       wl[CAST((i - 1) * 10 + 1 AS INTEGER)
-                          : CAST((i - 1) * 10 + 10 AS INTEGER)], ' '))))
-                   AS pr
-          FROM w WHERE len(wl) > 0),
+        oracle=f"""{_SPANS_CTES},
         occ AS (
           SELECT doc_id, CAST(pr.idx AS INTEGER) AS idx, pr.span AS span
           FROM s),
@@ -13234,10 +12691,7 @@ _register(
           ANTI JOIN hot h ON o.span = h.span)
         SELECT doc_id,
                COUNT(*) AS n_spans_kept,
-               array_to_string(
-                 list_transform(
-                   list_sort(list(struct_pack(idx := idx, span := span))),
-                   x -> x.span), ' ') AS cleaned_text
+               {_SPANS_REASSEMBLED} AS cleaned_text
         FROM kept GROUP BY doc_id
         """,
         doc="kill-all boilerplate spans (df > 1 distinct docs) — the C4 removal policy",
@@ -13343,21 +12797,10 @@ _register(
     QuerySpec(
         "corpus_datasheet",
         _corpus_datasheet,
-        oracle="""
+        oracle=f"""
         WITH q AS (
           SELECT doc_id, text, lang,
-            ROUND(
-              0.5 * LEAST(ROUND(len(regexp_replace(text, '[^A-Za-z]', '', 'g')) /
-                    (CASE WHEN len(text) > 0 THEN CAST(len(text) AS DOUBLE) ELSE 1.0 END), 6) / 0.8, 1.0)
-            + 0.3 * LEAST(ROUND(len(list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-                    w -> list_contains(['the','and','of','to','is','in','that','it'], w))) /
-                    (CASE WHEN trim(text) = '' THEN 1.0
-                          WHEN len(string_split_regex(trim(text), '\\s+')) > 0
-                          THEN CAST(len(string_split_regex(trim(text), '\\s+')) AS DOUBLE)
-                          ELSE 1.0 END), 6) / 0.4, 1.0)
-            + 0.2 * (1.0 - LEAST(ROUND(len(regexp_replace(text, '[^\\.,;:!\\?]', '', 'g')) /
-                    (CASE WHEN len(text) > 0 THEN CAST(len(text) AS DOUBLE) ELSE 1.0 END), 6) / 0.2, 1.0)),
-            6) AS qs
+            {_QUALITY_SCORE_SQL} AS qs
           FROM documents)
         SELECT COUNT(*) AS n_docs,
                CAST(COUNT(DISTINCT lang) AS BIGINT) AS n_langs,
@@ -13411,23 +12854,14 @@ def _substring_oracle(w: int) -> str:
     hashes, the same masked 31-polynomial window fold (list_reduce ≡
     the Spark aggregate), first-occurrence rank, kill-explode,
     reassembly."""
-    from square_etl_spark.operators.dedup import _PORTABLE_MASK
-
-    hex32 = (
-        "list_sum(list_transform(generate_series(1, 8),"
-        " p -> (CAST(strpos('0123456789abcdef',"
-        " substr(md5(x), p, 1)) AS BIGINT) - 1)"
-        " * (CAST(1 AS BIGINT) << (4 * (8 - CAST(p AS INTEGER))))))"
-    )
-    return rf"""
+    return f"""
         WITH t AS (
           SELECT doc_id,
-                 list_filter(regexp_split_to_array(trim(text), '\s+'),
-                             w -> w <> '') AS w
+                 {_WORDS} AS w
           FROM documents),
         tw AS (
           SELECT doc_id, w,
-                 list_transform(w, x -> {hex32}) AS hw
+                 list_transform(w, x -> {_md5_int('x')}) AS hw
           FROM t),
         wi AS (
           SELECT doc_id, hw,
@@ -13957,6 +13391,11 @@ def _bpe_counts_cte(
 
 
 _BPE_COUNTS_CTE = _bpe_counts_cte()
+_BPE_BYTE_COUNTS_CTE = _bpe_counts_cte(
+    pretoken_sql=_BYTE_PRETOKEN_SQL,
+    sym_sql=_BYTE_SYM_SQL,
+    merges_sql=_BPE_BYTE_LIST_SQL,
+)
 
 
 def _bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -14006,17 +13445,52 @@ _register(
         "text_bpe_bytes_tokens",
         _bpe_bytes_tokens,
         oracle=f"""
-        WITH RECURSIVE {_bpe_counts_cte(
-            pretoken_sql=_BYTE_PRETOKEN_SQL,
-            sym_sql=_BYTE_SYM_SQL,
-            merges_sql=_BPE_BYTE_LIST_SQL,
-        )}
+        WITH RECURSIVE {_BPE_BYTE_COUNTS_CTE}
         SELECT doc_id, n_pretokens, bpe_tokens FROM bpe_counts
         """,
         bench=True,
         doc="byte-level BPE counts on the GPT-2 alphabet (merges.txt-compatible); DuckDB recomputes bytes, pre-tokens, and the merge fold",
     )
 )
+
+
+def _bpe_ids_ctes(symbols: str, merges: str, n_merges: int) -> str:
+    """Token-id tail of the BPE encode oracles, after the fold CTEs
+    (``pre``, ``fixed_sym``, ``vocab``): each document's token stream
+    numbered in order, base symbols (``symbols`` of a vocab word) ranked
+    1..B ascending, and merge results B + their first rank in the
+    ``n_merges``-entry merge list ``merges``."""
+    return f"""ptoks AS (
+          SELECT doc_id, generate_subscripts(ws, 1) AS widx,
+                 unnest(ws) AS w
+          FROM pre),
+        dtoks AS (
+          SELECT p.doc_id, p.widx,
+                 generate_subscripts(f.sym, 1) AS tidx,
+                 unnest(f.sym) AS token
+          FROM ptoks p JOIN fixed_sym f ON p.w = f.w),
+        chars AS (
+          SELECT ch, CAST(ROW_NUMBER() OVER (ORDER BY ch) AS BIGINT) AS cid
+          FROM (SELECT DISTINCT unnest({symbols}) AS ch
+                FROM vocab)),
+        nb AS (SELECT COUNT(*) AS b FROM chars),
+        mranks AS (
+          SELECT replace(({merges})[CAST(i AS INTEGER)], ' ', '')
+                   AS mtoken,
+                 MIN(i) AS rank
+          FROM (SELECT UNNEST(range(1, {n_merges + 1})) AS i)
+          GROUP BY 1),
+        mids AS (
+          SELECT mtoken, CAST(nb.b + rank AS BIGINT) AS mid
+          FROM mranks CROSS JOIN nb)
+        SELECT d.doc_id,
+               CAST(ROW_NUMBER() OVER (PARTITION BY d.doc_id
+                    ORDER BY d.widx, d.tidx) AS BIGINT) AS pos,
+               d.token,
+               COALESCE(c.cid, m.mid) AS token_id
+        FROM dtoks d
+        LEFT JOIN chars c ON d.token = c.ch
+        LEFT JOIN mids m ON d.token = m.mtoken"""
 
 
 def _bpe_encode_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -14040,37 +13514,7 @@ _register(
         _bpe_encode_q,
         oracle=f"""
         WITH RECURSIVE {_BPE_COUNTS_CTE},
-        ptoks AS (
-          SELECT doc_id, generate_subscripts(ws, 1) AS widx,
-                 unnest(ws) AS w
-          FROM pre),
-        dtoks AS (
-          SELECT p.doc_id, p.widx,
-                 generate_subscripts(f.sym, 1) AS tidx,
-                 unnest(f.sym) AS token
-          FROM ptoks p JOIN fixed_sym f ON p.w = f.w),
-        chars AS (
-          SELECT ch, CAST(ROW_NUMBER() OVER (ORDER BY ch) AS BIGINT) AS cid
-          FROM (SELECT DISTINCT unnest(string_split(w, '')) AS ch
-                FROM vocab)),
-        nb AS (SELECT COUNT(*) AS b FROM chars),
-        mranks AS (
-          SELECT replace(({_BPE_LIST_SQL})[CAST(i AS INTEGER)], ' ', '')
-                   AS mtoken,
-                 MIN(i) AS rank
-          FROM (SELECT UNNEST(range(1, {len(tx.BPE_MERGES) + 1})) AS i)
-          GROUP BY 1),
-        mids AS (
-          SELECT mtoken, CAST(nb.b + rank AS BIGINT) AS mid
-          FROM mranks CROSS JOIN nb)
-        SELECT d.doc_id,
-               CAST(ROW_NUMBER() OVER (PARTITION BY d.doc_id
-                    ORDER BY d.widx, d.tidx) AS BIGINT) AS pos,
-               d.token,
-               COALESCE(c.cid, m.mid) AS token_id
-        FROM dtoks d
-        LEFT JOIN chars c ON d.token = c.ch
-        LEFT JOIN mids m ON d.token = m.mtoken
+        {_bpe_ids_ctes("string_split(w, '')", _BPE_LIST_SQL, len(tx.BPE_MERGES))}
         """,
         bench=True,
         doc="corpus encoded to BPE token ids: fold + char/merge id space + per-doc stream order, all recomputed",
@@ -14097,42 +13541,8 @@ _register(
         "text_bpe_bytes_encode_ids",
         _bpe_bytes_encode_q,
         oracle=f"""
-        WITH RECURSIVE {_bpe_counts_cte(
-            pretoken_sql=_BYTE_PRETOKEN_SQL,
-            sym_sql=_BYTE_SYM_SQL,
-            merges_sql=_BPE_BYTE_LIST_SQL,
-        )},
-        ptoks AS (
-          SELECT doc_id, generate_subscripts(ws, 1) AS widx,
-                 unnest(ws) AS w
-          FROM pre),
-        dtoks AS (
-          SELECT p.doc_id, p.widx,
-                 generate_subscripts(f.sym, 1) AS tidx,
-                 unnest(f.sym) AS token
-          FROM ptoks p JOIN fixed_sym f ON p.w = f.w),
-        chars AS (
-          SELECT ch, CAST(ROW_NUMBER() OVER (ORDER BY ch) AS BIGINT) AS cid
-          FROM (SELECT DISTINCT unnest({_BYTE_SYM_SQL}) AS ch
-                FROM vocab)),
-        nb AS (SELECT COUNT(*) AS b FROM chars),
-        mranks AS (
-          SELECT replace(({_BPE_BYTE_LIST_SQL})[CAST(i AS INTEGER)],
-                         ' ', '') AS mtoken,
-                 MIN(i) AS rank
-          FROM (SELECT UNNEST(range(1, {len(tx.BPE_BYTE_MERGES) + 1})) AS i)
-          GROUP BY 1),
-        mids AS (
-          SELECT mtoken, CAST(nb.b + rank AS BIGINT) AS mid
-          FROM mranks CROSS JOIN nb)
-        SELECT d.doc_id,
-               CAST(ROW_NUMBER() OVER (PARTITION BY d.doc_id
-                    ORDER BY d.widx, d.tidx) AS BIGINT) AS pos,
-               d.token,
-               COALESCE(c.cid, m.mid) AS token_id
-        FROM dtoks d
-        LEFT JOIN chars c ON d.token = c.ch
-        LEFT JOIN mids m ON d.token = m.mtoken
+        WITH RECURSIVE {_BPE_BYTE_COUNTS_CTE},
+        {_bpe_ids_ctes(_BYTE_SYM_SQL, _BPE_BYTE_LIST_SQL, len(tx.BPE_BYTE_MERGES))}
         """,
         doc="byte-level token-id encoding on the GPT-2 alphabet: byte fold + symbol/merge id space + stream order, all recomputed",
         global_window_ok="alphabet-sized symbol-id rank: the global window orders the distinct observed byte symbols, ≤ 256 rows by construction",
@@ -14211,20 +13621,7 @@ _register(
         sz AS (
           SELECT lang, CAST(SUM(bpe_tokens) AS BIGINT) AS n
           FROM dl GROUP BY lang),
-        pw AS (
-          SELECT lang,
-                 CAST(ROUND(pow(CAST(n AS DOUBLE), 0.5), 9)
-                      AS DECIMAL(38,9)) AS p
-          FROM sz),
-        tot AS (SELECT SUM(p) AS sp FROM pw),
-        bud AS (
-          SELECT lang,
-                 CAST(floor(ROUND(
-                   ROUND(CAST(p AS DOUBLE)
-                         / /*nz: sum of positive group weights*/
-                           CAST(sp AS DOUBLE), 9) * 30000, 6))
-                   AS BIGINT) AS b
-          FROM pw CROSS JOIN tot),
+        {_sqrt_budget_ctes(30000)},
         ordx AS (
           SELECT doc_id, lang, bpe_tokens,
                  SUM(bpe_tokens) OVER (
@@ -14300,20 +13697,7 @@ _register(
         sz AS (
           SELECT lang, CAST(SUM(bpe_tokens) AS BIGINT) AS n
           FROM dl GROUP BY lang),
-        pw AS (
-          SELECT lang,
-                 CAST(ROUND(pow(CAST(n AS DOUBLE), 0.5), 9)
-                      AS DECIMAL(38,9)) AS p
-          FROM sz),
-        tot AS (SELECT SUM(p) AS sp FROM pw),
-        bud AS (
-          SELECT lang,
-                 CAST(floor(ROUND(
-                   ROUND(CAST(p AS DOUBLE)
-                         / /*nz: sum of positive group weights*/
-                           CAST(sp AS DOUBLE), 9) * 20000, 6))
-                   AS BIGINT) AS b
-          FROM pw CROSS JOIN tot),
+        {_sqrt_budget_ctes(20000)},
         ordx AS (
           SELECT doc_id, lang, bpe_tokens,
                  SUM(bpe_tokens) OVER (
@@ -14379,11 +13763,7 @@ _register(
         "text_compression_rate",
         _text_compression_rate,
         oracle=f"""
-        WITH RECURSIVE {_bpe_counts_cte(
-            pretoken_sql=_BYTE_PRETOKEN_SQL,
-            sym_sql=_BYTE_SYM_SQL,
-            merges_sql=_BPE_BYTE_LIST_SQL,
-        )}
+        WITH RECURSIVE {_BPE_BYTE_COUNTS_CTE}
         SELECT d.source,
                CAST(COUNT(*) AS BIGINT) AS n_docs,
                CAST(SUM(strlen(d.text)) AS BIGINT) AS total_bytes,
@@ -15082,9 +14462,7 @@ def _split_leakage_free(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = load_table(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(
-        d, "doc_id", "text", n=3, threshold=0.1, df_cap=100
-    )
+    pairs = _ngram_jaccard(spark, sf_dir)
     s = split_assign_leakage_free(
         d,
         pairs,
@@ -15121,16 +14499,7 @@ _register(
         _split_leakage_free,
         oracle=f"""
         WITH RECURSIVE {_ngram_pairs_ctes()},
-        edges AS (
-          SELECT id_a AS a, id_b AS b FROM pairs
-          UNION
-          SELECT id_b, id_a FROM pairs),
-        reach AS (
-          SELECT a, b FROM edges
-          UNION
-          SELECT a, a FROM edges
-          UNION
-          SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
+        {_PAIR_REACH_CTES},
         labels AS (SELECT a AS doc_id, MIN(b) AS cluster_id
                    FROM reach GROUP BY a),
         grp AS (
@@ -15221,12 +14590,7 @@ def _dsir_gumbel_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_HEX13 = (
-    "list_sum(list_transform(generate_series(1, 13),"
-    " p -> (CAST(strpos('0123456789abcdef',"
-    " substr(md5('g1' || CAST(doc_id AS VARCHAR)), p, 1)) AS BIGINT) - 1)"
-    " * (CAST(1 AS BIGINT) << (4 * (13 - CAST(p AS INTEGER))))))"
-)
+_HEX13 = _md5_int("'g1' || CAST(doc_id AS VARCHAR)", 13)
 
 
 _register(

@@ -8,14 +8,17 @@ run the same engine posture:
   realistic 100 TB hazard in the reference's model is tenant skew
   (every warehouse row carries tenant_id; SURVEY.md §4).
 - Arrow enabled for the few Pandas-UDF paths (multimodal plumbing).
-- shuffle.partitions sized from env (local test default 32; a real
-  cluster deployment overrides via spark-submit conf).
+- 32 shuffle partitions (a real cluster deployment overrides via
+  spark-submit conf or ``SPARK_GRAFT_EXTRA_CONF``).
+- Python workers import this package from its own checkout, whatever
+  the driver's working directory (:func:`ship_package`).
 """
 
 from __future__ import annotations
 
 import json
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
 
@@ -47,21 +50,19 @@ ENGINE_CONF: dict[str, str] = {
     # Parquet scans: push filters; split files at 32 MB so the small
     # single-file fixtures still fan out across local cores (a 13 MB
     # file at the 128 MB default is ONE task on a 32-thread runner).
-    # 100 TB deployments override upward via env/spark-submit — there
-    # the concern inverts to capping task count.
+    # 100 TB deployments override upward via spark-submit — there the
+    # concern inverts to capping task count.
     "spark.sql.parquet.filterPushdown": "true",
     # zstd beats snappy ~30-40% on warehouse data for similar CPU —
     # at 100 TB that's tens of TB of storage and scan bandwidth.
     "spark.sql.parquet.compression.codec": "zstd",
-    "spark.sql.files.maxPartitionBytes": os.environ.get(
-        "SPARK_GRAFT_MAX_PARTITION_BYTES", str(32 * 1024 * 1024)
-    ),
+    "spark.sql.files.maxPartitionBytes": str(32 * 1024 * 1024),
     # Spark has no TIMESTAMP(NANOS) support — read ns columns as raw
     # int64 and convert explicitly (io.load_table truncates ns → µs,
     # matching DuckDB's ns→µs cast so oracle comparisons agree).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Avoid tiny-file explosions when tests write parquet.
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_SHUFFLE", "32"),
+    "spark.sql.shuffle.partitions": "32",
     # local[32] hosts driver AND all executor threads in ONE JVM: the
     # 1 GB default heap OOMs at ~50k-doc dedup workloads on a 128 GiB
     # box.  Size the heap to the machine (cluster deployments override
@@ -106,4 +107,26 @@ def get_spark(app_name: str = "square-etl-spark", master: str | None = None) -> 
     if extra:
         for k, v in json.loads(extra).items():
             builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    ship_package(spark)
+    return spark
+
+
+#: the directory that holds the ``square_etl_spark`` package
+_PACKAGE_ROOT = str(Path(__file__).resolve().parent.parent)
+
+
+def ship_package(spark: SparkSession) -> None:
+    """Put this package's checkout on the Python workers' PYTHONPATH.
+
+    Python UDF and ``mapInPandas`` workers import the functions they
+    run by module name.  Without this they find ``square_etl_spark``
+    only when the driver happens to start in the checkout.  Every
+    Python function Spark builds afterwards carries
+    ``SparkContext.environment`` to its workers, so setting it once per
+    context covers every later query; repeat calls change nothing.
+    """
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _PACKAGE_ROOT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([_PACKAGE_ROOT, *paths])
