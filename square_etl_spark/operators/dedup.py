@@ -1227,7 +1227,12 @@ def connected_components(
 
     Two algorithms, same result (property-pinned to a union-find
     oracle): ``"min_label"`` (default) — neighbor-min propagation,
-    O(diameter) rounds at ~2 shuffles/round; ``"star"`` — alternating
+    O(diameter) rounds at ~2 shuffles/round, one action per round;
+    round 1 is seeded in the action that materializes the edge list
+    (each node's adjacency set and least(node, min(neighbours))), so a
+    near-duplicate graph of cliques takes 2 actions: the seed, and
+    round 2 confirming the fixpoint (a star whose centre is not its
+    minimum takes one more).  ``"star"`` — alternating
     large-star/small-star (Kiveris et al., "Connected Components in
     MapReduce and Beyond", ACM SoCC'14), ~log(diameter) rounds at ~4
     shuffles/round.  Near-dup graphs are shallow (cliques/short
@@ -1241,7 +1246,10 @@ def connected_components(
 
     ``stats``, if given, is populated in place with ``{"algorithm",
     "rounds"}`` — per-call observability (a module global here would
-    race if two CC runs interleaved on one driver).
+    race if two CC runs interleaved on one driver).  Either algorithm
+    raises ``RuntimeError`` when ``max_iterations`` rounds pass without
+    reaching the fixpoint, rather than return labels that split
+    components.
     """
     if algorithm == "star":
         return _cc_star(pairs, id_a, id_b, max_iterations, stats)
@@ -1252,65 +1260,90 @@ def connected_components(
     # the whole tree every iteration — O(rounds²) planning.  Truncating
     # the lineage keeps every round's plan constant-size (and is the
     # fault-tolerance boundary a long-running cluster job wants anyway).
-    edges = (
+    #
+    # Round 1 is seeded in the edge materialization itself: one
+    # aggregation of both edge directions by node carries the
+    # adjacency list AND the round-one label least(node, min(nbrs)),
+    # so edges and labels cost one action, not one each plus a first
+    # propagation round.  Duplicate edges need no distinct: min over
+    # a neighbour set ignores them.  The Observation is the same
+    # convergence count every later round takes (nodes whose label
+    # shrank from their own id); it is zero only for an empty or
+    # self-loop-only pair set, which is then already the fixpoint.
+    obs = Observation()
+    adjacency = (
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .unionByName(
             pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
         )
-        .distinct()
+        .groupBy("src")
+        .agg(F.collect_set("dst").alias("nbrs"))
+        .select(
+            F.col("src").alias("node"),
+            "nbrs",
+            F.least(F.col("src"), F.array_min("nbrs")).alias("label"),
+        )
+        .observe(obs, _changed_count(F.col("label") < F.col("node")))
         .localCheckpoint(eager=True)
     )
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
+    edges = adjacency.select(
+        F.col("node").alias("src"), F.explode("nbrs").alias("dst")
     )
-    rounds = 0
-    for rounds in range(1, max_iterations + 1):
+    labels = adjacency.select("node", "label")
+    rounds = 1
+    converged = not obs.get["changed"]
+    # rounds 2…: one action each — the checkpoint of the new labels,
+    # with the convergence count riding it as an Observation
+    while not converged and rounds < max_iterations:
+        rounds += 1
         nbr = edges.join(
             labels.withColumnRenamed("node", "dst"), on="dst"
         ).select(F.col("src").alias("node"), "label")
-        # one job per round: the convergence count (nodes whose label
-        # shrank) rides the checkpoint materialization as an
-        # Observation instead of a separate join+count job.  The old
-        # label travels through the same aggregation (w=1 marks it),
-        # so no second shuffle either.
+        # The old label travels through the same aggregation (w=1
+        # marks it), so the convergence count needs no second shuffle.
         combined = labels.select(
             "node", F.col("label").alias("lbl"), F.lit(1).alias("w")
         ).unionByName(
             nbr.select("node", F.col("label").alias("lbl"), F.lit(0).alias("w"))
         )
         obs = Observation()
-        new_labels = (
+        labels = (
             combined.groupBy("node")
             .agg(
                 F.min("lbl").alias("label"),
                 F.max(F.when(F.col("w") == 1, F.col("lbl"))).alias("__old"),
             )
-            .observe(
-                obs,
-                # coalesce: SUM over zero rows is NULL, and an empty
-                # edge set would otherwise never satisfy changed == 0
-                # and spin all max_iterations rounds (r03 ADVICE).
-                F.coalesce(
-                    F.sum(
-                        F.when(F.col("label") < F.col("__old"), 1).otherwise(0)
-                    ),
-                    F.lit(0),
-                ).alias("changed"),
-            )
+            .observe(obs, _changed_count(F.col("label") < F.col("__old")))
             .drop("__old")
             .localCheckpoint(eager=True)
         )
-        changed = obs.get["changed"]
-        labels = new_labels
-        if not changed:
-            break
+        converged = not obs.get["changed"]
+    if not converged:
+        raise _not_converged("min_label", max_iterations)
     if stats is not None:
         stats.update(algorithm="min_label", rounds=rounds)
     return labels.select(
         F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
+    )
+
+
+def _changed_count(shrank: Column) -> Column:
+    """Observed count of nodes whose label shrank.  coalesce: SUM over
+    zero rows is NULL, and an empty edge set would otherwise never
+    satisfy changed == 0 and spin all max_iterations rounds (r03
+    ADVICE)."""
+    return F.coalesce(
+        F.sum(F.when(shrank, 1).otherwise(0)), F.lit(0)
+    ).alias("changed")
+
+
+def _not_converged(algorithm: str, max_iterations: int) -> RuntimeError:
+    """Labels short of the fixpoint split components silently, so a CC
+    run that exhausts its rounds fails instead of returning them."""
+    return RuntimeError(
+        f"connected_components ({algorithm}) did not converge within "
+        f"max_iterations={max_iterations} rounds; the graph is deeper "
+        "than that — raise max_iterations or use algorithm='star'"
     )
 
 
@@ -1346,7 +1379,6 @@ def _cc_star(
         .localCheckpoint(eager=True)
     )
     prev_sum: tuple | None = None
-    rounds = 0
     for rounds in range(1, max_iterations + 1):
         # large-star over the symmetric neighbor relation
         sym = edges.unionByName(
@@ -1388,6 +1420,8 @@ def _cc_star(
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum
+    else:
+        raise _not_converged("star", max_iterations)
     if stats is not None:
         stats.update(algorithm="star", rounds=rounds)
     # fixpoint edges are (node → component-min); roots label themselves

@@ -12,6 +12,17 @@ run the same engine posture:
   spark-submit conf or ``SPARK_GRAFT_EXTRA_CONF``).
 - Python workers import this package from its own checkout, whatever
   the driver's working directory (:func:`ship_package`).
+- PySpark's DataFrame origin capture is off
+  (``spark.python.sql.dataFrameDebugging.enabled``).  Left on, every
+  DataFrame/Column API call records its Python call site in the JVM
+  first: ``F.col`` costs 13 py4j round trips instead of 3, and a
+  driver-bound corpus pass makes about twice the calls.  Runtime errors
+  keep the JVM error and the Python traceback of the failing action;
+  only the Python call-site part of the DataFrame query context is
+  lost.  To get it back while debugging, start the session with
+  ``SPARK_GRAFT_EXTRA_CONF='{"spark.python.sql.dataFrameDebugging.enabled": "true"}'``;
+  PySpark reads the setting once per process, so a later
+  ``spark.conf.set`` does not change it.
 """
 
 from __future__ import annotations
@@ -81,6 +92,10 @@ ENGINE_CONF: dict[str, str] = {
     # every tick recompiles all of them with Janino; at 1000 a repeat
     # tick (and a repeat corpus-curation pass) compiles almost nothing.
     "spark.sql.codegen.cache.maxEntries": "1000",
+    # No per-call origin capture: each DataFrame/Column call would
+    # otherwise send its Python call site to the JVM first (see the
+    # module docstring for the trade-off and how to turn it back on).
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

@@ -179,6 +179,50 @@ def test_connected_components_empty_pairs_converge_fast(spark):
         assert stats["rounds"] <= cap, (algo, stats)
 
 
+def test_connected_components_raises_when_rounds_run_out(spark):
+    """Labels short of the fixpoint split a component silently: a
+    30-hop chain needs more than 5 rounds of either algorithm, so both
+    must raise instead of returning them."""
+    import pytest
+
+    from square_etl_spark.operators.dedup import connected_components
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(30)], "id_a long, id_b long"
+    )
+    for algo in ("min_label", "star"):
+        with pytest.raises(RuntimeError, match="did not converge"):
+            connected_components(pairs, algorithm=algo, max_iterations=5)
+
+
+def test_connected_components_seeds_round_one_with_the_edges(spark):
+    """On disjoint triangles min_label runs two actions — the edge
+    materialization that also seeds round one, and round two finding
+    the fixpoint — which Spark runs as 7 jobs (AQE submits each
+    shuffle stage as its own job).  Jobs are counted per job group
+    with the statusTracker."""
+    from square_etl_spark.operators.dedup import connected_components
+
+    sc = spark.sparkContext
+    triangle = [(0, 1), (1, 2), (0, 2)]
+    pairs = spark.createDataFrame(
+        [(3 * t + a, 3 * t + b) for t in range(5) for a, b in triangle],
+        "id_a long, id_b long",
+    )
+    stats = {}
+    try:
+        sc.setJobGroup("cc-triangles", "connected components on triangles")
+        out = connected_components(pairs, stats=stats)
+        jobs = len(sc.statusTracker().getJobIdsForGroup("cc-triangles"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert {(r.doc_id, r.cluster_id) for r in out.collect()} == {
+        (3 * t + i, 3 * t) for t in range(5) for i in range(3)
+    }
+    assert stats["rounds"] == 2
+    assert jobs == 7, jobs
+
+
 def test_minhash_banded_finds_planted_dups(spark):
     from square_etl_spark.operators.dedup import minhash_banded_pairs
 

@@ -48,3 +48,26 @@ def test_python_workers_import_the_package_from_any_working_directory(
     assert "ModuleNotFoundError" not in out.stderr
     rows = [ln for ln in out.stdout.splitlines() if ln.startswith("ROWS ")]
     assert rows and int(rows[-1].split()[1]) > 0, out.stdout[-2000:]
+
+
+def test_dataframe_calls_skip_python_origin_capture(spark, monkeypatch):
+    """Origin capture is off in the engine session: a Column call costs
+    the py4j round trips of the call itself (3 for ``F.col``), not the
+    13 it takes when every call first sends its Python call site."""
+    from py4j.clientserver import ClientServerConnection
+    from pyspark.sql import functions as F
+
+    calls = []
+    send = ClientServerConnection.send_command
+
+    def counting(self, *args, **kwargs):
+        calls.append(1)
+        return send(self, *args, **kwargs)
+
+    F.col("x")  # the first call in a process reads and caches the conf
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    for _ in range(10):
+        F.col("x")
+    monkeypatch.undo()
+    assert 0 < len(calls) <= 3 * 10, len(calls)
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
