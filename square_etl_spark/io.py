@@ -207,8 +207,31 @@ def compact_table(
     return n_files
 
 
+def _corrupt_split(raw: DataFrame, schema, parse) -> tuple[DataFrame, DataFrame]:
+    """The corrupt-record split behind both ingest quarantines: parse
+    with ``parse(augmented_schema, options)`` — ``schema`` plus a
+    ``__corrupt`` string field, PERMISSIVE mode naming it as the
+    corrupt-record column — then keep the rows whose corrupt column is
+    NULL as ``valid`` (flattened parsed fields) and the rest as
+    ``rejects`` (the raw columns only).  One scan feeds both branches."""
+    from pyspark.sql import types as T
+
+    augmented = T.StructType(
+        list(schema.fields) + [T.StructField("__corrupt", T.StringType())]
+    )
+    options = {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "__corrupt"}
+    parsed = raw.withColumn("__parsed", parse(augmented, options))
+    failed = F.col("__parsed.__corrupt").isNotNull()
+    valid = (
+        parsed.filter(~failed)
+        .select("*", "__parsed.*")
+        .drop("__parsed", "__corrupt")
+    )
+    rejects = parsed.filter(failed).drop("__parsed")
+    return valid, rejects
+
+
 def json_ingest_quarantine(
-    spark: SparkSession,
     raw: DataFrame,
     json_col: str,
     schema,
@@ -227,31 +250,12 @@ def json_ingest_quarantine(
     branches.  Returns (valid, rejects); both keep the original raw
     column as the escape hatch.
     """
-    from pyspark.sql import types as T
-
-    augmented = T.StructType(
-        list(schema.fields) + [T.StructField("__corrupt", T.StringType())]
+    return _corrupt_split(
+        raw, schema, lambda s, opts: F.from_json(F.col(json_col), s, opts)
     )
-    parsed = raw.withColumn(
-        "__parsed",
-        F.from_json(
-            F.col(json_col),
-            augmented,
-            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "__corrupt"},
-        ),
-    )
-    failed = F.col("__parsed.__corrupt").isNotNull()
-    valid = (
-        parsed.filter(~failed)
-        .select("*", "__parsed.*")
-        .drop("__parsed", "__corrupt")
-    )
-    rejects = parsed.filter(failed).drop("__parsed")
-    return valid, rejects
 
 
 def csv_ingest_quarantine(
-    spark: SparkSession,
     raw: DataFrame,
     csv_col: str,
     schema,
@@ -265,35 +269,15 @@ def csv_ingest_quarantine(
     feeding both branches, skip-and-warn (E1) instead of task failure.
     A malformed FIELD (e.g. non-numeric where the schema says long)
     marks the row corrupt; extra fields beyond the schema do too."""
-    from pyspark.sql import types as T
 
-    augmented = T.StructType(
-        list(schema.fields) + [T.StructField("__corrupt", T.StringType())]
-    )
-    # from_csv takes a DDL string (not a StructType)
-    ddl = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in augmented.fields
-    )
-    parsed = raw.withColumn(
-        "__parsed",
-        F.from_csv(
-            F.col(csv_col),
-            ddl,
-            {
-                "mode": "PERMISSIVE",
-                "columnNameOfCorruptRecord": "__corrupt",
-                "sep": sep,
-            },
-        ),
-    )
-    failed = F.col("__parsed.__corrupt").isNotNull()
-    valid = (
-        parsed.filter(~failed)
-        .select("*", "__parsed.*")
-        .drop("__parsed", "__corrupt")
-    )
-    rejects = parsed.filter(failed).drop("__parsed")
-    return valid, rejects
+    def parse(augmented, options):
+        # from_csv takes a DDL string (not a StructType)
+        ddl = ", ".join(
+            f"{f.name} {f.dataType.simpleString()}" for f in augmented.fields
+        )
+        return F.from_csv(F.col(csv_col), ddl, {**options, "sep": sep})
+
+    return _corrupt_split(raw, schema, parse)
 
 
 def pushed_filters(df: DataFrame) -> str:

@@ -2743,9 +2743,7 @@ _DETECTED_DECODERS = {
 }
 
 
-def decode_media(
-    media: DataFrame, batch_size_hint: int = 256, detect: bool = False
-) -> DataFrame:
+def decode_media(media: DataFrame, detect: bool = False) -> DataFrame:
     """Arrow-batched decode stage: binary blobs → feature vectors.
 
     ``mapInPandas`` streams Arrow record batches through Python once;
@@ -3251,7 +3249,7 @@ def _probe_blob(data: bytes) -> dict:
     return out
 
 
-def probe_media(media: DataFrame, batch_size_hint: int = 256) -> DataFrame:
+def probe_media(media: DataFrame) -> DataFrame:
     """Header-only metadata extraction over binary media columns: the
     manifest-building primitive for a 100 TB corpus — detect the real
     container by magic bytes (ignoring whatever ``meta.format``
@@ -3295,7 +3293,7 @@ PROBED_AV_SCHEMA = (
 )
 
 
-def probe_av_manifest(media: DataFrame, batch_size_hint: int = 256) -> DataFrame:
+def probe_av_manifest(media: DataFrame) -> DataFrame:
     """Audio/video manifest probe — :func:`probe_media`'s sibling for
     the A/V columns ``_probe_blob`` extracts beyond geometry: MP3
     bitrate + CBR duration estimate from the frame header, MP4 movie

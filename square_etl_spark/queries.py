@@ -7605,7 +7605,7 @@ def _csv_ingest_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         T.StructField("o_orderstatus", T.StringType()),
         T.StructField("o_totalprice", T.DoubleType()),
     ])
-    valid, _rejects = csv_ingest_quarantine(spark, raw, "line", schema)
+    valid, _rejects = csv_ingest_quarantine(raw, "line", schema)
     return valid.select("o_orderkey", "o_orderstatus", "o_totalprice")
 
 

@@ -23,6 +23,14 @@ Spark-first design (no Delta dependency — plain parquet):
 This is MERGE INTO re-expressed as one keyed fold: the batch subtree
 is planned once and the write runs one exchange.
 
+The writer lock (:func:`_table_lock`) is an exclusive advisory
+``flock`` on a zero-byte ``<target>.lock`` beside the table.  The
+kernel releases it when the holder's process dies, so a crashed
+writer never blocks the table.  It is ``flock`` rather than
+``lockf`` because only ``flock`` excludes two threads of one process,
+and the file is never unlinked so that every writer locks the same
+inode.  Its scope is local POSIX filesystems.
+
 Every parquet-table REWRITE in the engine goes through
 :func:`_replace`: :func:`merge_upsert` (full or partition-restricted),
 :func:`cdc_merge`, ``io.compact_table`` and the streaming fold sink
@@ -41,14 +49,12 @@ commits, table-level even for partition-restricted merges.
 from __future__ import annotations
 
 import contextlib
+import fcntl
 import glob
-import json
 import os
 import shutil
-import socket
 import time
 import uuid
-import warnings
 from functools import reduce
 from operator import or_
 
@@ -65,15 +71,6 @@ class ConcurrentWriterError(RuntimeError):
     last-swap-wins that would drop the other writer's rows."""
 
 
-#: writer-lock liveness horizon: a lock whose owner heartbeat is older
-#: than this is presumed crashed and swept (same posture as the
-#: streaming sink's _sweep_stale_staging).  A LIVE holder never ages
-#: past it: _table_lock re-stamps owner.json every LOCK_TTL_S/4 from a
-#: daemon heartbeat thread, so even a multi-hour 100 TB merge keeps
-#: its lock; only a crashed writer's heartbeat goes stale.
-LOCK_TTL_S = 3600.0
-
-
 @contextlib.contextmanager
 def _table_lock(target_path: str, timeout_s: float = 600.0, poll_s: float = 0.2):
     """Mutual exclusion for writers of one materialized table.
@@ -87,213 +84,48 @@ def _table_lock(target_path: str, timeout_s: float = 600.0, poll_s: float = 0.2)
     if the wait exceeds ``timeout_s`` it raises
     :class:`ConcurrentWriterError` loudly.
 
-    Mechanics: ``os.mkdir(target.lock)`` is the atomic acquire (POSIX
-    rename/mkdir atomicity, the same primitive the swap protocol
-    trusts); an ``owner.json`` inside carries pid/host/heartbeat.  A
-    lock is swept as STALE when its owner process is dead (same host)
-    or its heartbeat exceeds ``LOCK_TTL_S`` (crashed writer on another
-    host) — the `_sweep_stale_staging` precedent.
+    Mechanics: an exclusive advisory ``flock`` on the sibling file
+    ``<target>.lock``, polled non-blocking every ``poll_s``.  The
+    kernel drops the lock when its file description closes — on
+    release, and on process death of any kind (SIGKILL included) — so
+    a crashed writer never blocks the table, and no writer has to
+    judge whether a holder is still alive.
+
+    - ``flock``, not ``fcntl.lockf``: a ``flock`` lock belongs to the
+      open file description, so two threads of one process (each with
+      its own ``os.open``) exclude each other; POSIX record locks
+      belong to the process, and a second thread would be granted the
+      lock its sibling holds.
+    - The lock file is never unlinked: a waiter could then lock the
+      orphaned inode while a newcomer locks a fresh file at the same
+      path, and both would enter.  The zero-byte file sits beside the
+      table, outside its directory, so no reader sees it.
 
     Scope: local/POSIX filesystems — exactly where this parquet-swap
     sink is deployable at all.  On object stores the whole sink is
     superseded by a table format (Delta/Iceberg), whose optimistic
     commit protocol IS the multi-writer story (module docstring).
     """
-    lock_dir = target_path + ".lock"
-    owner_file = os.path.join(lock_dir, "owner.json")
-    deadline = time.monotonic() + timeout_s
-    while True:
-        try:
-            os.makedirs(os.path.dirname(os.path.abspath(lock_dir)), exist_ok=True)
-            os.mkdir(lock_dir)  # atomic acquire
-            break
-        except FileExistsError:
-            if _lock_is_stale(owner_file):
-                # sweep-and-retry: CLAIM the stale lock via atomic
-                # rename before deleting — rmtree-in-place could race
-                # a second sweeper and destroy a lock some third
-                # writer just re-acquired; the rename only ever moves
-                # the exact dir we judged stale, and only one sweeper
-                # wins it (the loser's rename raises and re-races)
-                claim = f"{lock_dir}.stale-{uuid.uuid4().hex}"
-                try:
-                    os.rename(lock_dir, claim)
-                except OSError:
-                    continue  # another sweeper claimed it first
-                shutil.rmtree(claim, ignore_errors=True)
-                continue
-            if time.monotonic() >= deadline:
-                raise ConcurrentWriterError(
-                    f"writer lock on {target_path} held past {timeout_s}s "
-                    f"(holder: {_lock_owner_desc(owner_file)}); refusing to "
-                    "race — a concurrent swap would silently drop rows"
-                ) from None
-            time.sleep(poll_s)
-    stamped = {"ok": False}
-    # Acquire token: written into the dir we ourselves mkdir'ed, before
-    # any owner.json exists.  Its presence is the proof at release time
-    # that a bare (never-stamped) lock dir is OUR bare dir and not a
-    # fresh contender's mkdir that hasn't stamped yet — a swept-and-
-    # re-created dir can never contain it (the sweep renames the whole
-    # old dir away).  Closes the release-side twin of the heartbeat
-    # TOCTOU (r14 advice).
-    acquire_token = os.path.join(lock_dir, f"acquired.{uuid.uuid4().hex}")
+    lock_path = target_path + ".lock"
+    os.makedirs(os.path.dirname(os.path.abspath(lock_path)), exist_ok=True)
+    fd = os.open(lock_path, os.O_RDWR | os.O_CREAT, 0o644)
     try:
-        with open(acquire_token, "x"):
-            pass
-    except OSError:
-        acquire_token = None  # dir already gone/unwritable: treat as unproven
-
-    def _stamp() -> bool:
-        # Never reclaim a lock someone else now owns: if this process
-        # was suspended past the TTL, a contender may have swept the
-        # dir and stamped ITS owner.json at the same path — blindly
-        # os.replace()ing over it would fake ownership back, defeat
-        # the owned-only release below, and rmtree the new holder's
-        # live lock mid-merge.  Re-stamp only while the recorded owner
-        # is still self (or not yet written — our initial stamp).
-        try:
-            with open(owner_file) as fh:
-                cur = json.load(fh)
-            if (cur.get("pid") != os.getpid()
-                    or cur.get("host") != socket.gethostname()):
-                return False  # taken over while we slept
-        except FileNotFoundError:
-            # Only the very FIRST stamp may proceed without a readable
-            # owner.json (we hold the fresh mkdir and haven't written
-            # it yet).  Once a stamp has succeeded, a missing
-            # owner.json means the lock was swept out from under us —
-            # and a contender may have mkdir'ed a fresh dir at this
-            # path without having written ITS owner.json yet; stamping
-            # into that window would fake ownership back, the exact
-            # reclaim the ownership check above exists to prevent
-            # (r14 advice).  "First stamp hasn't succeeded" alone is
-            # not proof the dir is still ours, though: if the first
-            # stamp keeps FAILING (disk full, permission flap) past
-            # LOCK_TTL_S, a contender can sweep our bare dir and
-            # mkdir a fresh unstamped one here — a late retry would
-            # stamp into THAT.  Require the acquire token exactly as
-            # the release path does: a swept-and-re-created dir can
-            # never contain it (r15 advice).
-            if stamped["ok"] or not (
-                acquire_token is not None
-                and os.path.exists(acquire_token)
-            ):
-                return False
-        except (OSError, json.JSONDecodeError):
-            return False  # unreadable: do not fight over it
-        # write-then-rename so a reader never sees a torn owner.json
-        tmp = owner_file + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(
-                {"pid": os.getpid(), "host": socket.gethostname(),
-                 "ts": time.time()},
-                fh,
-            )
-        os.replace(tmp, owner_file)
-        stamped["ok"] = True
-        return True
-
-    import threading
-
-    stop = threading.Event()
-
-    def _heartbeat() -> None:
-        # re-stamp at TTL/4 so a live holder's heartbeat can never age
-        # past the staleness horizon, however long the merge runs
-        while not stop.wait(LOCK_TTL_S / 4):
+        deadline = time.monotonic() + timeout_s
+        while True:
             try:
-                if not _stamp():
-                    return  # ownership lost (swept + taken over)
-            except OSError:
-                return  # lock dir gone (released/swept): nothing to keep alive
-
-    try:
-        _stamp()
-        hb = threading.Thread(target=_heartbeat, daemon=True)
-        hb.start()
+                fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+                break
+            except BlockingIOError:
+                if time.monotonic() >= deadline:
+                    raise ConcurrentWriterError(
+                        f"writer lock on {target_path} held past {timeout_s}s; "
+                        "refusing to race — a concurrent swap would silently "
+                        "drop rows"
+                    ) from None
+                time.sleep(poll_s)
         yield
     finally:
-        stop.set()
-        # Release ONLY if the lock is still ours: if a contender judged
-        # us stale (frozen heartbeat past TTL after a host suspend, or
-        # cross-host clock skew) and swept the dir, owner.json now names
-        # the NEW holder — an unconditional rmtree here would evict it
-        # and let a third writer race, the exact silent-row-loss the
-        # lock exists to prevent.
-        try:
-            with open(owner_file) as fh:
-                owner = json.load(fh)
-            ours = (
-                owner.get("pid") == os.getpid()
-                and owner.get("host") == socket.gethostname()
-            )
-        except FileNotFoundError:
-            # No owner.json: if OUR stamp never succeeded (disk full,
-            # permission flap after the mkdir), this is our bare dir —
-            # releasable; leaving it would block every writer for up
-            # to LOCK_TTL_S.  But "stamp never succeeded" alone is not
-            # proof of identity: a contender may have swept our bare
-            # dir after the TTL and mkdir'ed a FRESH dir here without
-            # having stamped its owner.json yet — deleting that would
-            # evict the new holder (the release-side twin of the
-            # heartbeat TOCTOU, r14 advice).  Require the acquire
-            # token we wrote immediately after our own mkdir: a
-            # re-created dir can never contain it (sweeps rename the
-            # whole old dir away).
-            ours = (
-                not stamped["ok"]
-                and acquire_token is not None
-                and os.path.exists(acquire_token)
-            )
-        except (OSError, json.JSONDecodeError):
-            ours = False  # unreadable/torn: do not delete what we can't identify
-        if ours:
-            shutil.rmtree(lock_dir, ignore_errors=True)
-        elif os.path.isdir(lock_dir):
-            warnings.warn(
-                f"writer lock on {target_path} no longer owned by this "
-                f"process at release (current: "
-                f"{_lock_owner_desc(owner_file)}); leaving it in place — "
-                "this process was judged stale and its merge may have "
-                "raced the new holder",
-                stacklevel=2,
-            )
-
-
-def _lock_is_stale(owner_file: str) -> bool:
-    """True iff the lock's recorded owner is provably gone: dead pid on
-    this host, or heartbeat older than LOCK_TTL_S.  A lock dir whose
-    owner.json hasn't appeared yet is NOT stale (the winner writes it
-    right after mkdir) — unless the dir itself outlives the TTL."""
-    try:
-        with open(owner_file) as fh:
-            owner = json.load(fh)
-    except (OSError, json.JSONDecodeError):
-        lock_dir = os.path.dirname(owner_file)
-        try:
-            return time.time() - os.path.getmtime(lock_dir) > LOCK_TTL_S
-        except OSError:
-            return False  # dir vanished — the holder released; retry mkdir
-    if time.time() - float(owner.get("ts", 0)) > LOCK_TTL_S:
-        return True
-    if owner.get("host") == socket.gethostname():
-        try:
-            os.kill(int(owner["pid"]), 0)  # liveness probe, no signal
-        except ProcessLookupError:
-            return True
-        except (PermissionError, ValueError, TypeError, OSError):
-            return False
-    return False
-
-
-def _lock_owner_desc(owner_file: str) -> str:
-    try:
-        with open(owner_file) as fh:
-            o = json.load(fh)
-        return f"pid {o.get('pid')} on {o.get('host')} since {o.get('ts')}"
-    except (OSError, json.JSONDecodeError):
-        return "unknown (no owner.json)"
+        os.close(fd)
 
 
 def _recover_swap(target_path: str) -> None:

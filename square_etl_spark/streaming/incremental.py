@@ -58,6 +58,30 @@ def incremental_merge_run(
     return merge_upsert(spark, target_path, batch, keys, order_cols=[ts_col])
 
 
+def _drain_availablenow(
+    spark: SparkSession,
+    source_dir: str,
+    checkpoint_dir: str,
+    sink: Callable[[DataFrame, int], None],
+    schema=None,
+) -> None:
+    """Run one ``availableNow`` drain of the parquet files under
+    ``source_dir`` through ``foreachBatch(sink)``, with offsets kept in
+    ``checkpoint_dir``: every file not yet seen is processed, then the
+    query stops.  Every availableNow sink here runs through it."""
+    reader = spark.readStream
+    if schema is not None:
+        reader = reader.schema(schema)
+    (
+        reader.parquet(source_dir)
+        .writeStream.foreachBatch(sink)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
 def stream_events_availablenow(
     spark: SparkSession,
     source_dir: str,
@@ -74,21 +98,11 @@ def stream_events_availablenow(
     T3).  The sink is the same idempotent merge as batch, so replays
     after a checkpoint rollback cannot double-apply.
     """
-    reader = spark.readStream
-    if schema is not None:
-        reader = reader.schema(schema)
-    stream = reader.parquet(source_dir)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         merge_upsert(spark, target_path, batch_df, keys, order_cols=[order_col])
 
-    (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain_availablenow(spark, source_dir, checkpoint_dir, sink, schema)
 
 
 def windowed_stream_agg(
@@ -149,10 +163,6 @@ def _fold_stream_availablenow(
 
     from square_etl_spark.sinks.merge import _replace
 
-    reader = spark.readStream
-    if schema is not None:
-        reader = reader.schema(schema)
-    stream = reader.parquet(source_dir)
     marker = "_last_batch_id"
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -173,13 +183,7 @@ def _fold_stream_availablenow(
             with open(os.path.join(tmp, marker), "w") as fh:
                 fh.write(str(batch_id))
 
-    (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain_availablenow(spark, source_dir, checkpoint_dir, sink, schema)
 
 
 def stream_rollup_availablenow(
@@ -462,7 +466,6 @@ def stream_minhash_ingest_availablenow(
 
     sh_root = os.path.join(index_root, "shingles")
     bk_root = os.path.join(index_root, "buckets")
-    _publish = _publish_batch_dir
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         for root in (sh_root, bk_root, pairs_root):
@@ -492,23 +495,13 @@ def stream_minhash_ingest_availablenow(
                 pairs = spark.createDataFrame(
                     [], f"new_id {idt}, old_id {idt}, jaccard double"
                 )
-            _publish(pairs, pairs_root, batch_id)
+            _publish_batch_dir(pairs, pairs_root, batch_id)
         # extend the index ONLY after the batch's pairs committed: the
         # probe must never see the probing batch's own rows
-        _publish(bk_new, bk_root, batch_id)
-        _publish(sh_new, sh_root, batch_id)
+        _publish_batch_dir(bk_new, bk_root, batch_id)
+        _publish_batch_dir(sh_new, sh_root, batch_id)
 
-    reader = spark.readStream
-    if schema is not None:
-        reader = reader.schema(schema)
-    (
-        reader.parquet(source_dir)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain_availablenow(spark, source_dir, checkpoint_dir, sink, schema)
 
 
 def stream_psi_availablenow(
@@ -718,8 +711,6 @@ def stream_substring_dedup_availablenow(
 
     from square_etl_spark.operators.dedup import incremental_substring_dedup
 
-    _publish = _publish_batch_dir
-
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         for root in (state_root, cleaned_root):
             _sweep_stale_staging(root)
@@ -752,17 +743,7 @@ def stream_substring_dedup_availablenow(
         cleaned = cleaned.localCheckpoint(eager=True)
         # cleaned commits BEFORE the state extension: on replay the
         # probe must never see the probing batch's own windows
-        _publish(cleaned, cleaned_root, batch_id)
-        _publish(delta, state_root, batch_id)
+        _publish_batch_dir(cleaned, cleaned_root, batch_id)
+        _publish_batch_dir(delta, state_root, batch_id)
 
-    reader = spark.readStream
-    if schema is not None:
-        reader = reader.schema(schema)
-    (
-        reader.parquet(source_dir)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain_availablenow(spark, source_dir, checkpoint_dir, sink, schema)

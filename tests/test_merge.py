@@ -627,118 +627,20 @@ def test_lock_starvation_raises_loudly(spark, tmp_path):
     assert not os.path.exists(target)  # the loser never wrote anything
 
 
-def test_stale_lock_from_dead_writer_is_swept(spark, tmp_path):
-    """A lock whose recorded owner pid is dead (crashed writer, same
-    host) is swept and the new writer proceeds — the
-    _sweep_stale_staging posture applied to the writer lock."""
-    import json as _json
-    import socket as _socket
-
-    target = os.path.join(tmp_path, "tbl")
-    lock = target + ".lock"
-    os.makedirs(lock)
-    # pid from the far end of pid space, already-reaped: liveness probe fails
-    with open(os.path.join(lock, "owner.json"), "w") as fh:
-        _json.dump({"pid": 2**22 + 12345, "host": _socket.gethostname(),
-                    "ts": __import__("time").time()}, fh)
-    n = merge_upsert(
-        spark, target, _b(spark, [("a", 1, "2024-01-01 00:00:00")]),
-        ["k"], ["updated_at"], lock_timeout_s=30.0,
-    )
-    assert n == 1 and _rows(spark, target) == {("a", 1)}
-    assert not os.path.exists(lock)  # released after the merge
-
-
-def test_live_foreign_lock_is_respected(spark, tmp_path):
-    """A lock held by a LIVE process (this one) with a fresh heartbeat
-    is never swept as stale — staleness requires a dead pid or an
-    expired TTL, not mere impatience."""
-    import pytest
-
-    from square_etl_spark.sinks.merge import (
-        ConcurrentWriterError,
-        _lock_is_stale,
-    )
-
-    target = os.path.join(tmp_path, "tbl")
-    lock = target + ".lock"
-    os.makedirs(lock)
-    import json as _json
-    import socket as _socket
-    import time as _time
-    owner = os.path.join(lock, "owner.json")
-    with open(owner, "w") as fh:
-        _json.dump({"pid": os.getpid(), "host": _socket.gethostname(),
-                    "ts": _time.time()}, fh)
-    assert not _lock_is_stale(owner)
-    with pytest.raises(ConcurrentWriterError):
-        merge_upsert(
-            spark, target, _b(spark, [("a", 1, "2024-01-01 00:00:00")]),
-            ["k"], ["updated_at"], lock_timeout_s=1.0,
-        )
-
-
-def test_lock_heartbeat_keeps_long_holders_alive(monkeypatch, tmp_path):
-    """A live holder's heartbeat re-stamps owner.json every TTL/4, so
-    a contender never judges it stale however long the merge runs —
-    only a crashed writer (dead pid / frozen heartbeat) is sweepable."""
-    import json as _json
-    import time as _time
-
-    from square_etl_spark.sinks import merge as m
-
-    monkeypatch.setattr(m, "LOCK_TTL_S", 0.4)  # heartbeat every 0.1 s
-    target = os.path.join(tmp_path, "tbl")
-    owner = target + ".lock/owner.json"
-    with m._table_lock(target):
-        first = _json.load(open(owner))["ts"]
-        _time.sleep(0.65)  # > TTL: without the heartbeat this goes stale
-        assert _json.load(open(owner))["ts"] > first
-        assert not m._lock_is_stale(owner)
-    assert not os.path.exists(target + ".lock")
-
-
-def test_release_never_evicts_a_new_holder(tmp_path):
-    """If a contender (wrongly or rightly) judged this holder stale and
-    took the lock over, the original holder's release must NOT rmtree
-    the NEW holder's lock dir — that would let a third writer in and
-    reintroduce the silent last-swap-wins row loss.  Release checks
-    owner.json for our own pid/host first and warns loudly otherwise."""
-    import json as _json
-    import warnings as _warnings
-
-    from square_etl_spark.sinks import merge as m
-
-    target = os.path.join(tmp_path, "tbl")
-    owner = target + ".lock/owner.json"
-    with _warnings.catch_warnings(record=True) as caught:
-        _warnings.simplefilter("always")
-        with m._table_lock(target):
-            # simulate a sweep-and-takeover: owner.json now names a
-            # different process (the new holder)
-            with open(owner, "w") as fh:
-                _json.dump({"pid": os.getpid() + 1, "host": "elsewhere",
-                            "ts": __import__("time").time()}, fh)
-    assert os.path.isdir(target + ".lock"), "new holder's lock must survive"
-    assert any("no longer owned" in str(w.message) for w in caught)
-    import shutil as _shutil
-    _shutil.rmtree(target + ".lock")
-
-
 _CHILD_LOCK_SCRIPT = r"""
-import json, os, sys, time
+import json, os, signal, sys, time
 sys.path.insert(0, "__REPO__")
-from square_etl_spark.sinks import merge as m
 from square_etl_spark.sinks.merge import ConcurrentWriterError, _table_lock
 
 target, timeout_s, marker = sys.argv[1], float(sys.argv[2]), sys.argv[3]
-if len(sys.argv) > 4:
-    m.LOCK_TTL_S = float(sys.argv[4])
+crash = sys.argv[4:] == ["crash"]
 try:
     with _table_lock(target, timeout_s=timeout_s, poll_s=0.1):
         # prove we held it: record our pid while inside the section
         with open(marker, "w") as fh:
             json.dump({"pid": os.getpid()}, fh)
+        if crash:
+            os.kill(os.getpid(), signal.SIGKILL)  # die holding the lock
         time.sleep(0.3)
 except ConcurrentWriterError:
     sys.exit(7)  # loud, distinguishable failure — never a silent race
@@ -746,7 +648,7 @@ sys.exit(0)
 """
 
 
-def _spawn_lock_child(tmp_path, target, timeout_s, ttl=None):
+def _spawn_lock_child(tmp_path, target, timeout_s, crash=False):
     import subprocess
     import sys as _sys
 
@@ -754,8 +656,8 @@ def _spawn_lock_child(tmp_path, target, timeout_s, ttl=None):
     script = _CHILD_LOCK_SCRIPT.replace("__REPO__", os.path.dirname(
         os.path.dirname(os.path.abspath(__file__))))
     args = [_sys.executable, "-c", script, target, str(timeout_s), marker]
-    if ttl is not None:
-        args.append(str(ttl))
+    if crash:
+        args.append("crash")
     return subprocess.Popen(args), marker
 
 
@@ -792,217 +694,27 @@ def test_cross_process_lock_blocks_then_takes_over(tmp_path):
     assert os.path.exists(marker), "child must acquire after our release"
 
 
-def test_cross_process_takeover_after_simulated_crash(tmp_path):
-    """A crashed writer (owner.json heartbeat frozen past TTL, pid from
-    a foreign host so no liveness probe applies) must not dead-lock the
-    table: a second real process sweeps the stale lock, takes over, and
-    releases cleanly."""
-    import json as _json
-    import time as _time
+def test_writer_killed_inside_the_lock_never_blocks_the_table(spark, tmp_path):
+    """A real writer process SIGKILLed inside the critical section
+    leaves nothing that blocks the table: the kernel drops its lock
+    with the process, so the next merge goes ahead at once instead of
+    waiting out a staleness horizon."""
+    import signal
+
+    from square_etl_spark.sinks.merge import _table_lock
 
     target = os.path.join(tmp_path, "tbl")
-    lock = target + ".lock"
-    os.makedirs(lock)
-    with open(os.path.join(lock, "owner.json"), "w") as fh:
-        _json.dump({"pid": 12345, "host": "crashed-host",
-                    "ts": _time.time() - 10.0}, fh)  # frozen heartbeat
     child, marker = _spawn_lock_child(tmp_path, target, timeout_s=30.0,
-                                      ttl=1.0)
-    assert child.wait(timeout=60) == 0
-    assert os.path.exists(marker), "child must take over the stale lock"
-    assert not os.path.exists(lock), "takeover must release cleanly"
-
-
-def test_heartbeat_never_reclaims_a_taken_over_lock(monkeypatch, tmp_path):
-    """A holder suspended past the TTL whose lock was swept and taken
-    over must NOT have its heartbeat re-stamp owner.json back to
-    itself — that would fake ownership, pass the owned-only release
-    check, and rmtree the new holder's live lock (the exact scenario
-    the release check was built for)."""
-    import json as _json
-    import time as _time
-    import warnings as _warnings
-
-    from square_etl_spark.sinks import merge as m
-
-    monkeypatch.setattr(m, "LOCK_TTL_S", 0.4)  # heartbeat every 0.1 s
-    target = os.path.join(tmp_path, "tbl")
-    owner = target + ".lock/owner.json"
-    foreign = {"pid": os.getpid() + 1, "host": "elsewhere",
-               "ts": _time.time() + 3600}
-    with _warnings.catch_warnings(record=True) as caught:
-        _warnings.simplefilter("always")
-        with m._table_lock(target):
-            # simulate sweep-and-takeover while this holder sleeps
-            tmp = owner + ".tmp2"
-            with open(tmp, "w") as fh:
-                _json.dump(foreign, fh)
-            os.replace(tmp, owner)
-            _time.sleep(0.35)  # >= 2 heartbeat periods
-            assert _json.load(open(owner)) == foreign, (
-                "heartbeat must not clobber the new holder's stamp")
-    assert os.path.isdir(target + ".lock"), "new holder's lock survives"
-    assert any("no longer owned" in str(w.message) for w in caught)
-    import shutil as _shutil
-    _shutil.rmtree(target + ".lock")
-
-
-def test_release_frees_own_bare_dir_when_stamp_failed(monkeypatch, tmp_path):
-    """If the initial owner.json stamp fails (disk full/permission
-    flap after the mkdir), release must still free OUR bare lock dir —
-    leaving it would block every writer for up to LOCK_TTL_S.  A
-    takeover always leaves an owner.json, so bare + never-stamped is
-    provably ours."""
-    import pytest
-
-    from square_etl_spark.sinks import merge as m
-
-    target = os.path.join(tmp_path, "tbl")
-
-    real_replace = os.replace
-
-    def failing_replace(src, dst):
-        if dst.endswith("owner.json"):
-            raise OSError("disk full")
-        return real_replace(src, dst)
-
-    monkeypatch.setattr(m.os, "replace", failing_replace)
-    with pytest.raises(OSError, match="disk full"):
-        with m._table_lock(target):
-            pass  # pragma: no cover - stamp fails before the yield
-    assert not os.path.exists(target + ".lock"), (
-        "our never-stamped bare dir must be released, not leaked")
-
-
-def test_heartbeat_never_stamps_into_a_fresh_unstamped_lock(monkeypatch, tmp_path):
-    """After a successful stamp, a MISSING owner.json means the lock
-    was swept; a contender may have mkdir'ed a fresh dir at the same
-    path without having written its owner.json yet.  The heartbeat
-    must treat that as ownership lost (return False), not as 'our
-    initial stamp' — re-stamping into the fresh dir would fake
-    ownership back through a narrower window of the exact reclaim the
-    ownership check prevents (r14 advice)."""
-    import shutil as _shutil
-    import time as _time
-    import warnings as _warnings
-
-    from square_etl_spark.sinks import merge as m
-
-    monkeypatch.setattr(m, "LOCK_TTL_S", 0.4)  # heartbeat every 0.1 s
-    target = os.path.join(tmp_path, "tbl")
-    lock_dir = target + ".lock"
-    with _warnings.catch_warnings(record=True) as caught:
-        _warnings.simplefilter("always")
-        with m._table_lock(target):
-            # simulate a sweep (whole dir renamed away) + a contender's
-            # fresh mkdir that has NOT stamped its owner.json yet
-            os.rename(lock_dir, lock_dir + ".swept")
-            _shutil.rmtree(lock_dir + ".swept")
-            os.mkdir(lock_dir)
-            _time.sleep(0.35)  # >= 2 heartbeat periods
-            assert not os.path.exists(os.path.join(lock_dir, "owner.json")), (
-                "heartbeat must not stamp into the contender's fresh dir")
-    assert os.path.isdir(lock_dir), "contender's fresh lock must survive release"
-    assert os.listdir(lock_dir) == [], "release must not write into it either"
-    assert any("no longer owned" in str(w.message) for w in caught)
-    _shutil.rmtree(lock_dir)
-
-
-def test_release_leaves_a_contenders_fresh_bare_dir(monkeypatch, tmp_path):
-    """Release-side twin of the heartbeat TOCTOU (r14 advice): if OUR
-    stamp never succeeded AND a contender swept our bare dir and
-    mkdir'ed a fresh one before our release runs, 'bare + never
-    stamped' no longer proves the dir is ours.  The acquire token
-    (written right after our own mkdir, gone with the swept dir)
-    disambiguates: release must leave the contender's dir in place."""
-    import shutil as _shutil
-
-    import pytest
-
-    from square_etl_spark.sinks import merge as m
-
-    target = os.path.join(tmp_path, "tbl")
-    lock_dir = target + ".lock"
-    real_replace = os.replace
-
-    def racing_replace(src, dst):
-        if dst.endswith("owner.json"):
-            # the contender races in the stamp-failure window: sweeps
-            # our bare dir and re-creates a fresh, not-yet-stamped one
-            os.rename(lock_dir, lock_dir + ".swept")
-            _shutil.rmtree(lock_dir + ".swept")
-            os.mkdir(lock_dir)
-            raise OSError("disk full")
-        return real_replace(src, dst)
-
-    monkeypatch.setattr(m.os, "replace", racing_replace)
-    with pytest.raises(OSError, match="disk full"):
-        with m._table_lock(target):
-            pass  # pragma: no cover - stamp fails before the yield
-    assert os.path.isdir(lock_dir), (
-        "release must not delete the contender's fresh lock dir")
-    assert os.listdir(lock_dir) == [], "nothing of ours may be left inside"
-    _shutil.rmtree(lock_dir)
-
-
-def test_heartbeat_retry_after_failed_first_stamp_needs_the_token(
-    monkeypatch, tmp_path
-):
-    """r15 advice: the heartbeat's missing-owner.json guard keyed only
-    on stamped['ok'] — if the FIRST stamp soft-fails (permission flap
-    reading the dir) and a contender later sweeps our bare dir and
-    mkdirs a fresh unstamped one, a recovered heartbeat retry would
-    stamp into the CONTENDER's dir and fake ownership back.  The
-    retry must require our acquire token (gone with the swept dir),
-    exactly as the release path does."""
-    import builtins
-    import shutil as _shutil
-    import time as _time
-    import warnings as _warnings
-
-    from square_etl_spark.sinks import merge as m
-
-    monkeypatch.setattr(m, "LOCK_TTL_S", 0.4)  # heartbeat every 0.1 s
-    target = os.path.join(tmp_path, "tbl")
-    lock_dir = target + ".lock"
-    owner = os.path.join(lock_dir, "owner.json")
-
-    state = {"fail_reads": True}
-    real_open = builtins.open
-
-    def flaky_open(path, *a, **k):
-        # soft-fail only the owner.json READ while the flap is on: the
-        # first _stamp then returns False (unreadable branch) without
-        # raising, so the lock is held with stamped['ok'] == False and
-        # the heartbeat keeps retrying — the advice's exact window
-        if (
-            state["fail_reads"]
-            and os.fspath(path) == owner
-            and not a
-            and not k
-        ):
-            raise PermissionError("transient flap")
-        return real_open(path, *a, **k)
-
-    monkeypatch.setattr(builtins, "open", flaky_open)
-    with _warnings.catch_warnings(record=True) as caught:
-        _warnings.simplefilter("always")
-        with m._table_lock(target):
-            # the contender sweeps our bare dir (token goes with it)
-            # and re-creates a fresh, not-yet-stamped one; the flap
-            # then clears so heartbeat retries CAN write again
-            os.rename(lock_dir, lock_dir + ".swept")
-            _shutil.rmtree(lock_dir + ".swept")
-            os.mkdir(lock_dir)
-            state["fail_reads"] = False
-            _time.sleep(0.35)  # >= 2 heartbeat periods
-            assert not os.path.exists(owner), (
-                "recovered heartbeat must not stamp into the "
-                "contender's fresh dir without our acquire token")
-    assert os.path.isdir(lock_dir), "contender's fresh lock must survive"
-    assert os.listdir(lock_dir) == [], "release must not write into it"
-    assert any("no longer owned" in str(w.message) for w in caught)
-    _shutil.rmtree(lock_dir)
+                                      crash=True)
+    assert child.wait(timeout=60) == -signal.SIGKILL
+    assert os.path.exists(marker), "child must die inside the section"
+    n = merge_upsert(
+        spark, target, _b(spark, [("a", 1, "2024-01-01 00:00:00")]),
+        ["k"], ["updated_at"], lock_timeout_s=5.0,
+    )
+    assert n == 1 and _rows(spark, target) == {("a", 1)}
+    with _table_lock(target, timeout_s=0.0):
+        pass  # free at once: nothing of the dead writer's lock survives
 
 
 def test_merge_frozen_batch_ts_stamps_deterministically(spark, tmp_path):

@@ -62,7 +62,7 @@ def test_json_quarantine_splits_bad_rows(spark):
             T.StructField("state", T.StringType()),
         ]
     )
-    valid, rejects = json_ingest_quarantine(spark, raw, "raw_payload", schema)
+    valid, rejects = json_ingest_quarantine(raw, "raw_payload", schema)
     v = {r.id: r for r in valid.collect()}
     assert set(v) == {1, 3}
     assert v[1].k == 5 and v[1].state == "IN_STOCK"
@@ -3405,7 +3405,7 @@ def test_csv_ingest_quarantine_splits_malformed_fields(spark):
          ("4,delta,0.0",)],
         "line string",
     )
-    valid, rejects = csv_ingest_quarantine(spark, raw, "line", schema)
+    valid, rejects = csv_ingest_quarantine(raw, "line", schema)
     ok = {r.id: (r.name, r.amount, r.line) for r in valid.collect()}
     assert ok == {1: ("alpha", 10.5, "1,alpha,10.5"),
                   4: ("delta", 0.0, "4,delta,0.0")}
