@@ -694,11 +694,12 @@ def test_cross_process_lock_blocks_then_takes_over(tmp_path):
     assert os.path.exists(marker), "child must acquire after our release"
 
 
-def test_writer_killed_inside_the_lock_never_blocks_the_table(spark, tmp_path):
+def test_stale_lock_from_dead_writer_is_swept(spark, tmp_path):
     """A real writer process SIGKILLed inside the critical section
     leaves nothing that blocks the table: the kernel drops its lock
     with the process, so the next merge goes ahead at once instead of
-    waiting out a staleness horizon."""
+    waiting out a staleness horizon, and the leftover lock file is
+    free for the next writer."""
     import signal
 
     from square_etl_spark.sinks.merge import _table_lock
@@ -715,6 +716,32 @@ def test_writer_killed_inside_the_lock_never_blocks_the_table(spark, tmp_path):
     assert n == 1 and _rows(spark, target) == {("a", 1)}
     with _table_lock(target, timeout_s=0.0):
         pass  # free at once: nothing of the dead writer's lock survives
+
+
+def test_cross_process_takeover_after_simulated_crash(tmp_path):
+    """A crashed writer must not dead-lock the table for other
+    processes: after one real process is SIGKILLed holding the lock, a
+    second real process takes it over inside a short timeout, and
+    releases it cleanly for this one."""
+    import json as _json
+    import signal
+
+    from square_etl_spark.sinks.merge import _table_lock
+
+    target = os.path.join(tmp_path, "tbl")
+    crashed, crashed_marker = _spawn_lock_child(
+        tmp_path, target, timeout_s=30.0, crash=True)
+    assert crashed.wait(timeout=60) == -signal.SIGKILL
+    with open(crashed_marker) as fh:
+        crashed_pid = _json.load(fh)["pid"]
+    os.remove(crashed_marker)
+
+    child, marker = _spawn_lock_child(tmp_path, target, timeout_s=2.0)
+    assert child.wait(timeout=60) == 0, "child must take over, not time out"
+    with open(marker) as fh:
+        assert _json.load(fh)["pid"] == child.pid != crashed_pid
+    with _table_lock(target, timeout_s=0.0):
+        pass  # the taker released cleanly
 
 
 def test_merge_frozen_batch_ts_stamps_deterministically(spark, tmp_path):
