@@ -195,18 +195,14 @@ def ngram_jaccard_pairs(
         )
         .localCheckpoint(eager=True)
     )
-    sh = sh_arr.select(id_col, F.explode("shingles").alias("shingle"))
-    if df_cap is not None:
-        stop = (
-            sh.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > df_cap)
-            .select("shingle")
-        )
-        # broadcast anti join: a cheap in-memory filter over the cached
-        # postings, re-evaluated per consumer without a shuffle.
-        # bcast-ok: stoplist = shingles with df > df_cap, so ≤ |postings|/df_cap rows by cap arithmetic
-        sh = sh.join(F.broadcast(stop), on="shingle", how="left_anti")
+    # the stop list is a broadcast anti join: a cheap in-memory filter
+    # over the cached postings, re-evaluated per consumer without a
+    # shuffle
+    sh = _cap_hot_buckets(
+        sh_arr.select(id_col, F.explode("shingles").alias("shingle")),
+        ["shingle"],
+        df_cap,
+    )
     sized = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     a, b = sh.alias("a"), sh.alias("b")
     inter = (
@@ -347,24 +343,105 @@ def _lsh_tag(
     return out
 
 
-def _cap_hot_buckets(tagged: DataFrame, bucket_cap: int) -> DataFrame:
-    """Drop rows of (table, bucket) groups holding > ``bucket_cap``
-    rows — the map-side-combinable hot-key guard (groupBy-count →
-    filter → broadcast anti join, the minhash_lsh_pairs precedent).
-    A count OVER (PARTITION BY tbl, bucket) would funnel every row of
-    the hot bucket through ONE reducer to learn the count it then
-    discards — the exact single-reducer shape the cap exists to
-    prevent; the aggregate combines map-side, so a 10⁵-row
-    boilerplate bucket costs one partial count per input partition."""
+def _cap_hot_buckets(
+    rel: DataFrame, keys: list[str], bucket_cap: int | None
+) -> DataFrame:
+    """Drop rows of ``keys`` groups holding > ``bucket_cap`` rows (no-op
+    for ``None``) — the hot-key guard of the bucketed candidate joins in
+    this module, in its map-side-combinable shape (groupBy-count → filter →
+    broadcast anti join).  A count OVER (PARTITION BY keys) would
+    funnel every row of the hot bucket through ONE reducer to learn
+    the count it then discards — the exact single-reducer shape the
+    cap exists to prevent; the aggregate combines map-side, so a
+    10⁵-row boilerplate bucket costs one partial count per input
+    partition."""
+    if bucket_cap is None:
+        return rel
     hot = (
-        tagged.groupBy("__tbl", "__bucket")
+        rel.groupBy(*keys)
         .agg(F.count(F.lit(1)).alias("__bn"))
         .filter(F.col("__bn") > bucket_cap)
-        .select("__tbl", "__bucket")
+        .select(*keys)
     )
-    # bcast-ok: hot-bucket list, ≤ |rows|·n_tables/bucket_cap by cap arithmetic
-    return tagged.join(
-        F.broadcast(hot), on=["__tbl", "__bucket"], how="left_anti"
+    # bcast-ok: hot-key list, ≤ |rows|/bucket_cap by cap arithmetic
+    return rel.join(F.broadcast(hot), on=keys, how="left_anti")
+
+
+def _self_candidates(
+    rel: DataFrame, id_col: str, keys: list[str]
+) -> DataFrame:
+    """Distinct ``(id_a, id_b)`` pairs, ``id_a < id_b``, of rows of
+    ``rel`` sharing all of ``keys`` — the in-bucket self-join of the
+    candidates→verify family.  Pair rows carry only the two ids, so the
+    multi-key hits collapse as 16-byte rows before any verify attaches
+    a payload."""
+    a = rel.select(F.col(id_col).alias("id_a"), *keys)
+    b = rel.select(F.col(id_col).alias("id_b"), *keys)
+    return (
+        a.join(b, on=keys)
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+        .distinct()
+    )
+
+
+def _verify_jaccard(
+    cands: DataFrame,
+    sets_a: DataFrame,
+    sets_b: DataFrame,
+    id_col: str,
+    a: str,
+    b: str,
+    threshold: float,
+) -> DataFrame:
+    """Exact Jaccard verify of candidate pairs ``(a, b)`` against the
+    ``(id_col, sh)`` shingle sets of each side: emits ``(a, b,
+    jaccard)`` with ``jaccard = round(|A∩B| / |A∪B|, 6) ≥ threshold``.
+    |A∪B| = |A| + |B| − |A∩B| exactly (the sets are array_distinct'd),
+    so the union is never materialized — one array op per pair, same
+    integer operands, bit-identical division (r17)."""
+    sa = sets_a.select(F.col(id_col).alias(a), F.col("sh").alias("sh_a"))
+    sb = sets_b.select(F.col(id_col).alias(b), F.col("sh").alias("sh_b"))
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    return (
+        cands.join(sa, on=a)
+        .join(sb, on=b)
+        .withColumn(
+            "jaccard",
+            F.round(inter / (F.size("sh_a") + F.size("sh_b") - inter), 6),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select(a, b, "jaccard")
+    )
+
+
+def _verify_cosine(
+    cands: DataFrame, nv: DataFrame, id_col: str, threshold: float
+) -> DataFrame:
+    """Exact cosine verify of ids-only candidate pairs ``(id_a, id_b)``:
+    re-attach each side's unit vector from ``nv`` = ``(id_col, __nv)``
+    by key and keep ``round(dot, 6) ≥ threshold`` as ``(id_a, id_b,
+    cosine_sim)``.
+
+    HOF dot, not dot_unrolled (r16, measured in situ): over the
+    CHECKPOINTED normalized vectors the 64-term unrolled chain runs
+    ~8× SLOWER than the aggregate/zip_with fold (7.4 s vs 0.9 s on the
+    818k-pair verify at sf0.1) — the giant generated method falls out
+    of JIT compilation in this join shape while the fold's tight loop
+    stays hot.  Same left-to-right accumulation, so the values are
+    bit-identical (the dot/dot_unrolled equivalence pin)."""
+    from square_etl_spark.operators.similarity import dot
+
+    va = nv.select(F.col(id_col).alias("id_a"), F.col("__nv").alias("__va"))
+    vb = nv.select(F.col(id_col).alias("id_b"), F.col("__nv").alias("__vb"))
+    return (
+        cands.join(va, "id_a")
+        .join(vb, "id_b")
+        .withColumn(
+            "cosine_sim", F.round(dot(F.col("__va"), F.col("__vb")), 6)
+        )
+        .filter(F.col("cosine_sim") >= threshold)
+        .select("id_a", "id_b", "cosine_sim")
     )
 
 
@@ -397,12 +474,10 @@ def embedding_cosine_pairs_bucketed(
     BroadcastNestedLoopJoin over all pairs (pinned in
     tests/test_plans.py).  At 100 TB: raise ``bits`` with log2(N) so
     per-bucket population stays bounded, and set ``bucket_cap`` to
-    drop (and report) pathological buckets — the same hot-key guard as
-    :func:`minhash_lsh_pairs`.  Cost is O(Σ bucket²·d) instead of
-    O(N²·d).
+    drop (and report) pathological buckets — the same hot-key guard
+    (:func:`_cap_hot_buckets`) as :func:`minhash_banded_pairs`.  Cost
+    is O(Σ bucket²·d) instead of O(N²·d).
     """
-    from square_etl_spark.operators.similarity import dot
-
     # The self-join makes tagged a diamond even without the cap (both
     # join sides), and the cap adds the count branch — materialize it
     # once (see _lsh_tag for the tagging-shape rationale).  The
@@ -422,11 +497,7 @@ def embedding_cosine_pairs_bucketed(
         df, id_col, vec_col, dim, bits, n_tables, seed, id_col, "__nv",
         vec_table0_only=True,
     ).localCheckpoint(eager=False)
-    capped = (
-        _cap_hot_buckets(tagged, bucket_cap)
-        if bucket_cap is not None
-        else tagged
-    )
+    keys = ["__tbl", "__bucket"]
     # Candidate join on IDS ONLY, dedup BEFORE the verify (r16, guide
     # §2.3 "shuffle keys and metadata instead of payloads"): the old
     # shape carried BOTH unit vectors (~1 KB/row at d=64) through the
@@ -442,38 +513,11 @@ def embedding_cosine_pairs_bucketed(
     # tagging, so a cap never drops a verify row; with
     # vec_table0_only the table-0 slice is also the only one storing
     # a vector).
-    cand = (
-        capped.select(F.col(id_col).alias("id_a"), "__tbl", "__bucket")
-        .join(
-            capped.select(F.col(id_col).alias("id_b"), "__tbl", "__bucket"),
-            on=["__tbl", "__bucket"],
-        )
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
+    cand = _self_candidates(
+        _cap_hot_buckets(tagged, keys, bucket_cap), id_col, keys
     )
     nv = tagged.filter(F.col("__tbl") == 0).select(id_col, "__nv")
-    # HOF dot, not dot_unrolled (r16, measured in situ): over the
-    # CHECKPOINTED normalized vectors the 64-term unrolled chain runs
-    # ~8× SLOWER than the aggregate/zip_with fold (7.4 s vs 0.9 s on
-    # the 818k-pair verify at sf0.1) — the giant generated method
-    # falls out of JIT compilation in this join shape while the fold's
-    # tight loop stays hot.  Same left-to-right accumulation, so the
-    # values are bit-identical (the dot/dot_unrolled equivalence pin).
-    sim = dot(F.col("__va"), F.col("__vb"))
-    return (
-        cand.join(
-            nv.select(F.col(id_col).alias("id_a"), F.col("__nv").alias("__va")),
-            "id_a",
-        )
-        .join(
-            nv.select(F.col(id_col).alias("id_b"), F.col("__nv").alias("__vb")),
-            "id_b",
-        )
-        .withColumn("cosine_sim", F.round(sim, 6))
-        .filter(F.col("cosine_sim") >= threshold)
-        .select("id_a", "id_b", "cosine_sim")
-    )
+    return _verify_cosine(cand, nv, id_col, threshold)
 
 
 def embedding_lsh_index(
@@ -558,13 +602,12 @@ def embedding_lsh_probe(
     ``dedup_embedding_incremental`` query has DuckDB recompute from
     scratch.
 
-    Hot-bucket caps mirror :func:`minhash_probe` (two-sided, r08
-    ADVICE): ``bucket_cap`` drops pathological INDEX buckets,
-    ``new_bucket_cap`` (default: same) drops pathological BATCH
-    buckets — a boilerplate ingest burst is exactly as dangerous as a
-    boilerplate corpus.  Pass ``None`` to disable (the exact-fold
-    configuration).  Both caps use the map-side-combinable
-    groupBy-count → anti-join shape (:func:`_cap_hot_buckets`)."""
+    Hot-bucket caps are two-sided (r08 ADVICE), both
+    :func:`_cap_hot_buckets` on ``(__tbl, __bucket)``: ``bucket_cap``
+    drops pathological INDEX buckets, ``new_bucket_cap`` (default:
+    same) drops pathological BATCH buckets — a boilerplate ingest
+    burst is exactly as dangerous as a boilerplate corpus.  Pass
+    ``None`` to disable (the exact-fold configuration)."""
     from square_etl_spark.operators.similarity import dot_unrolled
 
     if new_bucket_cap is None:
@@ -577,17 +620,21 @@ def embedding_lsh_probe(
         # cap makes the batch tagging a diamond — materialize once
         # (input-partitioned; see embedding_cosine_pairs_bucketed)
         tagged = _cap_hot_buckets(
-            tagged.localCheckpoint(eager=False), new_bucket_cap
+            tagged.localCheckpoint(eager=False),
+            ["__tbl", "__bucket"],
+            new_bucket_cap,
         )
-    idx = index.select(
-        F.col(id_col).alias("__old_id"),
-        F.col("__nv").alias("__vo"),
-        "__tbl", "__bucket",
+    # index side is a stored parquet relation — re-scanning it for the
+    # cap's count is a pruned-column read, no checkpoint needed
+    idx = _cap_hot_buckets(
+        index.select(
+            F.col(id_col).alias("__old_id"),
+            F.col("__nv").alias("__vo"),
+            "__tbl", "__bucket",
+        ),
+        ["__tbl", "__bucket"],
+        bucket_cap,
     )
-    if bucket_cap is not None:
-        # index side is a stored parquet relation — re-scanning it for
-        # the count is a pruned-column read, no checkpoint needed
-        idx = _cap_hot_buckets(idx, bucket_cap)
     sim = dot_unrolled(F.col("__vn"), F.col("__vo"), dim)
     return (
         tagged.join(idx, on=["__tbl", "__bucket"])
@@ -633,10 +680,12 @@ def embedding_incremental_pairs_split(
     :func:`embedding_lsh_probe`), the batch-2 slice is the probe's
     batch tagging, and each within-batch slice is
     ``embedding_cosine_pairs_bucketed``'s tagging of that batch.  The
-    three candidate joins and exact verifies below are those
-    operators' own bodies (cap-free configuration), so the output is
-    identical row-for-row to composing them on the two filtered
-    relations — while the bits×tables literal plane-chain
+    within-batch candidate joins and all three verifies are the
+    :func:`_self_candidates` / :func:`_verify_cosine` calls of
+    ``embedding_cosine_pairs_bucketed`` (cap-free configuration) and
+    the cross join is the probe's (table, bucket) join, so the output
+    is identical row-for-row to composing those operators on the two
+    filtered relations — while the bits×tables literal plane-chain
     analysis/codegen constant (the wall-clock term at any scale,
     SCALING.md r12) is paid ONCE instead of four times, and the
     corpus is normalized+tagged in one linear pass instead of four.
@@ -652,8 +701,6 @@ def embedding_incremental_pairs_split(
     on the pair, so per-set distinct∘filter∘verify ≡
     filter∘verify∘distinct; values bit-identical).
     """
-    from square_etl_spark.operators.similarity import dot
-
     # vec_table0_only: all three verifies re-attach vectors from the
     # table-0 slice by key (see embedding_cosine_pairs_bucketed) — an
     # 8×-narrower checkpoint for the same consumed bytes (r17, §5).
@@ -661,35 +708,10 @@ def embedding_incremental_pairs_split(
         df, id_col, vec_col, dim, bits, n_tables, seed, id_col, "__nv",
         vec_table0_only=True,
     ).localCheckpoint(eager=False)
+    keys = ["__tbl", "__bucket"]
     t1 = tagged.filter(~batch2_pred)
     t2 = tagged.filter(batch2_pred)
     nv = tagged.filter(F.col("__tbl") == 0).select(id_col, "__nv")
-    va = nv.select(F.col(id_col).alias("id_a"), F.col("__nv").alias("__va"))
-    vb = nv.select(F.col(id_col).alias("id_b"), F.col("__nv").alias("__vb"))
-    sim = dot(F.col("__va"), F.col("__vb"))
-
-    def _verify(cand: DataFrame) -> DataFrame:
-        return (
-            cand.join(va, "id_a")
-            .join(vb, "id_b")
-            .withColumn("cosine_sim", F.round(sim, 6))
-            .filter(F.col("cosine_sim") >= threshold)
-            .select("id_a", "id_b", "cosine_sim")
-        )
-
-    def _within(t: DataFrame) -> DataFrame:
-        cand = (
-            t.select(F.col(id_col).alias("id_a"), "__tbl", "__bucket")
-            .join(
-                t.select(F.col(id_col).alias("id_b"), "__tbl", "__bucket"),
-                on=["__tbl", "__bucket"],
-            )
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
-        )
-        return _verify(cand)
-
     # cross-batch probe: the index relation is t1's slice of the
     # shared tagging, the probe batch is t2's — candidates as id
     # pairs, normalized to (least, greatest) BEFORE the verify (the
@@ -697,11 +719,8 @@ def embedding_incremental_pairs_split(
     # the dot is symmetric, so verifying the normalized pair is the
     # same value)
     cross_cand = (
-        t2.select(F.col(id_col).alias("__new_id"), "__tbl", "__bucket")
-        .join(
-            t1.select(F.col(id_col).alias("__old_id"), "__tbl", "__bucket"),
-            on=["__tbl", "__bucket"],
-        )
+        t2.select(F.col(id_col).alias("__new_id"), *keys)
+        .join(t1.select(F.col(id_col).alias("__old_id"), *keys), on=keys)
         .filter(F.col("__new_id") != F.col("__old_id"))
         .select(
             F.least("__new_id", "__old_id").alias("id_a"),
@@ -709,10 +728,11 @@ def embedding_incremental_pairs_split(
         )
         .distinct()
     )
+    within1, within2 = (_self_candidates(t, id_col, keys) for t in (t1, t2))
     return (
-        _within(t1)
-        .unionByName(_verify(cross_cand))
-        .unionByName(_within(t2))
+        _verify_cosine(within1, nv, id_col, threshold)
+        .unionByName(_verify_cosine(cross_cand, nv, id_col, threshold))
+        .unionByName(_verify_cosine(within2, nv, id_col, threshold))
     )
 
 
@@ -769,7 +789,9 @@ def semantic_contamination_pairs(
         # probe) — materialize the corpus tagging once,
         # input-partitioned (see embedding_cosine_pairs_bucketed).
         probe = _cap_hot_buckets(
-            probe.localCheckpoint(eager=False), bucket_cap
+            probe.localCheckpoint(eager=False),
+            ["__tbl", "__bucket"],
+            bucket_cap,
         )
     sim = dot_unrolled(F.col("__va"), F.col("__vb"), dim)
     return (
@@ -836,8 +858,7 @@ def semantic_contamination_pairs_split(
         F.col("__nv").alias("__vb"),
         "__tbl", "__bucket",
     )
-    if bucket_cap is not None:
-        probe = _cap_hot_buckets(probe, bucket_cap)
+    probe = _cap_hot_buckets(probe, ["__tbl", "__bucket"], bucket_cap)
     sim = dot_unrolled(F.col("__va"), F.col("__vb"), dim)
     return (
         probe.join(index, on=["__tbl", "__bucket"])
@@ -848,34 +869,6 @@ def semantic_contamination_pairs_split(
         .filter(F.col("cosine_sim") >= threshold)
         .distinct()
     )
-
-
-def decontaminate_semantic(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.35,
-    dim: int = 64,
-    bits: int = 4,
-    n_tables: int = 8,
-    seed: int = 42,
-    bucket_cap: int | None = None,
-) -> DataFrame:
-    """Drop corpus vectors semantically too close to any benchmark
-    vector — kill semantics matching :func:`decontaminate` /
-    :func:`decontaminate_fuzzy`, candidates from
-    :func:`semantic_contamination_pairs`.  The flagged-id list is
-    benchmark-bounded by the probe's cap arithmetic, so the
-    broadcast stays safe at any corpus size."""
-    pairs = semantic_contamination_pairs(
-        corpus, benchmark, id_col, vec_col,
-        threshold, dim, bits, n_tables, seed, bucket_cap,
-    )
-    flagged = pairs.select(F.col("corpus_id").alias(id_col)).distinct()
-    # bcast-ok: semantically-contaminated id list, benchmark-bounded
-    # by the probe's (table, bucket) cap arithmetic (see docstring)
-    return corpus.join(F.broadcast(flagged), id_col, "left_anti")
 
 
 def semantic_block_assign(
@@ -995,7 +988,6 @@ def incremental_semantic_dedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.35,
-    dim: int | None = None,
     arrow_assign: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """SemDeDup against an EXISTING corpus — the continuous-ingest
@@ -1055,10 +1047,9 @@ def incremental_semantic_dedup(
         .localCheckpoint(eager=False)
     )
     others = tagged if state is None else state.unionByName(tagged)
-    # HOF dot regardless of dim (r16): over the checkpointed
-    # normalized vectors the unrolled chain falls out of JIT in the
-    # pair-join shape — see embedding_cosine_pairs_bucketed (values
-    # bit-identical, same accumulation order)
+    # HOF dot (r16): over the checkpointed normalized vectors the
+    # unrolled chain falls out of JIT in the pair-join shape — see
+    # _verify_cosine (values bit-identical, same accumulation order)
     sim = dot(F.col("__va"), F.col("__vb"))
     pruned = (
         others.select(F.col("vid").alias("id_a"), F.col("__nv").alias("__va"), "c")
@@ -1090,7 +1081,6 @@ def semantic_dedup(
     k: int = 4,
     iters: int = 2,
     threshold: float = 0.35,
-    dim: int | None = None,
     fit_sample_mod: int | None = None,
     centroids: DataFrame | None = None,
 ) -> DataFrame:
@@ -1190,10 +1180,9 @@ def semantic_dedup(
     b = tagged.select(
         F.col("vid").alias("id_b"), F.col("__nv").alias("__vb"), "c"
     )
-    # HOF dot regardless of dim (r16): over the checkpointed
-    # normalized vectors the unrolled chain falls out of JIT in the
-    # pair-join shape — see embedding_cosine_pairs_bucketed (values
-    # bit-identical, same accumulation order)
+    # HOF dot (r16): over the checkpointed normalized vectors the
+    # unrolled chain falls out of JIT in the pair-join shape — see
+    # _verify_cosine (values bit-identical, same accumulation order)
     sim = dot(F.col("__va"), F.col("__vb"))
     pruned = (
         a.join(b, "c")
@@ -1764,14 +1753,15 @@ def minhash_banded_pairs(
     3. group the k minhashes into ``bands`` bands of k/bands rows;
        band hash = fold of its minhashes; explode → (band, hash, id);
     4. **bucket-size cap**: buckets holding > ``bucket_cap`` docs are
-       dropped before the self-join (broadcast anti join).  A bucket of
-       d docs yields d² candidates; the cap bounds the pair space the
-       same way the n-gram df_cap does — this is the knob spark.ml
+       dropped before the self-join (:func:`_cap_hot_buckets`).  A
+       bucket of d docs yields d² candidates; the cap bounds the pair
+       space the same way the n-gram df_cap does — this is the knob spark.ml
        lacks, and near-dup recall is unaffected in practice because a
        bucket that hot is a stop-pattern, not a duplicate cluster;
-    5. distinct candidate pairs from in-bucket self-join;
-    6. EXACT verification: join candidates back to the shingle arrays,
-       jaccard = |A∩B| / |A∪B| via array_intersect/array_union (docs'
+    5. distinct candidate pairs from in-bucket self-join
+       (:func:`_self_candidates`);
+    6. EXACT verification (:func:`_verify_jaccard`): join candidates
+       back to the shingle arrays, jaccard = |A∩B| / |A∪B| (docs'
        shingle sets are small; this is a map-side HOF, no shuffle
        amplification), filter ≥ threshold.
 
@@ -1804,42 +1794,11 @@ def minhash_banded_pairs(
             "band", "bhash"
         ),
     )
-    hot = (
-        buckets.groupBy("band", "bhash")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > bucket_cap)
-        .select("band", "bhash")
+    keys = ["band", "bhash"]
+    cands = _self_candidates(
+        _cap_hot_buckets(buckets, keys, bucket_cap), id_col, keys
     )
-    # bcast-ok: hot-bucket list, ≤ |rows|/bucket_cap buckets by cap arithmetic
-    buckets = buckets.join(F.broadcast(hot), on=["band", "bhash"], how="left_anti")
-    a, b = buckets.alias("a"), buckets.alias("b")
-    cands = (
-        a.join(b, on=["band", "bhash"])
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .distinct()
-    )
-    sa = sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
-    sb = sh.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
-    # |A∪B| = |A| + |B| − |A∩B| on the distinct shingle sets — same
-    # integers, bit-identical division, one array op per pair (r17)
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    verified = (
-        cands.join(sa, on="id_a")
-        .join(sb, on="id_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                inter / (F.size("sh_a") + F.size("sh_b") - inter), 6
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-    return verified
+    return _verify_jaccard(cands, sh, sh, id_col, "id_a", "id_b", threshold)
 
 
 def minhash_lsh_pairs(
@@ -2205,8 +2164,8 @@ def minhash_probe(
     this is a co-located join; hot buckets above ``bucket_cap`` are
     dropped on the INDEX side AND buckets above ``new_bucket_cap``
     (default: same as ``bucket_cap``) on the BATCH side (two
-    broadcast anti joins, same cap arithmetic as
-    :func:`minhash_banded_pairs`).  The batch-side cap matters when
+    :func:`_cap_hot_buckets` broadcast anti joins on ``(band,
+    bhash)``).  The batch-side cap matters when
     the ingest itself is skewed — e.g. thousands of near-identical
     boilerplate docs in one crawl batch land in one (band, bhash)
     bucket, and without the cap each joins up to ``bucket_cap`` index
@@ -2218,55 +2177,21 @@ def minhash_probe(
     new_sh, new_buckets = minhash_index(
         batch, id_col, content_col, num_hashes, bands, shingle_n
     )
-    hot = (
-        index_buckets.groupBy("band", "bhash")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > bucket_cap)
-        .select("band", "bhash")
-    )
-    # bcast-ok: hot-bucket list, ≤ |index rows|/bucket_cap by cap arithmetic
-    cool = index_buckets.join(
-        F.broadcast(hot), on=["band", "bhash"], how="left_anti"
-    )
-    new_hot = (
-        new_buckets.groupBy("band", "bhash")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > new_bucket_cap)
-        .select("band", "bhash")
-    )
-    # bcast-ok: batch-side hot-bucket list, ≤ |batch rows|/new_bucket_cap
-    new_cool = new_buckets.join(
-        F.broadcast(new_hot), on=["band", "bhash"], how="left_anti"
-    )
+    keys = ["band", "bhash"]
     cands = (
-        new_cool.select(
-            F.col(id_col).alias("new_id"), "band", "bhash"
-        )
+        _cap_hot_buckets(new_buckets, keys, new_bucket_cap)
+        .select(F.col(id_col).alias("new_id"), *keys)
         .join(
-            cool.select(F.col(id_col).alias("old_id"), "band", "bhash"),
-            on=["band", "bhash"],
+            _cap_hot_buckets(index_buckets, keys, bucket_cap).select(
+                F.col(id_col).alias("old_id"), *keys
+            ),
+            on=keys,
         )
         .select("new_id", "old_id")
         .distinct()
     )
-    sa = new_sh.select(F.col(id_col).alias("new_id"), F.col("sh").alias("sh_a"))
-    sb = index_shingles.select(
-        F.col(id_col).alias("old_id"), F.col("sh").alias("sh_b")
-    )
-    # |A∪B| arithmetic over the distinct stored shingle sets — see
-    # minhash_banded_pairs (r17)
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    return (
-        cands.join(sa, on="new_id")
-        .join(sb, on="old_id")
-        .withColumn(
-            "jaccard",
-            F.round(
-                inter / (F.size("sh_a") + F.size("sh_b") - inter), 6
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("new_id", "old_id", "jaccard")
+    return _verify_jaccard(
+        cands, new_sh, index_shingles, id_col, "new_id", "old_id", threshold
     )
 
 
@@ -2648,34 +2573,9 @@ def ngram_jaccard_prefix(
         .select(id_col, "shingle")
         .localCheckpoint(eager=True)
     )
-    a, b = prefix.alias("a"), prefix.alias("b")
-    cands = (
-        a.join(b, on="shingle")
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .distinct()
-    )
-    sa = sh_arr.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
-    sb = sh_arr.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
-    # |A∪B| = |A| + |B| − |A∩B| exactly (both arrays are
-    # array_distinct'd sets), so the union is never materialized —
-    # one array op per pair instead of two, same integer operands,
-    # bit-identical division (r17).
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    return (
-        cands.join(sa, on="id_a")
-        .join(sb, on="id_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                inter / (F.size("sh_a") + F.size("sh_b") - inter), 6
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+    cands = _self_candidates(prefix, id_col, ["shingle"])
+    return _verify_jaccard(
+        cands, sh_arr, sh_arr, id_col, "id_a", "id_b", threshold
     )
 
 

@@ -3260,30 +3260,11 @@ def probe_media(media: DataFrame) -> DataFrame:
     validates/repairs declared metadata before any decode compute is
     spent; unrecognized or truncated headers quarantine per-row
     (ok=false), never fail the task."""
-    import pandas as pd
-
-    def probe(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            out = {
-                "media_id": [], "detected_format": [], "width": [],
-                "height": [], "sample_rate": [], "n_bytes": [], "ok": [],
-            }
-            for mid, blob in zip(pdf["media_id"], pdf["content"], strict=True):
-                raw = bytes(blob or b"")
-                out["media_id"].append(mid)
-                out["n_bytes"].append(len(raw))
-                try:
-                    info = _probe_blob(raw)
-                    out["ok"].append(True)
-                except ValueError:
-                    info = {"detected_format": None, "width": None,
-                            "height": None, "sample_rate": None}
-                    out["ok"].append(False)
-                for k in ("detected_format", "width", "height", "sample_rate"):
-                    out[k].append(info[k])
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(probe, schema=PROBED_SCHEMA)
+    return _probe_rows(
+        media,
+        PROBED_SCHEMA,
+        ("detected_format", "width", "height", "sample_rate"),
+    )
 
 
 PROBED_AV_SCHEMA = (
@@ -3306,15 +3287,27 @@ def probe_av_manifest(media: DataFrame) -> DataFrame:
     histograms) before any GPU-decode compute is scheduled.
     Same Arrow-batched ``mapInPandas`` / per-row-quarantine contract
     as :func:`probe_media`."""
+    return _probe_rows(
+        media,
+        PROBED_AV_SCHEMA,
+        ("detected_format", "sample_rate", "bitrate_kbps", "duration_ms",
+         "n_tracks"),
+    )
+
+
+def _probe_rows(
+    media: DataFrame, schema: str, cols: tuple[str, ...]
+) -> DataFrame:
+    """The per-blob loop behind :func:`probe_media` and
+    :func:`probe_av_manifest`: ``_probe_blob`` each ``content`` blob in
+    an Arrow-batched ``mapInPandas`` and emit ``(media_id, *cols,
+    n_bytes, ok)`` — a header ``_probe_blob`` rejects quarantines its
+    row (``ok`` false, ``cols`` NULL) instead of failing the task."""
     import pandas as pd
 
     def probe(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for pdf in batches:
-            out = {
-                "media_id": [], "detected_format": [], "sample_rate": [],
-                "bitrate_kbps": [], "duration_ms": [], "n_tracks": [],
-                "n_bytes": [], "ok": [],
-            }
+            out = {"media_id": [], **{k: [] for k in cols}, "n_bytes": [], "ok": []}
             for mid, blob in zip(pdf["media_id"], pdf["content"], strict=True):
                 raw = bytes(blob or b"")
                 out["media_id"].append(mid)
@@ -3323,16 +3316,13 @@ def probe_av_manifest(media: DataFrame) -> DataFrame:
                     info = _probe_blob(raw)
                     out["ok"].append(True)
                 except ValueError:
-                    info = {"detected_format": None, "sample_rate": None,
-                            "bitrate_kbps": None, "duration_ms": None,
-                            "n_tracks": None}
+                    info = {}
                     out["ok"].append(False)
-                for k in ("detected_format", "sample_rate", "bitrate_kbps",
-                          "duration_ms", "n_tracks"):
+                for k in cols:
                     out[k].append(info.get(k))
             yield pd.DataFrame(out)
 
-    return media.mapInPandas(probe, schema=PROBED_AV_SCHEMA)
+    return media.mapInPandas(probe, schema=schema)
 
 
 RESIZED_SCHEMA = (

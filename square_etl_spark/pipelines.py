@@ -617,12 +617,3 @@ def attrition_funnel(docs: DataFrame) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum("n_chars").cast("bigint").alias("total_chars"),
     )
-
-
-#: pipeline name → (source adapter, pipeline fn) for tests/discovery.
-PIPELINES = {
-    "pos_payments": (payments_source, payments_pipeline),
-    "pos_inventory": (inventory_source, inventory_pipeline),
-    "pos_categories": (categories_source, categories_pipeline),
-    "pos_locations": (locations_source, locations_pipeline),
-}

@@ -8948,7 +8948,7 @@ def _semantic_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load_table(spark, sf_dir, "embeddings")
     return semantic_dedup(
-        e, "vec_id", "embedding", k=4, iters=2, threshold=0.35, dim=64
+        e, "vec_id", "embedding", k=4, iters=2, threshold=0.35
     )
 
 
@@ -9032,8 +9032,7 @@ def _semantic_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("vec_id") >= cuts[i]) & (F.col("vec_id") < cuts[i + 1])
         )
         labeled, state = incremental_semantic_dedup(
-            state, batch, stored, "vec_id", "embedding",
-            threshold=0.35, dim=64,
+            state, batch, stored, "vec_id", "embedding", threshold=0.35
         )
         state = state.localCheckpoint(eager=True)
         out = labeled if out is None else out.unionByName(labeled)

@@ -176,7 +176,7 @@ def test_semantic_dedup_prunes_within_cluster_first_wins(spark):
     out = {
         r["vec_id"]: (r["cluster"], r["kept"])
         for r in semantic_dedup(
-            emb, "vec_id", "embedding", k=2, iters=2, threshold=0.9, dim=4
+            emb, "vec_id", "embedding", k=2, iters=2, threshold=0.9
         ).collect()
     }
     assert {i: kept for i, (_, kept) in out.items()} == {
@@ -199,7 +199,7 @@ def test_semantic_dedup_pair_stage_is_cluster_equi_join(spark):
     )
     plan = (
         semantic_dedup(
-            emb, "vec_id", "embedding", k=2, iters=1, threshold=0.9, dim=2
+            emb, "vec_id", "embedding", k=2, iters=1, threshold=0.9
         )
         ._jdf.queryExecution()
         .executedPlan()
@@ -228,14 +228,14 @@ def test_semantic_dedup_sampled_fit_arrow_matches_exact(spark):
         r.vec_id: r.kept
         for r in semantic_dedup(
             emb, "vec_id", "embedding", k=2, iters=2,
-            threshold=0.95, dim=4,
+            threshold=0.95,
         ).collect()
     }
     sampled = {
         r.vec_id: r.kept
         for r in semantic_dedup(
             emb, "vec_id", "embedding", k=2, iters=2,
-            threshold=0.95, dim=4, fit_sample_mod=3,
+            threshold=0.95, fit_sample_mod=3,
         ).collect()
     }
     assert sampled == exact
@@ -276,7 +276,7 @@ def test_incremental_semantic_dedup_fold_equals_one_shot(spark, sf_dir):
     one_shot = {
         (r["vec_id"], r["cluster"], r["kept"])
         for r in semantic_dedup(
-            e, "vec_id", "embedding", k=4, iters=2, threshold=0.35, dim=64
+            e, "vec_id", "embedding", k=4, iters=2, threshold=0.35
         ).collect()
     }
     # fold three ascending-id batches against the stored centroids
@@ -284,7 +284,7 @@ def test_incremental_semantic_dedup_fold_equals_one_shot(spark, sf_dir):
     for lo, hi in ((0, 50), (50, 100), (100, 150)):
         batch = e.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi))
         labeled, state = incremental_semantic_dedup(
-            state, batch, cent, "vec_id", "embedding", threshold=0.35, dim=64
+            state, batch, cent, "vec_id", "embedding", threshold=0.35
         )
         state = state.localCheckpoint(eager=True)
         got |= {(r["vec_id"], r["cluster"], r["kept"]) for r in labeled.collect()}
@@ -294,7 +294,7 @@ def test_incremental_semantic_dedup_fold_equals_one_shot(spark, sf_dir):
     stored_shot = {
         (r["vec_id"], r["cluster"], r["kept"])
         for r in semantic_dedup(
-            e, "vec_id", "embedding", threshold=0.35, dim=64, centroids=cent
+            e, "vec_id", "embedding", threshold=0.35, centroids=cent
         ).collect()
     }
     assert stored_shot == one_shot

@@ -284,22 +284,32 @@ def test_oov_vocab_rank_is_take_ordered_not_global_window(spark, sf_dir):
 
 
 def test_embedding_lsh_bucket_cap_is_aggregate_anti_join_not_window(spark, sf_dir):
-    """r11 verdict item 1: the embedding-LSH family's hot-bucket cap
-    must use the map-side-combinable shape (groupBy-count → broadcast
-    anti join, the minhash_lsh_pairs precedent) — a count OVER
-    (PARTITION BY tbl, bucket) would funnel every row of the hot
+    """r11 verdict item 1: the hot-bucket cap of the embedding-LSH and
+    MinHash families must use the map-side-combinable shape
+    (groupBy-count → broadcast anti join, dedup._cap_hot_buckets) — a
+    count OVER (PARTITION BY keys) would funnel every row of the hot
     bucket through ONE reducer, becoming the bottleneck it guards
     against.  Pin: zero Window nodes in the cap path, the anti join
     present, and partial/final HashAggregate pairs for the count."""
     from square_etl_spark.operators.dedup import (
         embedding_cosine_pairs_bucketed,
+        minhash_banded_pairs,
+        minhash_index,
+        minhash_probe,
         semantic_contamination_pairs,
     )
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    d = load_table(spark, sf_dir, "documents")
     from pyspark.sql import functions as F
 
+    old_sh, old_buckets = minhash_index(d.filter(F.col("doc_id") % 2 == 0))
     plans = [
+        _plan(minhash_banded_pairs(d, bucket_cap=10)),
+        _plan(minhash_probe(
+            old_sh, old_buckets, d.filter(F.col("doc_id") % 2 == 1),
+            bucket_cap=10,
+        )),
         _plan(embedding_cosine_pairs_bucketed(
             e, dim=64, threshold=0.35, bits=4, n_tables=8, bucket_cap=100
         )),
